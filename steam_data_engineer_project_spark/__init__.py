@@ -22,7 +22,7 @@ Layout
 - ``quality``    dbt-style data-quality checks (unique/not-null/range/FK).
 - ``multimodal`` Binary-column plumbing for image/audio payloads (decode
                  stubbed; Spark-side schema/batching real).
-- ``monitoring`` df.observe() metrics + streaming progress listener.
+- ``monitoring`` df.observe() metrics.
 """
 
 __version__ = "0.1.0"

@@ -94,9 +94,11 @@ from pyspark.sql import functions as F
 
 from .fsutil import exclusive_flock
 
-#: per-(store root, table) parquet schema, learned at first read — artifact
-#: schemas are fixed by their writers for the life of a store, so later
+#: per-(store root, table) parquet schema, learned at first read so later
 #: reads skip the eager footer-inference driver cost (see CorpusStore.read).
+#: A manifest change through this process (create, compact, retire, swap,
+#: rebuild) drops the store's entries (CorpusStore._forget_schemas). Keeping
+#: one schema across the slices of a store stays the writer's contract.
 _SCHEMA_CACHE: dict[tuple[str, str], object] = {}
 
 #: manifest file name — the store's single source of truth for table
@@ -110,6 +112,23 @@ COMMITS = "_commits"
 #: writer-lock file: every manifest-mutating operation holds an exclusive
 #: flock on it (see :meth:`CorpusStore._locked`).
 LOCKFILE = "_lock"
+
+#: Bloom hash-family salt every bitset in the store is built with
+BLOOM_SALT = "bf"
+#: store tables the bloom lifecycle reads and writes, and the shingle column
+BLOOM_TABLE = "bloom"
+SHINGLE_TABLE = "shingles"
+SHINGLE_COL = "shingle"
+
+#: :meth:`CorpusStore.maybe_retrain` policy: the drift ratio past which the
+#: codebook is retrained (the measured gate from tools/codebook_drift.py,
+#: CODEBOOK_DRIFT.json) and the Lloyd iterations of the retrain
+RETRAIN_DRIFT_RATIO = 1.5
+RETRAIN_ITERS = 10
+#: the codebook's inverted-file table (swapped with the codebook) and its
+#: id column
+SEM_ASSIGNED_TABLE = "sem_assigned"
+SEM_ID_COL = "vec_id"
 
 
 def _atomic_write(path: str, content: str) -> None:
@@ -473,14 +492,15 @@ class CorpusStore:
             os.path.join(self.root, MANIFEST),
             json.dumps(self._m, indent=1) + "\n",
         )
+        self._forget_schemas()
+
+    def _forget_schemas(self) -> None:
+        for key in [k for k in _SCHEMA_CACHE if k[0] == self.root]:
+            del _SCHEMA_CACHE[key]
 
     def _tdir(self, name: str, gen: int | None = None) -> str:
         g = self._m["tables"][name] if gen is None else gen
         return os.path.join(self.root, f"{name}__g{g}")
-
-    @property
-    def table_names(self) -> tuple[str, ...]:
-        return tuple(self._m["tables"])
 
     def bloom_params(self) -> dict | None:
         """The (m_bits, n_hashes, salt) the CURRENT bloom artifact was
@@ -489,13 +509,11 @@ class CorpusStore:
         return self._m.get("bloom")
 
     @_with_writer_lock
-    def set_bloom_params(
-        self, m_bits: int, n_hashes: int, salt: str = "bf"
-    ) -> None:
+    def set_bloom_params(self, m_bits: int, n_hashes: int) -> None:
         self._m["bloom"] = {
             "m_bits": m_bits,
             "n_hashes": n_hashes,
-            "salt": salt,
+            "salt": BLOOM_SALT,
         }
         self._flush()
 
@@ -620,11 +638,11 @@ class CorpusStore:
             raise ValueError(
                 f"store table {name} has no committed slices at {tdir}"
             )
-        # an artifact table's schema is fixed by its writer for the life of
-        # the store, so cache it after the first read and pass it explicitly
-        # thereafter: parquet schema inference reads file footers EAGERLY at
-        # DataFrame creation, a per-invocation driver cost the serve path
-        # pays once per table (guide §7.3 driver-overhead class). The slice
+        # cache the table's schema after the first read and pass it
+        # explicitly until the next write: parquet schema inference reads
+        # file footers EAGERLY at DataFrame creation, a per-invocation
+        # driver cost the serve path pays once per table (guide §7.3
+        # driver-overhead class). The slice
         # LISTING above stays fresh on every read — only the schema is
         # reused (it includes the batch_id partition column, so partition
         # value parsing is unchanged).
@@ -795,12 +813,7 @@ class CorpusStore:
         return spark.read.parquet(self._cb_dir(v))
 
     @_with_writer_lock
-    def swap_codebook(
-        self,
-        state_df: DataFrame,
-        reassigned: DataFrame,
-        assigned_table: str = "sem_assigned",
-    ) -> int:
+    def swap_codebook(self, state_df: DataFrame, reassigned: DataFrame) -> int:
         """Retrain-and-swap: write the new codebook version AND the
         inverted file reassigned under it (one consolidated slice in a new
         generation), then flip both in ONE manifest replace — a reader
@@ -819,50 +832,37 @@ class CorpusStore:
         _fsync_tree(self._cb_dir(new_v))
         hi = max(retained)
         out = os.path.join(
-            self._tdir(assigned_table, new_gen), f"batch_id={hi}"
+            self._tdir(SEM_ASSIGNED_TABLE, new_gen), f"batch_id={hi}"
         )
         reassigned.write.mode("overwrite").parquet(out)
         _fsync_tree(out)
-        old_gen = self._m["tables"][assigned_table]
+        old_gen = self._m["tables"][SEM_ASSIGNED_TABLE]
         self._m["codebook_version"] = new_v
-        self._m["tables"][assigned_table] = new_gen
+        self._m["tables"][SEM_ASSIGNED_TABLE] = new_gen
         self._m["next_gen"] = new_gen + 1
         # the reassigned inverted file covers EVERY retained batch — one
         # consolidated slice; record its range so retire() can't bisect it
-        self._m.setdefault("segments", {})[assigned_table] = {
-            str(hi): min(self._slice_lo(assigned_table, b) for b in retained)
+        self._m.setdefault("segments", {})[SEM_ASSIGNED_TABLE] = {
+            str(hi): min(self._slice_lo(SEM_ASSIGNED_TABLE, b) for b in retained)
         }
         self._flush()
-        self._discard(self._tdir(assigned_table, old_gen))
+        self._discard(self._tdir(SEM_ASSIGNED_TABLE, old_gen))
         return new_v
 
-    def maybe_retrain(
-        self,
-        spark: SparkSession,
-        incoming_qdf: DataFrame,
-        *,
-        threshold: float = 1.5,
-        assigned_table: str = "sem_assigned",
-        id_col: str = "vec_id",
-        k: int | None = None,
-        n_iter: int = 10,
-    ) -> dict:
+    def maybe_retrain(self, spark: SparkSession, incoming_qdf: DataFrame) -> dict:
         """The drift-gated retraining POLICY — the admission-path wiring
         of the two measured pieces: probe the incoming batch with
         :func:`codebook_drift_stat` (label-free, computed from the stored
-        inverted file — no corpus read), and only past ``threshold``
-        retrain k-means FROM THE STORED vectors and atomically
-        :meth:`swap_codebook`. The default threshold is the measured gate
-        from tools/codebook_drift.py (CODEBOOK_DRIFT.json): by ratio ~1.5
-        planted-twin recall has already slipped, and the swap restores it
-        at every drift notch. Call right after :meth:`admit` of the
-        batch's assignments, so a triggered retrain covers the batch that
-        tripped the gate.
+        inverted file — no corpus read), and only past
+        ``RETRAIN_DRIFT_RATIO`` retrain k-means FROM THE STORED vectors and
+        atomically :meth:`swap_codebook`. By ratio ~1.5 planted-twin recall
+        has already slipped, and the swap restores it at every drift
+        notch. Call right after :meth:`admit` of the batch's assignments,
+        so a triggered retrain covers the batch that tripped the gate.
 
-        ``k`` sizes the retrained codebook; default doubles the current
-        one — the store now holds the old modes AND the drifted ones (the
-        drift tool's 2× rule). Pass corpus-proportional k (N/500-class)
-        when admissions have grown the store materially.
+        The retrained codebook doubles the current one — the store now
+        holds the old modes AND the drifted ones (the drift tool's 2×
+        rule).
 
         Cost shape: the probe is one Arrow assignment pass over the batch
         plus one over the stored qv rows (both already KB-to-artifact
@@ -880,28 +880,28 @@ class CorpusStore:
         )
 
         state = semantic_state_from_table(self.read_codebook(spark))
-        stored = self.read(spark, assigned_table)
+        stored = self.read(spark, SEM_ASSIGNED_TABLE)
         ratio = float(
             codebook_drift_stat(
-                incoming_qdf.select(id_col, "qv"),
-                stored.select(id_col, "qv"),
+                incoming_qdf.select(SEM_ID_COL, "qv"),
+                stored.select(SEM_ID_COL, "qv"),
                 state,
             ).collect()[0]["drift_ratio"]
         )
-        if ratio <= threshold:
+        if ratio <= RETRAIN_DRIFT_RATIO:
             return {
                 "drift_ratio": ratio,
                 "swapped": False,
                 "codebook_version": self._m["codebook_version"],
             }
-        all_q = stored.select(id_col, "qv")
+        all_q = stored.select(SEM_ID_COL, "qv")
         st2: list = []
         kmeans_int8(
             None,
             "embedding",  # unused: qdf supplies pre-quantized vectors
-            id_col,
-            k=k if k is not None else 2 * len(state),
-            n_iter=n_iter,
+            SEM_ID_COL,
+            k=2 * len(state),
+            n_iter=RETRAIN_ITERS,
             qdf=all_q,
             state_out=st2,
         )
@@ -911,9 +911,8 @@ class CorpusStore:
         new_v = self.swap_codebook(
             semantic_state_table(spark, st2),
             assign_with_state(
-                None, "embedding", id_col, retrained, qdf=all_q
-            ).select(id_col, "qv", "cluster_id"),
-            assigned_table,
+                None, "embedding", SEM_ID_COL, retrained, qdf=all_q
+            ).select(SEM_ID_COL, "qv", "cluster_id"),
         )
         return {
             "drift_ratio": ratio,
@@ -1050,9 +1049,7 @@ class CorpusStore:
     # ------------------------------------------------------------------ #
     # bloom aging: fill measurement + rebuild from the stored shingles
     # ------------------------------------------------------------------ #
-    def bloom_fill_ratio(
-        self, spark: SparkSession, bloom_table: str = "bloom"
-    ) -> float:
+    def bloom_fill_ratio(self, spark: SparkSession) -> float:
         """Fraction of set bits in the MERGED stored filter (per-word
         bit-or across batch slices, exactly what probes see). The filter's
         false-positive rate is ≈ fill^h, so this is the aging gauge: at
@@ -1062,7 +1059,7 @@ class CorpusStore:
         if not params:
             raise ValueError("store has no bloom params recorded")
         merged = (
-            self.read(spark, bloom_table)
+            self.read(spark, BLOOM_TABLE)
             .groupBy("word_idx")
             .agg(F.bit_or("bits").alias("bits"))
         )
@@ -1077,15 +1074,10 @@ class CorpusStore:
         spark: SparkSession,
         m_bits: int,
         n_hashes: int,
-        *,
-        shingle_table_name: str = "shingles",
-        bloom_table: str = "bloom",
-        value_col: str = "shingle",
-        salt: str = "bf",
     ) -> None:
         """Re-derive the filter at a new size from the STORED shingle
         table — the corpus itself is never read — and swap it in as one
-        consolidated slice with the new (m, h, salt) recorded in the same
+        consolidated slice with the new (m, h) recorded in the same
         manifest flip, so a reader can never probe the new bits with the
         old modulus. Run when :meth:`bloom_fill_ratio` crosses the
         caller's threshold (0.5 is the classic knee; see
@@ -1103,31 +1095,31 @@ class CorpusStore:
             # filter — the merge path can only OR bits in, rebuild is the
             # one operation that takes them out (tested: a retired-only
             # key stops probing positive post-rebuild, modulo FP)
-            self.read(spark, shingle_table_name).select(value_col),
-            value_col,
+            self.read(spark, SHINGLE_TABLE).select(SHINGLE_COL),
+            SHINGLE_COL,
             m_bits=m_bits,
             n_hashes=n_hashes,
-            salt=salt,
+            salt=BLOOM_SALT,
         ).coalesce(1)
-        out = os.path.join(self._tdir(bloom_table, gen), f"batch_id={hi}")
+        out = os.path.join(self._tdir(BLOOM_TABLE, gen), f"batch_id={hi}")
         fresh.write.mode("overwrite").parquet(out)
         _fsync_tree(out)
-        old_gen = self._m["tables"][bloom_table]
-        self._m["tables"][bloom_table] = gen
+        old_gen = self._m["tables"][BLOOM_TABLE]
+        self._m["tables"][BLOOM_TABLE] = gen
         self._m["next_gen"] = gen + 1
         self._m["bloom"] = {
             "m_bits": m_bits,
             "n_hashes": n_hashes,
-            "salt": salt,
+            "salt": BLOOM_SALT,
         }
         # one consolidated bitset covering every retained batch: record
         # the range so retire() fails loud instead of leaving retired
         # keys OR-ed into the filter (an FP-rate lie, not just stale rows)
-        self._m.setdefault("segments", {})[bloom_table] = {
-            str(hi): min(self._slice_lo(bloom_table, b) for b in retained)
+        self._m.setdefault("segments", {})[BLOOM_TABLE] = {
+            str(hi): min(self._slice_lo(BLOOM_TABLE, b) for b in retained)
         }
         self._flush()
-        self._discard(self._tdir(bloom_table, old_gen))
+        self._discard(self._tdir(BLOOM_TABLE, old_gen))
 
 
 def bloom_required_bits(

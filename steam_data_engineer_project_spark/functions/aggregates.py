@@ -10,11 +10,19 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+#: decimal scale (places kept) and precision of ``dsum``'s exact sum
+DSUM_SCALE = 2
+DSUM_PREC = 18
+#: ``group_concat_distinct`` separator (MySQL's default)
+GROUP_CONCAT_SEP = ","
 
-def dsum(col, scale: int = 2, prec: int = 18):
-    """Exact decimal sum -> double, rounded to `scale` (order-independent)."""
+
+def dsum(col):
+    """Exact decimal sum -> double, rounded to ``DSUM_SCALE`` places
+    (order-independent)."""
     return F.round(
-        F.sum(col.cast(f"decimal({prec},{scale})")).cast("double"), scale
+        F.sum(col.cast(f"decimal({DSUM_PREC},{DSUM_SCALE})")).cast("double"),
+        DSUM_SCALE,
     )
 
 
@@ -39,8 +47,8 @@ def davg(col):
     )
 
 
-def group_concat_distinct(col, sep: str = ","):
+def group_concat_distinct(col):
     """MySQL GROUP_CONCAT(DISTINCT x) with deterministic ordering:
     sort_array canonicalizes what MySQL leaves unspecified
     (reference models/marts/core/dim_games.sql:9-12; SURVEY §4)."""
-    return F.concat_ws(sep, F.sort_array(F.collect_set(col)))
+    return F.concat_ws(GROUP_CONCAT_SEP, F.sort_array(F.collect_set(col)))

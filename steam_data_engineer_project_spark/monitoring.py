@@ -1,17 +1,16 @@
-"""Observability: named metrics on DataFrames and streaming progress
+"""Observability: named metrics on DataFrames
 (mirrors the reference's Prometheus counters/gauges —
 monitoring/metrics.py:18-80: games_processed, kafka_messages_total,
 queue_size, pipeline_status — minus the pushgateway transport).
 
 ``observed`` rides Spark's df.observe(): metrics are computed inside the
 job that materializes the DataFrame — zero extra passes, exact, and
-collected on the driver via a QueryExecution/StreamingQuery listener or
-``collect_metrics`` after an action.
+read on the driver through the Observation after an action.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -25,44 +24,3 @@ def observed(
     exprs = metrics or {"rows": F.count(F.lit(1))}
     out = df.observe(obs, *[c.alias(n) for n, c in exprs.items()])
     return out, obs
-
-
-class StreamingMetricsListener:
-    """Collects per-batch progress from Structured Streaming queries —
-    rows/sec, batch sizes, watermarks — the streaming analog of the
-    reference's consumer counters (kafka_messages_total). Register with
-    ``spark.streams.addListener(listener.as_listener(spark))``."""
-
-    def __init__(self) -> None:
-        self.progress: list[dict] = []
-
-    def record(self, event) -> None:
-        p = event.progress
-        self.progress.append(
-            {
-                "id": str(p.id),
-                "batchId": p.batchId,
-                "numInputRows": p.numInputRows,
-                "inputRowsPerSecond": p.inputRowsPerSecond,
-            }
-        )
-
-    def as_listener(self, spark: SparkSession):
-        from pyspark.sql.streaming import StreamingQueryListener
-
-        outer = self
-
-        class _L(StreamingQueryListener):
-            def onQueryStarted(self, event):  # noqa: N802
-                pass
-
-            def onQueryProgress(self, event):  # noqa: N802
-                outer.record(event)
-
-            def onQueryIdle(self, event):  # noqa: N802
-                pass
-
-            def onQueryTerminated(self, event):  # noqa: N802
-                pass
-
-        return _L()

@@ -11,8 +11,9 @@ audio libraries, so ``decode_features`` does real byte inspection (magic
 sniff, buffer length) but derives "width/height/frames" arithmetically from
 the payload size instead of decoding pixels. The Spark-side plumbing —
 binary schema, Arrow batch shape, output contract, partition parallelism —
-is the real thing; swap ``_fake_decode_one`` for PIL/librosa per format to
-make it a production decoder (see the marked hook below).
+is the real thing; swap the closure's ``decode_one`` for PIL/librosa per
+format to make it a production decoder (see the comment in
+``decode_features``).
 """
 
 from __future__ import annotations
@@ -60,34 +61,6 @@ def sniff_format(bin_col: Column) -> Column:
         .when(head.startswith("52494646"), F.lit("wav"))
         .otherwise(F.lit("unknown"))
     )
-
-
-def header_length(format_col: Column) -> Column:
-    return (
-        F.when(format_col == "png", F.lit(8))
-        .when(format_col == "jpeg", F.lit(4))
-        .when(format_col == "wav", F.lit(4))
-        .otherwise(F.lit(0))
-    )
-
-
-def _fake_decode_one(payload: bytes) -> tuple[str, int, int, int, int]:
-    """Per-payload decode: REAL byte inspection (magic sniff + buffer
-    length), FAKE media parsing (dimensions derived from size).
-
-    >>> PRODUCTION HOOK: replace the arithmetic below with
-    >>> PIL.Image.open(io.BytesIO(payload)) / librosa.load(...) per format.
-    """
-    fmt, hdr = "unknown", 0
-    for name, magic in MAGIC.items():
-        if payload[: len(magic)] == magic:
-            fmt, hdr = name, len(magic)
-            break
-    body = len(payload) - hdr
-    width = (body * 7) % 256
-    height = (body * 13) % 256
-    n_frames = body // 4 if fmt == "wav" else 1
-    return fmt, width, height, n_frames, body
 
 
 def decode_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -142,11 +115,11 @@ _RESIZE_SCHEMA = (
 )
 
 _FRAME_SCHEMA = "doc_id long, frame_idx long, frame binary"
+#: width of one :func:`sample_frames` frame window in bytes
+FRAME_BYTES = 4
 
 
-def resize_images(
-    df: DataFrame, target_w: int, target_h: int, id_col: str = "doc_id"
-) -> DataFrame:
+def resize_images(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
     """Resize, IMAGE payloads only — the JVM-side sniff gates which rows
     cross into Python (wav/unknown payloads never reach a worker, the same
     routing a mixed 100 TB media corpus needs). 1→1 rows; output carries the
@@ -159,7 +132,7 @@ def resize_images(
     >>> closure, imports inside the function, config captured as data.
     """
     gated = df.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         "payload",
         sniff_format(F.col("payload")).alias("format"),
     ).filter(F.col("format").isin("png", "jpeg"))
@@ -195,20 +168,15 @@ def resize_images(
     return gated.mapInPandas(_resize, schema=_RESIZE_SCHEMA)
 
 
-def sample_frames(
-    df: DataFrame,
-    every_n: int,
-    frame_bytes: int = 4,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def sample_frames(df: DataFrame, every_n: int) -> DataFrame:
     """Frame sampling, WAV payloads only (the audio/video stand-in): fan
-    each payload out to every ``every_n``-th fixed-width frame window — the
-    1→N ``mapInPandas`` shape a video frame-sampler has (one input row
-    yields many frame rows; Arrow batches amortize the fan-out). The JVM
-    gate keeps image rows out of the Python stage entirely.
+    each payload out to every ``every_n``-th ``FRAME_BYTES``-wide frame
+    window — the 1→N ``mapInPandas`` shape a video frame-sampler has (one
+    input row yields many frame rows; Arrow batches amortize the fan-out).
+    The JVM gate keeps image rows out of the Python stage entirely.
     """
     gated = df.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         "payload",
         sniff_format(F.col("payload")).alias("format"),
     ).filter(F.col("format") == "wav")
@@ -222,11 +190,11 @@ def sample_frames(
             ids, idxs, frames = [], [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 body = bytes(payload)[hdr_len:]
-                n_frames = len(body) // frame_bytes
+                n_frames = len(body) // FRAME_BYTES
                 for j in range(0, n_frames, every_n):
                     ids.append(doc_id)
                     idxs.append(j)
-                    frames.append(body[j * frame_bytes : (j + 1) * frame_bytes])
+                    frames.append(body[j * FRAME_BYTES : (j + 1) * FRAME_BYTES])
             yield pd.DataFrame(
                 {"doc_id": ids, "frame_idx": idxs, "frame": frames}
             )

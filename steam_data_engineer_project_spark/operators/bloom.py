@@ -46,6 +46,13 @@ from pyspark.sql import functions as F
 _WORD_BITS = 32
 
 
+def _check_n_hashes(n_hashes: int) -> None:
+    # with no hash positions the all-positions-set test is vacuously true:
+    # every probe would count as a hit
+    if n_hashes < 1:
+        raise ValueError(f"n_hashes must be at least 1, got {n_hashes}")
+
+
 def _positions(col, m_bits: int, n_hashes: int, salt: str):
     """The h Bloom bit positions of ``col`` as an array column: 52-bit md5
     of '{salt}{j}:value', reduced mod m_bits. Non-negative by construction
@@ -94,6 +101,7 @@ def bloom_bitset(
     once instead of once per shard (round 13, guide §2.4)."""
     if m_bits % _WORD_BITS:
         raise ValueError(f"m_bits must be a multiple of {_WORD_BITS}")
+    _check_n_hashes(n_hashes)
     g = [group_col] if group_col else []
     pos = (
         df.select(*g, F.col(value_col).alias("__v"))
@@ -153,6 +161,7 @@ def bloom_probe_count(
     pass it when the input is already a distinct-pairs table (e.g.
     :func:`operators.dedup.shingle_table` output) and the probe then
     runs shuffle-free up to the final count."""
+    _check_n_hashes(n_hashes)
     probes = df.select(F.col(id_col), F.col(value_col).alias("__v")).where(
         F.col("__v").isNotNull()
     )

@@ -945,20 +945,17 @@ def ivf_topk_trained(
     query_id: int,
     *,
     k: int = 10,
-    n_centroids: int = 16,
-    n_iter: int = 3,
     n_probe: int = 4,
     codebook: DataFrame | None = None,
 ) -> DataFrame:
     """IVF ANN top-k over a TRAINED codebook, all-integer and oracle-exact:
 
     1. train the codebook (:func:`train_ivf_codebook` — integer k-means,
-       micro-unit centroids), or SERVE a stored one: pass ``codebook``
-       (the (centroid_id, cv) table train_ivf_codebook emits, e.g. read
-       back from parquet) and no training runs at all — the production
-       shape, where a codebook is trained once, persisted, and every
-       query after that is pure scan + broadcast joins (``n_centroids`` /
-       ``n_iter`` are ignored on this path);
+       micro-unit centroids, at its default size), or SERVE a stored one:
+       pass ``codebook`` (the (centroid_id, cv) table train_ivf_codebook
+       emits, e.g. read back from parquet) and no training runs at all —
+       the production shape, where a codebook is trained once, persisted,
+       and every query after that is pure scan + broadcast joins;
     2. assign every int8-quantized vector to its nearest centroid by exact
        integer cosine (one vectorized Arrow pass over the collected
        k-row codebook — :func:`_ivf_assign_arrow`, bit-identical to the
@@ -978,9 +975,7 @@ def ivf_topk_trained(
         "nx", _int_norm_sq("qv")
     )
     if codebook is None:
-        codebook = train_ivf_codebook(
-            df, vec_col, id_col, n_centroids=n_centroids, n_iter=n_iter
-        )
+        codebook = train_ivf_codebook(df, vec_col, id_col)
     codebook = codebook.withColumn("nc", _int_norm_sq("cv"))
     # bounded k-row collect — the codebook-LOAD class of driver traffic
     # (same as kmeans' seed collect); the assignment then runs as one
@@ -1029,7 +1024,6 @@ def assign_with_state(
     state: list,
     *,
     qdf: DataFrame | None = None,
-    broadcast_state: bool = False,
 ) -> DataFrame:
     """Assign vectors to a FROZEN centroid state — the admission step of
     the stored-codebook lifecycle: a batch is quantized and assigned in
@@ -1041,7 +1035,7 @@ def assign_with_state(
         if df is None:
             raise ValueError("df may be None only when qdf is supplied")
         qdf = quantized_vectors(df, vec_col, id_col)
-    return _assign_to_centroids(qdf, id_col, state, broadcast_state=broadcast_state)
+    return _assign_to_centroids(qdf, id_col, state)
 
 
 def semantic_state_table(spark, state: list) -> DataFrame:

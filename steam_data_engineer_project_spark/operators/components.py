@@ -26,6 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: round cap of :func:`connected_components_star` (rounds grow with the log
+#: of the largest component, so it is never reached in practice)
+STAR_MAX_ITER = 50
+
 
 def _partition_local_contract(e: DataFrame) -> DataFrame:
     """EXACT partition-local pre-contraction: each partition's edge set is
@@ -233,7 +237,6 @@ def connected_components_star(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 50,
 ) -> DataFrame:
     """(node, component) via alternating large-star/small-star contraction —
     LOGARITHMIC rounds in the largest component size, vs O(diameter) for
@@ -265,7 +268,7 @@ def connected_components_star(
         .localCheckpoint()
     )
     prev_count = -1
-    for _ in range(max_iter):
+    for _ in range(STAR_MAX_ITER):
         sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         e_new = _small_star(_large_star(sym)).localCheckpoint()
         n_new = e_new.count()
@@ -285,11 +288,8 @@ def connected_components_star(
     )
 
 
-def canonical_per_component(
-    components: DataFrame, node_col: str = "node", comp_col: str = "component"
-) -> DataFrame:
-    """One row per component: its minimum node id as the canonical
-    representative (matches the component id by construction)."""
-    return components.groupBy(comp_col).agg(
-        F.min(node_col).alias("canonical")
-    )
+def canonical_per_component(components: DataFrame) -> DataFrame:
+    """One row per component of a (node, component) labeling: its minimum
+    node id as the canonical representative (matches the component id by
+    construction)."""
+    return components.groupBy("component").agg(F.min("node").alias("canonical"))

@@ -25,6 +25,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: line separator of the line-level operators
+LINE_DELIM = "\n"
+#: ``minhash_lsh_candidates`` keeps pairs whose estimated Jaccard is at least
+#: this (0.0: every band collision)
+MIN_JACCARD_EST = 0.0
+#: SimHash fingerprint width: one signed long
+SIMHASH_BITS = 64
+
 
 def _normalized(col):
     """Canonical text form used for content hashing: lowercase, collapsed
@@ -215,15 +223,6 @@ def ngram_jaccard_pairs(
     return out
 
 
-def _md5_long(col, salt: int):
-    """Deterministic 60-bit hash from md5(salt || value) — portable across
-    engines (hex prefix -> bigint) and stable across Spark versions, unlike
-    ``hash()``/``xxhash64`` whose seeds are engine-specific."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"s{salt}:"), col)), 1, 15), 16, 10
-    ).cast("long")
-
-
 def _md5_hash_pair(col):
     """(h1, h2) from ONE md5 of the value: h1 = top 48 bits, h2 = the next
     32 bits forced odd. The ``h1 + i*h2`` family (classic double hashing)
@@ -281,7 +280,6 @@ def minhash_lsh_candidates(
     n: int = 3,
     num_hashes: int = 32,
     bands: int = 8,
-    min_jaccard_est: float = 0.0,
     max_doc_freq: int | None = None,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash LSH.
@@ -339,14 +337,12 @@ def minhash_lsh_candidates(
             f" m -> m)) / {num_hashes}, 6)"
         ),
     )
-    return est.filter(F.col("est_jaccard") >= min_jaccard_est).select(
+    return est.filter(F.col("est_jaccard") >= MIN_JACCARD_EST).select(
         "id_a", "id_b", "est_jaccard"
     )
 
 
-def simhash_fingerprints(
-    df: DataFrame, text_col: str, id_col: str, *, bits: int = 64
-) -> DataFrame:
+def simhash_fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """64-bit SimHash per document from per-token md5 bits.
 
     For each distinct token, md5 gives 64 bits; each bit contributes +1/-1 to
@@ -373,7 +369,6 @@ def simhash_fingerprints(
     per document at 65,535; beyond that a lane would carry into its neighbor,
     so callers with pathological documents should truncate first.
     """
-    assert bits <= 64
     tokens = (
         df.select(
             F.col(id_col),
@@ -389,12 +384,12 @@ def simhash_fingerprints(
     # selects so md5 is evaluated once per token and the driver builds the
     # plan in a handful of parser calls instead of hundreds of per-Column
     # roundtrips — the plan itself is identical either way.
-    ndig = (bits + 3) // 4
+    ndig = SIMHASH_BITS // 4
     packed_sql = [
         " + ".join(
             f"(CASE WHEN (d{g} & {8 >> k}) > 0 THEN CAST({1 << (16 * k)} AS BIGINT)"
             " ELSE CAST(0 AS BIGINT) END)"
-            for k in range(min(4, bits - 4 * g))
+            for k in range(4)
         )
         for g in range(ndig)
     ]
@@ -423,10 +418,10 @@ def simhash_fingerprints(
         )
     )
     decode_terms = []
-    for i in range(bits):
+    for i in range(SIMHASH_BITS):
         g, k = i // 4, i % 4
-        v = 1 << (bits - 1 - i)
-        if bits == 64 and i == 0:
+        v = 1 << (SIMHASH_BITS - 1 - i)
+        if i == 0:
             v = -(1 << 63)  # sign bit: emit the signed long literal
         decode_terms.append(
             f"(CASE WHEN ((shiftrightunsigned(p{g}, {16 * k}) & 65535) * 2)"
@@ -445,7 +440,6 @@ def corpus_line_dedup(
     text_col: str,
     id_col: str,
     max_freq: int = 1,
-    line_delim: str = "\n",
 ) -> DataFrame:
     """C4-style corpus-level line dedup: drop every line whose corpus-wide
     frequency exceeds ``max_freq`` (boilerplate — headers, footers, cookie
@@ -475,7 +469,7 @@ def corpus_line_dedup(
         F.posexplode(
             F.filter(
                 F.transform(
-                    F.split(F.col(text_col), re.escape(line_delim)),
+                    F.split(F.col(text_col), re.escape(LINE_DELIM)),
                     lambda x: F.trim(x),
                 ),
                 lambda x: x != "",
@@ -491,7 +485,7 @@ def corpus_line_dedup(
     kept = lines.join(banned, on="h", how="left_anti")
     reassembled = kept.groupBy(id_col).agg(
         F.concat_ws(
-            line_delim,
+            LINE_DELIM,
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "line"))),
                 lambda s: s["line"],
@@ -722,7 +716,7 @@ def boilerplate_lines(
     min_docs: int = 2,
     top_m: int = 20,
     n_shards: int = 16,
-    line_delim: str = "\n",
+    line_delim: str = LINE_DELIM,
     group_col: str | None = None,
 ) -> DataFrame:
     """Sharded heavy-hitter LINES — the corpus-wide boilerplate REPORT that

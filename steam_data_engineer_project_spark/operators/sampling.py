@@ -27,6 +27,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+#: column :func:`deterministic_split` writes the split name to
+SPLIT_COL = "split"
+#: running token total the budgeted samplers carry on admitted rows
+CUM_COL = "cum_tokens"
+#: shard id column of the sharded export and its manifest
+SHARD_COL = "shard_id"
+
 
 def _hash_bucket(key: Column, modulus: int = 10_000) -> Column:
     """Content-derived bucket in [0, modulus): first 8 md5 hex digits of the
@@ -45,7 +52,6 @@ def deterministic_split(
     df: DataFrame,
     key_col: str,
     fractions: dict[str, float],
-    split_col: str = "split",
 ) -> DataFrame:
     """Assign each row to a named split ("train"/"valid"/"test"...) by its
     key's hash bucket. Fractions must sum to ≤ 1 (any remainder lands in the
@@ -69,7 +75,7 @@ def deterministic_split(
         )
     last = F.lit(names[-1])
     out = last if expr is None else expr.otherwise(last)
-    return df.withColumn(split_col, out)
+    return df.withColumn(SPLIT_COL, out)
 
 
 def stratified_sample_exact(
@@ -97,7 +103,6 @@ def token_budget_cap(
     key_col: str,
     tokens_col: str,
     budget: int,
-    cum_col: str = "cum_tokens",
 ) -> DataFrame:
     """Per-group prefix of rows, in deterministic hash order, whose running
     token total stays within ``budget`` — how a training-data pipeline caps
@@ -105,15 +110,15 @@ def token_budget_cap(
     positive integers, so the window cumsum is monotone and the ≤ filter IS
     the order-prefix; integer arithmetic keeps the cut engine-exact (no
     float accumulation). Same single-shuffle shape as any per-key window;
-    the admitted rows carry their running total in ``cum_col``."""
+    the admitted rows carry their running total in ``CUM_COL``."""
     w = (
         Window.partitionBy(group_col)
         .orderBy(_hash_bucket(F.col(key_col), 1 << 31), F.col(key_col))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return df.withColumn(
-        cum_col, F.sum(F.col(tokens_col).cast("long")).over(w)
-    ).filter(F.col(cum_col) <= budget)
+        CUM_COL, F.sum(F.col(tokens_col).cast("long")).over(w)
+    ).filter(F.col(CUM_COL) <= budget)
 
 
 def _shard_ord(key_col: str) -> Column:
@@ -138,19 +143,17 @@ def _shard_ord(key_col: str) -> Column:
     )
 
 
-def _sharded_sorted(
-    df: DataFrame, key_col: str, n_shards: int, shard_col: str
-) -> DataFrame:
+def _sharded_sorted(df: DataFrame, key_col: str, n_shards: int) -> DataFrame:
     """The SHARED physical prologue of both export writers — content-hash
     shard assignment, the deterministic order key, ONE wide exchange on
     the shard, and the per-partition sort. :func:`write_shards` and
     :func:`export_shards_on_materialize` must keep the identical shape
     (EXPORT_sf1.json asserts it for both), so the prologue lives once."""
     return (
-        df.withColumn(shard_col, _hash_bucket(F.col(key_col), n_shards))
+        df.withColumn(SHARD_COL, _hash_bucket(F.col(key_col), n_shards))
         .withColumn("__ord", _shard_ord(key_col))
-        .repartition(n_shards, F.col(shard_col))
-        .sortWithinPartitions(shard_col, "__ord")
+        .repartition(n_shards, F.col(SHARD_COL))
+        .sortWithinPartitions(SHARD_COL, "__ord")
     )
 
 
@@ -160,7 +163,6 @@ def write_shards(
     tokens_col: str,
     n_shards: int,
     path: str,
-    shard_col: str = "shard_id",
 ) -> None:
     """Materialize the sharded export :func:`shard_manifest` summarizes:
     ``shard = md5-hash(key) mod n_shards`` directories, each shard's rows
@@ -195,9 +197,9 @@ def write_shards(
     uuid temp + atomic replace), tested under planted torn attempts and
     an injected task retry in tests/test_operators.py."""
     (
-        _sharded_sorted(df, key_col, n_shards, shard_col)
+        _sharded_sorted(df, key_col, n_shards)
         .drop("__ord")
-        .write.partitionBy(shard_col)
+        .write.partitionBy(SHARD_COL)
         .mode("overwrite")
         .parquet(path)
     )
@@ -209,7 +211,6 @@ def export_shards_on_materialize(
     tokens_col: str,
     n_shards: int,
     path: str,
-    shard_col: str = "shard_id",
 ) -> DataFrame:
     """DEFERRED twin of :func:`write_shards`: returns a DataFrame that,
     only WHEN MATERIALIZED, writes the sharded export and yields one
@@ -256,7 +257,7 @@ def export_shards_on_materialize(
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow_schema = to_arrow_schema(df.select(*data_cols).schema)
-    prepared = _sharded_sorted(df, key_col, n_shards, shard_col)
+    prepared = _sharded_sorted(df, key_col, n_shards)
 
     def write_and_summarize(batches):
         import os
@@ -272,7 +273,7 @@ def export_shards_on_materialize(
 
         def finalize(sid, writer, tmp):
             writer.close()
-            d = os.path.join(path, f"{shard_col}={int(sid)}")
+            d = os.path.join(path, f"{SHARD_COL}={int(sid)}")
             final = os.path.join(d, "part-0.parquet")
             os.replace(tmp, final)  # atomic: one file per shard, always
             # best-effort sweep of sibling temps from crashed/cancelled
@@ -291,7 +292,7 @@ def export_shards_on_materialize(
             # objects in the write task — shards are GB-class at 100 TB
             return pd.DataFrame(
                 {
-                    shard_col: [int(sid)],
+                    SHARD_COL: [int(sid)],
                     "n_docs": [len(keys)],
                     "n_tokens": [
                         int(pc.sum(t.column(tokens_col)).as_py() or 0)
@@ -307,14 +308,14 @@ def export_shards_on_materialize(
                 continue
             # rows arrive sorted by (shard, ord): every shard is one
             # contiguous run, possibly spanning Arrow batches
-            for sid, grp in pdf.groupby(shard_col, sort=False):
+            for sid, grp in pdf.groupby(SHARD_COL, sort=False):
                 table = pa.Table.from_pandas(
                     grp[data_cols], schema=arrow_schema, preserve_index=False
                 )
                 if sid != cur_sid:
                     if writer is not None:
                         yield finalize(cur_sid, writer, tmp)
-                    d = os.path.join(path, f"{shard_col}={int(sid)}")
+                    d = os.path.join(path, f"{SHARD_COL}={int(sid)}")
                     os.makedirs(d, exist_ok=True)
                     tmp = os.path.join(d, f".part-0.{attempt}.tmp")
                     writer = pq.ParquetWriter(tmp, arrow_schema)
@@ -326,7 +327,7 @@ def export_shards_on_materialize(
     return prepared.mapInPandas(
         write_and_summarize,
         schema=(
-            f"{shard_col} long, n_docs long, n_tokens long, "
+            f"{SHARD_COL} long, n_docs long, n_tokens long, "
             f"first_key long, last_key long"
         ),
     )
@@ -337,7 +338,6 @@ def shard_manifest(
     key_col: str,
     tokens_col: str,
     n_shards: int,
-    shard_col: str = "shard_id",
 ) -> DataFrame:
     """Deterministic data-loader sharding plus its KB-class manifest — the
     export handoff a training run resumes against. Every row is assigned
@@ -352,7 +352,7 @@ def shard_manifest(
     ``df.repartition(n_shards, shard).sortWithinPartitions(ord).write`` —
     one shuffle; this manifest is the summary that validates it loader-side
     (counts, token totals, and boundary keys must match what the trainer
-    sees, or a shard was torn/reordered). One shuffle on ``shard_col``
+    sees, or a shard was torn/reordered). One shuffle on ``SHARD_COL``
     (n_shards keys, partial-aggregable: count/sum/min_by/max_by all
     map-side combine), so the manifest pass is a narrow corpus read.
 
@@ -366,10 +366,10 @@ def shard_manifest(
         df.select(
             F.col(key_col),
             F.col(tokens_col),
-            _hash_bucket(F.col(key_col), n_shards).alias(shard_col),
+            _hash_bucket(F.col(key_col), n_shards).alias(SHARD_COL),
             ordk.alias("_ord"),
         )
-        .groupBy(shard_col)
+        .groupBy(SHARD_COL)
         .agg(
             F.count("*").cast("long").alias("n_docs"),
             F.sum(F.col(tokens_col).cast("long")).alias("n_tokens"),
@@ -428,12 +428,11 @@ def temperature_resample(
     *,
     max_budget: int,
     alpha: float = 0.5,
-    cum_col: str = "cum_tokens",
 ) -> DataFrame:
     """Deterministic temperature resampling: compute each group's flattened
     token budget (:func:`temperature_allocations`), then admit the group's
     hash-order prefix of rows up to that budget (the per-group-budget twin
-    of :func:`token_budget_cap`). Admitted rows carry ``cum_col`` and their
+    of :func:`token_budget_cap`). Admitted rows carry ``CUM_COL`` and their
     group's ``token_budget``.
 
     One wide shuffle (the per-group window); the allocation table is
@@ -453,6 +452,6 @@ def temperature_resample(
     )
     return (
         df.join(F.broadcast(alloc), group_col)
-        .withColumn(cum_col, F.sum(F.col(tokens_col).cast("long")).over(w))
-        .filter(F.col(cum_col) <= F.col("token_budget"))
+        .withColumn(CUM_COL, F.sum(F.col(tokens_col).cast("long")).over(w))
+        .filter(F.col(CUM_COL) <= F.col("token_budget"))
     )

@@ -20,6 +20,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+#: sign-projection LSH: hyperplanes per bucket id (2^LSH_PLANES buckets) and
+#: the coordinate stride, coprime to the usual embedding widths
+LSH_PLANES = 8
+LSH_STRIDE = 7
+#: multi-probe radius of :func:`lsh_bucket_cosine_topk` in bit flips
+LSH_PROBE_HAMMING = 1
+#: partition columns of the bucketed / inverted-file layouts
+BUCKET_COL = "bucket"
+CENTROID_COL = "centroid_id"
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -60,8 +70,8 @@ def brute_force_cosine_topk(
     return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
 
 
-def lsh_bucket_id(vec: Column, n_planes: int = 8, stride: int = 7) -> Column:
-    """Sign-projection LSH bucket: bit j = (vec[(j*stride) % dim] > 0).
+def lsh_bucket_id(vec: Column, n_planes: int = LSH_PLANES) -> Column:
+    """Sign-projection LSH bucket: bit j = (vec[(j*LSH_STRIDE) % dim] > 0).
 
     Axis-aligned planes with a coprime stride give a deterministic,
     engine-portable 2^n_planes-bucket partitioning (a degenerate but valid
@@ -74,7 +84,7 @@ def lsh_bucket_id(vec: Column, n_planes: int = 8, stride: int = 7) -> Column:
     bits = [
         F.when(
             F.element_at(
-                vec, (F.lit(j * stride) % dim + F.lit(1)).cast("int")
+                vec, (F.lit(j * LSH_STRIDE) % dim + F.lit(1)).cast("int")
             ).cast("double")
             > 0.0,
             F.lit(1 << j),
@@ -87,9 +97,7 @@ def lsh_bucket_id(vec: Column, n_planes: int = 8, stride: int = 7) -> Column:
     return out
 
 
-def query_bucket_id(
-    query_vec: list[float], n_planes: int = 8, stride: int = 7
-) -> int:
+def query_bucket_id(query_vec: list[float], n_planes: int = LSH_PLANES) -> int:
     """Python-side mirror of :func:`lsh_bucket_id` for a literal query vector.
 
     Uses the same ``% len(vec)`` modulus as the Column version so data-side
@@ -97,7 +105,7 @@ def query_bucket_id(
     """
     bucket = 0
     for j in range(n_planes):
-        if float(query_vec[(j * stride) % len(query_vec)]) > 0.0:
+        if float(query_vec[(j * LSH_STRIDE) % len(query_vec)]) > 0.0:
             bucket += 1 << j
     return bucket
 
@@ -107,16 +115,14 @@ def embedding_near_dup_pairs(
     vec_col: str,
     id_col: str,
     threshold: float,
-    n_planes: int = 8,
-    stride: int = 7,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: self-join within sign-projection
     LSH buckets, then keep pairs whose exact cosine clears ``threshold``.
 
-    The bucket equi-join bounds candidates at ~n²/2^n_planes instead of n² —
-    the same banded-LSH shape as MinHash dedup, but over dense vectors. At
+    The bucket equi-join bounds candidates at ~n²/2^LSH_PLANES instead of n²
+    — the same banded-LSH shape as MinHash dedup, but over dense vectors. At
     scale, write the table bucketed by the LSH id so the self-join is
-    co-partitioned (no shuffle); raising ``n_planes`` trades recall for a
+    co-partitioned (no shuffle); raising ``LSH_PLANES`` trades recall for a
     smaller candidate set. Cosine is computed JVM-side (higher-order
     functions) and rounded to 6 dp before the threshold so engines agree on
     borderline pairs.
@@ -124,7 +130,7 @@ def embedding_near_dup_pairs(
     Each vector's norm is computed ONCE per row before the self-join (it
     depends only on that row), so the per-candidate-pair work is a single
     dot-product fold instead of three array folds — the interpreted-HOF
-    cost is per PAIR (~n²/2^n_planes of them), which made the per-row
+    cost is per PAIR (~n²/2^LSH_PLANES of them), which made the per-row
     hoist worth 3× on the pair stage. The cosine value is bit-identical:
     the same fold over the same array yields the same double whether it
     runs before or after the join, and the ``dot / (norm_l * norm_r)``
@@ -135,7 +141,7 @@ def embedding_near_dup_pairs(
     b = df.select(
         F.col(id_col),
         F.col(vec_col),
-        lsh_bucket_id(F.col(vec_col), n_planes, stride).alias("bucket"),
+        lsh_bucket_id(F.col(vec_col)).alias("bucket"),
         _norm(F.col(vec_col)).alias("nrm"),
     )
     left = b.alias("l")
@@ -250,12 +256,11 @@ def lsh_bucket_cosine_topk_pruned(
     id_col: str,
     query_vec: list[float],
     k: int = 10,
-    n_planes: int = 8,
-    probe_hamming: int = 1,
-    bucket_col: str = "bucket",
+    n_planes: int = LSH_PLANES,
+    probe_hamming: int = LSH_PROBE_HAMMING,
 ) -> DataFrame:
     """The SCALE PATH of :func:`lsh_bucket_cosine_topk`: the table has been
-    WRITTEN partitioned by its LSH bucket (``write.partitionBy(bucket_col)``),
+    WRITTEN partitioned by its LSH bucket (``write.partitionBy(BUCKET_COL)``),
     so the probe set becomes a literal IN-predicate on the partition column —
     the scan reads only the probed bucket directories (static partition
     pruning: the FileScan's PartitionFilters carry the probe list, asserted
@@ -269,9 +274,9 @@ def lsh_bucket_cosine_topk_pruned(
         if bin(b ^ q_bucket).count("1") <= probe_hamming
     ]
     q = F.array(*[F.lit(float(v)) for v in query_vec])
-    scored = df.filter(F.col(bucket_col).isin(probes)).select(
+    scored = df.filter(F.col(BUCKET_COL).isin(probes)).select(
         F.col(id_col),
-        F.col(bucket_col).cast("long").alias("bucket"),
+        F.col(BUCKET_COL).cast("long").alias("bucket"),
         F.round(cosine_similarity(F.col(vec_col), q), 6).alias("cosine"),
     )
     return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
@@ -285,10 +290,9 @@ def ivf_cosine_topk_pruned(
     query_vec: list[float],
     k: int = 10,
     n_probe: int = 4,
-    centroid_col: str = "centroid_id",
 ) -> DataFrame:
     """The SCALE PATH of :func:`ivf_cosine_topk`: the inverted file — the
-    table written partitioned by ``centroid_col`` (each vector already
+    table written partitioned by ``CENTROID_COL`` (each vector already
     assigned) — probed via a broadcast join against the ``n_probe`` centroids
     nearest the query. The join key is the partition column, so dynamic
     partition pruning skips the unprobed centroid directories entirely (the
@@ -297,17 +301,17 @@ def ivf_cosine_topk_pruned(
     q = F.array(*[F.lit(float(v)) for v in query_vec])
     probe = (
         centroids.select(
-            F.col(centroid_col),
+            F.col(CENTROID_COL),
             F.round(cosine_similarity(F.col("cv"), q), 6).alias("q_cos"),
         )
-        .orderBy(F.desc("q_cos"), F.asc(centroid_col))
+        .orderBy(F.desc("q_cos"), F.asc(CENTROID_COL))
         .limit(n_probe)
-        .select(centroid_col)
+        .select(CENTROID_COL)
     )
-    candidates = df.join(F.broadcast(probe), centroid_col)
+    candidates = df.join(F.broadcast(probe), CENTROID_COL)
     scored = candidates.select(
         F.col(id_col),
-        F.col(centroid_col).cast("long").alias("centroid_id"),
+        F.col(CENTROID_COL).cast("long").alias("centroid_id"),
         F.round(cosine_similarity(F.col(vec_col), q), 6).alias("cosine"),
     )
     return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
@@ -319,26 +323,26 @@ def lsh_bucket_cosine_topk(
     id_col: str,
     query_vec: list[float],
     k: int = 10,
-    n_planes: int = 8,
-    probe_hamming: int = 1,
 ) -> DataFrame:
     """Approximate top-k: score only vectors in buckets within
-    ``probe_hamming`` bit flips of the query's LSH bucket (multi-probe —
+    ``LSH_PROBE_HAMMING`` bit flips of the query's LSH bucket (multi-probe —
     Hamming-1 probing recovers most neighbors lost to a single sign flip at
-    the cost of ``n_planes``× more candidate buckets out of ``2^n_planes``).
+    the cost of ``LSH_PLANES``× more candidate buckets out of
+    ``2^LSH_PLANES``).
 
     Returns (id_col, bucket, cosine). On a table written bucketed/partitioned
     by the LSH id the bucket predicate prunes the scan; here it prunes
     compute.
     """
-    q_bucket = query_bucket_id(query_vec, n_planes)
+    q_bucket = query_bucket_id(query_vec)
     q = F.array(*[F.lit(float(v)) for v in query_vec])
     bucketed = df.select(
         F.col(id_col),
         F.col(vec_col),
-        lsh_bucket_id(F.col(vec_col), n_planes).alias("bucket"),
+        lsh_bucket_id(F.col(vec_col)).alias("bucket"),
     ).filter(
-        F.bit_count(F.col("bucket").bitwiseXOR(F.lit(q_bucket))) <= probe_hamming
+        F.bit_count(F.col("bucket").bitwiseXOR(F.lit(q_bucket)))
+        <= LSH_PROBE_HAMMING
     )
     scored = bucketed.select(
         F.col(id_col),
@@ -381,32 +385,3 @@ def quantize_int8(vec: Column | str) -> Column:
     return F.transform(
         vec, lambda x: F.floor(x.cast("double") * scale + F.lit(0.5))
     )
-
-
-def quantized_cosine_topk(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    query_vec: list[float],
-    k: int = 10,
-) -> DataFrame:
-    """Approximate cosine top-k over int8-quantized vectors.
-
-    Returns (id_col, q_cosine): cosine computed on the quantized
-    representations (the per-vector scales cancel), rounded to 6 places,
-    ties broken by id. Same plan shape as brute_force_cosine_topk — a scan
-    plus TakeOrderedAndProject — but the arithmetic is over small integers.
-    """
-    import math
-
-    amax = max((abs(float(v)) for v in query_vec), default=0.0)
-    scale = 127.0 / max(amax, 1e-30)
-    q = F.array(
-        *[F.lit(float(math.floor(float(v) * scale + 0.5))) for v in query_vec]
-    )
-    qv = quantize_int8(vec_col)
-    scored = df.select(
-        F.col(id_col),
-        F.round(cosine_similarity(qv, q), 6).alias("q_cosine"),
-    )
-    return scored.orderBy(F.desc("q_cosine"), F.asc(id_col)).limit(k)

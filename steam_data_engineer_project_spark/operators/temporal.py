@@ -26,6 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: output column holding the matched right row's timestamp
+MATCHED_TS = "asof_ts"
+
 
 def asof_join(
     left: DataFrame,
@@ -34,7 +37,6 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     payload: list[str],
-    matched_ts: str = "asof_ts",
 ) -> DataFrame:
     """Backward as-of LEFT join: for every left row, attach ``payload`` from
     the right row with the greatest ``right_ts`` <= ``left_ts`` within the
@@ -99,7 +101,7 @@ def asof_join(
         .filter(F.col("__side") == 1)
         .select(
             *[F.col(c) for c in lcols],
-            F.col("__m.ts").alias(matched_ts),
+            F.col("__m.ts").alias(MATCHED_TS),
             *[F.col(f"__m.{c}").alias(c) for c in payload],
         )
     )
@@ -112,7 +114,6 @@ def asof_join_split(
     left_ts: str,
     right_ts: str,
     payload: list[str],
-    matched_ts: str = "asof_ts",
     range_width: float = 3600.0,
 ) -> DataFrame:
     """:func:`asof_join` for SKEWED equality keys: identical semantics, but a
@@ -251,7 +252,7 @@ def asof_join_split(
         .filter(F.col("__side") == 1)
         .select(
             *[F.col(c) for c in lcols],
-            F.col("__mm.ts").alias(matched_ts),
+            F.col("__mm.ts").alias(MATCHED_TS),
             *[F.col(f"__mm.{c}").alias(c) for c in payload],
         )
     )

@@ -14,6 +14,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+#: BM25 term-frequency saturation and document-length normalization
+BM25_K1 = 1.2
+BM25_B = 0.75
+
 # Tiny public marker lexicons (most-frequent function words).
 LANG_MARKERS: dict[str, list[str]] = {
     "en": ["the", "and", "of", "to", "is"],
@@ -115,9 +119,7 @@ def language_id(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def repetition_stats(
-    df: DataFrame, text_col: str, id_col: str, line_delim: str = "\n"
-) -> DataFrame:
+def repetition_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Within-document repetition signals (Gopher-style quality filters):
     duplicate-line fraction, duplicate-line character fraction, and the
     fraction of word bigrams taken by the single most frequent bigram.
@@ -134,7 +136,7 @@ def repetition_stats(
     ``filter`` per distinct element is avoided.
     """
     lines = F.filter(
-        F.transform(F.split(F.col(text_col), line_delim), lambda x: F.trim(x)),
+        F.transform(F.split(F.col(text_col), "\n"), lambda x: F.trim(x)),
         lambda x: x != "",
     )
     n_lines = F.size(lines)
@@ -248,8 +250,6 @@ def bm25_scores(
     text_col: str,
     id_col: str,
     query_terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """BM25-family relevance of every document against a fixed term query —
     the keyword-scoring primitive corpus pipelines use for quality/topic
@@ -306,12 +306,14 @@ def bm25_scores(
         tf = F.col(f"tf_{i}")
         dfq = F.col(f"df_{i}")
         idf = (F.col("n_docs") - dfq + F.lit(0.5)) / (dfq + F.lit(0.5))
-        denom = tf + F.lit(k1) * (
-            F.lit(1.0 - b)
-            + F.lit(b) * (F.col("dl") / (F.col("total_tokens") / F.col("n_docs")))
+        denom = tf + F.lit(BM25_K1) * (
+            F.lit(1.0 - BM25_B)
+            + F.lit(BM25_B)
+            * (F.col("dl") / (F.col("total_tokens") / F.col("n_docs")))
         )
         contrib = F.floor(
-            idf * (tf * F.lit(k1 + 1.0)) / denom * F.lit(1000000.0) + F.lit(0.5)
+            idf * (tf * F.lit(BM25_K1 + 1.0)) / denom * F.lit(1000000.0)
+            + F.lit(0.5)
         )
         contribs.append(F.when(tf > 0, contrib).otherwise(F.lit(0)))
         matched.append((tf > 0).cast("long"))

@@ -64,7 +64,6 @@ def incremental_refresh(
     ts_col: str,
     key_cols: list[str],
     order_col: str,
-    tiebreak_cols: list[str] | None = None,
 ) -> DataFrame:
     """Refresh the mart at ``mart_dir`` from ``source``.
 
@@ -83,8 +82,7 @@ def incremental_refresh(
     """
     with exclusive_flock(os.path.join(mart_dir, "_lock")):
         return _refresh_locked(
-            spark, mart_dir, source, transform, ts_col, key_cols,
-            order_col, tiebreak_cols,
+            spark, mart_dir, source, transform, ts_col, key_cols, order_col
         )
 
 
@@ -96,7 +94,6 @@ def _refresh_locked(
     ts_col: str,
     key_cols: list[str],
     order_col: str,
-    tiebreak_cols: list[str] | None,
 ) -> DataFrame:
     _recover_swap(mart_dir)  # repair a crash-torn data swap first
     wm = _read_watermark(mart_dir)
@@ -117,9 +114,7 @@ def _refresh_locked(
         if os.path.isdir(data_dir)
         else delta.limit(0)
     )
-    merged = upsert_last_wins(
-        existing, delta, key_cols, order_col, tiebreak_cols
-    )
+    merged = upsert_last_wins(existing, delta, key_cols, order_col)
 
     tmp = f"{data_dir}.tmp"
     merged.write.mode("overwrite").parquet(tmp)

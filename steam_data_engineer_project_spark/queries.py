@@ -94,7 +94,6 @@ from .operators.merge import insert_ignore, merge_monotone_max, upsert_last_wins
 from .multimodal.binary import (
     attach_binary_payloads,
     decode_features,
-    header_length,
     sniff_format,
 )
 from .operators.ranking import global_row_number
@@ -2020,7 +2019,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return first.unionByName(trained).unionByName(codebook_leg)
 
 
-def _ann_ivf_trained_oracle_body(d: int = 64) -> str:
+def _ann_ivf_trained_oracle_body() -> str:
     """DuckDB replay of the TRAINED-codebook IVF leg: int8 quantization,
     the 3 unrolled Lloyd iterations (shared _kmeans_iter_sql machinery),
     per-cluster floor-means of micro-unit normalized vectors (list_reduce
@@ -2030,6 +2029,7 @@ def _ann_ivf_trained_oracle_body(d: int = 64) -> str:
     same cb chain — the oracle computes the codebook DIRECTLY while
     Spark serves it from the parquet store, so hash equality is the
     store-roundtrip proof."""
+    d = _SEM_DIM
     chain, final_a = _kmeans_iter_sql(d, 3)
     r = f"range(1, {d + 1})"
     return f"""
@@ -4637,65 +4637,6 @@ FROM orders WHERE o_orderkey % 2 = 1
 
 
 # --------------------------------------------------------------------------
-# Multimodal binary columns — metadata JVM-side, decode via Arrow-batched
-# mapInPandas (deterministic fake decode; real byte inspection — see
-# multimodal/binary.py for the production hook).
-# --------------------------------------------------------------------------
-
-
-def mm_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary payloads with typed metadata, all JVM-side: magic-byte format
-    sniff (hex prefix on the binary column), byte sizes — the cheap routing
-    gate that keeps non-decodable work out of Python."""
-    d = _t(spark, sf_dir, "documents")
-    b = attach_binary_payloads(d, "text", "doc_id")
-    fmt = sniff_format(F.col("payload"))
-    return b.select(
-        "doc_id",
-        fmt.alias("format"),
-        F.length("payload").cast("long").alias("total_bytes"),
-        (F.length("payload") - header_length(fmt)).cast("long").alias(
-            "payload_bytes"
-        ),
-    )
-
-
-MM_METADATA_ORACLE = """
-SELECT doc_id,
-       CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'wav' END AS format,
-       CAST(octet_length(encode(text)) + (CASE doc_id % 3 WHEN 0 THEN 8 ELSE 4 END) AS BIGINT) AS total_bytes,
-       CAST(octet_length(encode(text)) AS BIGINT) AS payload_bytes
-FROM documents
-"""
-
-
-def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Arrow-batched mapInPandas decode path: real magic sniffing and
-    buffer-length reads in the Python worker, dimensions derived
-    deterministically from payload size (the fake decode — the oracle
-    mirrors the arithmetic from the base table)."""
-    d = _docs(spark, sf_dir)
-    b = attach_binary_payloads(d, "text", "doc_id")
-    return decode_features(b, "doc_id")
-
-
-MM_DECODE_ORACLE = """
-WITH b AS (
-  SELECT doc_id,
-         CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'wav' END AS format,
-         CAST(octet_length(encode(text)) AS BIGINT) AS body
-  FROM documents
-)
-SELECT doc_id, format,
-       CAST((body * 7) % 256 AS INT) AS width,
-       CAST((body * 13) % 256 AS INT) AS height,
-       CAST(CASE WHEN format = 'wav' THEN body // 4 ELSE 1 END AS BIGINT) AS n_frames,
-       body AS payload_bytes
-FROM b
-"""
-
-
-# --------------------------------------------------------------------------
 # Structured Streaming (SURVEY §2.9 — ST1/ST2/ST4/ST5/ST7/ST8, S4/S5/S10/
 # S11/S13/S16). Each query materializes a deterministic event-file fixture
 # from the events table, drains it through the real readStream →
@@ -5589,8 +5530,9 @@ GROUP BY 1, 2
 def mm_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal suite: the JVM-side metadata gate (magic sniff + sizes)
     joined on doc_id with the Arrow-batched mapInPandas decode — one binary
-    payload scan feeding both (see mm_binary_metadata / mm_decode_features
-    docstrings; multimodal/binary.py)."""
+    payload scan feeding both (see multimodal/binary.py). The decode is the
+    deterministic fake: the oracle mirrors its arithmetic from the base
+    table."""
     d = _docs(spark, sf_dir)
     b = attach_binary_payloads(d, "text", "doc_id")
     fmt = sniff_format(F.col("payload"))

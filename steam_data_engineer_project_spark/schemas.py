@@ -1,4 +1,4 @@
-"""Declared StructTypes for every table and message envelope in the engine
+"""Declared StructTypes for the files and message envelopes the engine reads
 (SURVEY.md §1). Schema-on-read everywhere: readers NEVER infer schemas —
 inference is a full extra pass at 100 TB and produces unstable types.
 
@@ -11,79 +11,6 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
-# Relational core (sql/init_db.sql)
-# ---------------------------------------------------------------------------
-
-#: games table — sql/init_db.sql:5-15
-GAMES = T.StructType(
-    [
-        T.StructField("game_id", T.IntegerType(), False),
-        T.StructField("title", T.StringType(), False),
-        T.StructField("description", T.StringType(), True),
-        T.StructField("release_date", T.DateType(), True),
-        T.StructField("windows_req", T.StringType(), True),
-        T.StructField("mac_req", T.StringType(), True),
-        T.StructField("linux_req", T.StringType(), True),
-        T.StructField("required_age", T.IntegerType(), True),
-        T.StructField("awards", T.StringType(), True),
-    ]
-)
-
-#: surrogate-key dimension (developers/publishers/genres/languages —
-#: sql/init_db.sql:18-49; one shape, four instances)
-NAME_DIM = T.StructType(
-    [
-        T.StructField("dim_id", T.IntegerType(), False),
-        T.StructField("name", T.StringType(), False),
-    ]
-)
-
-#: bridge table (game_developers et al — sql/init_db.sql:28-61)
-GAME_BRIDGE = T.StructType(
-    [
-        T.StructField("game_id", T.IntegerType(), False),
-        T.StructField("dim_id", T.IntegerType(), False),
-    ]
-)
-
-#: prices append-only time series — sql/init_db.sql:71-79
-PRICES = T.StructType(
-    [
-        T.StructField("price_id", T.LongType(), False),
-        T.StructField("game_id", T.IntegerType(), False),
-        T.StructField("price", T.DecimalType(10, 2), False),
-        T.StructField("discount", T.IntegerType(), False),
-        T.StructField("initial_price", T.DecimalType(10, 2), False),
-        T.StructField("timestamp", T.TimestampType(), False),
-    ]
-)
-
-#: crawl_state per-key watermark registry — sql/init_db.sql:63-68
-CRAWL_STATE = T.StructType(
-    [
-        T.StructField("game_appid", T.IntegerType(), False),
-        T.StructField("last_review_timestamp", T.TimestampType(), True),
-        T.StructField("last_price_timestamp", T.TimestampType(), True),
-    ]
-)
-
-#: review_summaries — tasks/steam_review_task_improved.py:479-486
-REVIEW_SUMMARIES = T.StructType(
-    [
-        T.StructField("appid", T.IntegerType(), False),
-        T.StructField("recommendationid", T.StringType(), False),
-        T.StructField("author_steamid", T.StringType(), False),
-        T.StructField("language", T.StringType(), True),
-        T.StructField("voted_up", T.BooleanType(), True),
-        T.StructField("votes_up", T.LongType(), True),
-        T.StructField("votes_funny", T.LongType(), True),
-        T.StructField("weighted_vote_score", T.DoubleType(), True),
-        T.StructField("timestamp_created", T.TimestampType(), True),
-        T.StructField("processed_at", T.TimestampType(), True),
-    ]
-)
-
-# ---------------------------------------------------------------------------
 # File shapes (SURVEY §1.4)
 # ---------------------------------------------------------------------------
 
@@ -93,27 +20,6 @@ PRICE_RAW_CSV = T.StructType(
         T.StructField("appid", T.LongType(), True),
         T.StructField("discount", T.StringType(), True),  # "50%" / "50"
         T.StructField("price", T.StringType(), True),  # EU comma decimals
-    ]
-)
-
-#: processed price CSV `appid,discount,initial_price,price` —
-#: etl/transform/steam_transform_price.py:106
-PRICE_PROCESSED_CSV = T.StructType(
-    [
-        T.StructField("appid", T.LongType(), True),
-        T.StructField("discount", T.DoubleType(), True),
-        T.StructField("initial_price", T.DoubleType(), True),
-        T.StructField("price", T.DoubleType(), True),
-    ]
-)
-
-#: playercount time series CSV — realtime/steam-crawl-playercount.py:108
-PLAYERCOUNT_CSV = T.StructType(
-    [
-        T.StructField("timestamp", T.TimestampType(), True),
-        T.StructField("appid", T.LongType(), True),
-        T.StructField("name", T.StringType(), True),
-        T.StructField("current_players", T.LongType(), True),
     ]
 )
 
@@ -146,53 +52,5 @@ REVIEW_EVENT = T.StructType(
         T.StructField("voted_up", T.BooleanType(), True),
         T.StructField("votes_up", T.LongType(), True),
         T.StructField("timestamp_created", T.LongType(), True),  # epoch seconds
-    ]
-)
-
-#: static game event (`steam-static`) with first-class string arrays —
-#: kafka/producers/kafka_producer_info.py:31-47
-STATIC_GAME_EVENT = T.StructType(
-    [
-        T.StructField("appid", T.LongType(), True),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("description", T.StringType(), True),
-        T.StructField("release_date", T.StringType(), True),
-        T.StructField("genres", T.ArrayType(T.StringType()), True),
-        T.StructField("languages", T.ArrayType(T.StringType()), True),
-        T.StructField("developers", T.ArrayType(T.StringType()), True),
-        T.StructField("publishers", T.ArrayType(T.StringType()), True),
-        T.StructField("windows_req", T.StringType(), True),
-        T.StructField("mac_req", T.StringType(), True),
-        T.StructField("linux_req", T.StringType(), True),
-        T.StructField("required_age", T.LongType(), True),
-        T.StructField("awards", T.StringType(), True),
-    ]
-)
-
-#: Debezium CDC envelope for the prices table —
-#: tasks/steam_tasks_improved.py:563-599; after.timestamp is epoch MILLIS
-_CDC_ROW = T.StructType(
-    [
-        T.StructField("game_id", T.LongType(), True),
-        T.StructField("discount", T.DoubleType(), True),
-        T.StructField("price", T.DoubleType(), True),
-        T.StructField("initial_price", T.DoubleType(), True),
-        T.StructField("timestamp", T.LongType(), True),
-    ]
-)
-
-CDC_ENVELOPE = T.StructType(
-    [
-        T.StructField(
-            "payload",
-            T.StructType(
-                [
-                    T.StructField("op", T.StringType(), True),
-                    T.StructField("before", _CDC_ROW, True),
-                    T.StructField("after", _CDC_ROW, True),
-                ]
-            ),
-            True,
-        )
     ]
 )

@@ -57,11 +57,8 @@ def get_spark(
         # with it off). The only loss is the call-site line in SQL error
         # messages; the cost is per API CALL, not per row, so the win is
         # scale-independent (a 100 TB driver program builds the same
-        # plans). Env-overridable for interactive debugging sessions.
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("SPARK_GRAFT_DF_DEBUGGING", "false"),
-        )
+        # plans).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # local mode: the driver is the only JVM; give it headroom but leave
         # space for the OS and Python workers (container has 128 GiB).
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
@@ -79,10 +76,7 @@ def get_spark(
         # build a per-partition hash map within the planner's size
         # conditions and falls back to sort-merge otherwise, so at 100 TB
         # the big fact⋈fact joins keep the spill-graceful SMJ path.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        .config("spark.sql.join.preferSortMergeJoin", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():
@@ -90,31 +84,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Load the driver parquet tables under ``sf_dir`` and register temp views.
-
-    Returns a dict name -> DataFrame. Reads are schema-on-file parquet scans;
-    Catalyst pushes projections/filters into the scan.
-    """
-    names = names or (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    )
-    out = {}
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out

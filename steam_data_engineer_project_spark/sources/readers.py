@@ -11,18 +11,14 @@ loader falls back to per-line parsing (etl/load/load_mongo.py:5-23).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+#: column that carries the raw text of a line the declared schema rejects
+CORRUPT_COL = "_corrupt_record"
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    *,
-    header: bool = True,
-) -> DataFrame:
-    """S1: CSV batch scan with a declared schema.
+
+def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """S1: CSV batch scan (with a header row) under a declared schema.
 
     Reference: tasks/steam_tasks_improved.py:231,
     etl/transform/transform_game.py:5, etl/load/load_game_mysql.py:63-64 —
@@ -32,53 +28,34 @@ def read_csv(
     """
     return (
         spark.read.schema(schema)
-        .option("header", str(header).lower())
+        .option("header", "true")
         .option("mode", "PERMISSIVE")
         .csv(path)
     )
 
 
 def read_json_recovering(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    *,
-    corrupt_col: str = "_corrupt_record",
+    spark: SparkSession, path: str, schema: T.StructType
 ) -> DataFrame:
     """S3: JSON/JSONL scan with corrupt-line recovery.
 
     Reference: etl/load/load_mongo.py:5-23 — try whole-file json.load, fall
     back to parsing line by line and keeping what parses. Spark-first: one
     PERMISSIVE pass; lines that fail the schema land with every declared
-    column null and the raw text in ``corrupt_col``, so callers can route
+    column null and the raw text in ``CORRUPT_COL``, so callers can route
     valid rows onward and corrupt rows to a quarantine sink — no second
     pass, no driver loop.
     """
     # New StructType, not schema.add() — add() mutates the caller's schema.
     full = T.StructType(
-        list(schema.fields) + [T.StructField(corrupt_col, T.StringType(), True)]
+        list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType(), True)]
     )
     return (
         spark.read.schema(full)
         .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
+        .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)
     )
-
-
-def split_corrupt(
-    df: DataFrame, *, corrupt_col: str = "_corrupt_record"
-) -> tuple[DataFrame, DataFrame]:
-    """Route a recovering read into (valid_rows, corrupt_rows).
-
-    The corrupt side keeps the declared columns alongside the raw line:
-    Spark refuses a scan whose only referenced column is the internal
-    corrupt-record column, so a quarantine query must carry at least one
-    real column (they are all null on corrupt rows anyway).
-    """
-    valid = df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    corrupt = df.filter(F.col(corrupt_col).isNotNull())
-    return valid, corrupt
 
 
 def incremental_resume(

@@ -5,8 +5,7 @@ Reference: tasks/steam_tasks_improved.py:27-78 (ThreadPool of 20 workers
 hitting SteamSpy per appid), tasks/SteamReviewAPIClient.py:20-59,
 utils/steam_reviews_crawler_validated_proxies.py:388-494. The Spark-first
 shape: the appid list is a DataFrame, ``mapInPandas`` fans each partition
-out to a Python worker that fetches its ids (per-partition rate limiting ≈
-the reference's per-thread sleep), and the typed result lands as a
+out to a Python worker that fetches its ids, and the typed result lands as a
 DataFrame — no driver-side accumulation, retry/backoff per row.
 
 ``fetch_fn`` is pluggable: production passes an HTTP client closure; tests
@@ -28,14 +27,12 @@ def rest_fetch(
     fetch_fn: Callable[[int], dict | None],
     result_schema: str,
     *,
-    rate_limit_per_sec: float | None = None,
     max_retries: int = 3,
     backoff_base_sec: float = 0.1,
 ) -> DataFrame:
     """Distributed GET-per-id: one ``fetch_fn`` call per id, executed inside
     the partition's Python worker, with retry/exponential backoff
-    (config/settings.py:36-41) and optional per-partition rate limiting
-    (config/settings.py:44-48). Failed ids yield a row with null payload
+    (config/settings.py:36-41). Failed ids yield a row with null payload
     columns rather than failing the job — the caller routes them to a retry
     queue (the reference's ProcessedTracker failed-set, utils/common.py:52-125).
     """
@@ -59,16 +56,9 @@ def rest_fetch(
     def _fetch(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        min_interval = 1.0 / rate_limit_per_sec if rate_limit_per_sec else 0.0
-        last_call = 0.0
         for pdf in batches:
             rows = []
             for i in pdf[id_col]:
-                if min_interval:
-                    wait = min_interval - (time.monotonic() - last_call)
-                    if wait > 0:
-                        time.sleep(wait)
-                    last_call = time.monotonic()
                 payload = None
                 for attempt in range(max_retries):
                     try:

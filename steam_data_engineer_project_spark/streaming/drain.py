@@ -17,6 +17,9 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
+#: parquet files written per micro-batch directory
+FILES_PER_BATCH = 4
+
 
 def drain_to_batch_dirs(
     spark: Any,
@@ -26,7 +29,6 @@ def drain_to_batch_dirs(
     *,
     output_mode: str,
     batch_shuffle_partitions: int | None = None,
-    files_per_batch: int = 4,
 ) -> str:
     """Run ``stream_df`` to completion (AvailableNow) writing each
     micro-batch to ``<out_dir>/batch_id=N``; returns ``out_dir``.
@@ -38,7 +40,7 @@ def drain_to_batch_dirs(
     front."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.coalesce(files_per_batch).write.mode("overwrite").parquet(
+        batch_df.coalesce(FILES_PER_BATCH).write.mode("overwrite").parquet(
             os.path.join(out_dir, f"batch_id={batch_id}")
         )
 

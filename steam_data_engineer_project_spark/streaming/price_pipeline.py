@@ -41,8 +41,6 @@ from ..functions.scalars import initial_price
 from ..schemas import PRICE_EVENT
 from .state_store import bucket_of, merge_bucketed, read_state, resolve_num_buckets
 
-#: crawl_state columns maintained by the merge
-_STATE_COLS = ("appid", "last_ts_us", "last_event_id", "last_price", "n_events")
 
 def _state_aggs() -> list:
     """The associative combine (struct-max + additive count) for crawl_state

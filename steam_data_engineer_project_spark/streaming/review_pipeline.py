@@ -37,6 +37,8 @@ from ..schemas import REVIEW_EVENT
 from .state_store import bucket_of, merge_bucketed
 
 _KEY = ("appid", "author_steamid")
+#: hash buckets of each state table
+NUM_STATE_BUCKETS = 16
 
 
 def transform_review_events(raw: DataFrame) -> DataFrame:
@@ -64,7 +66,6 @@ def run_review_pipeline(
     work_dir: str,
     *,
     max_files_per_trigger: int | None = None,
-    num_state_buckets: int = 16,
     batch_shuffle_partitions: int | None = None,
 ) -> dict[str, str]:
     """Drain review-event JSONL files; maintain the latest-wins review store
@@ -135,7 +136,7 @@ def run_review_pipeline(
             touched = sorted(
                 r.bucket
                 for r in combined.withColumn(
-                    "bucket", bucket_of(list(_KEY), num_state_buckets)
+                    "bucket", bucket_of(list(_KEY), NUM_STATE_BUCKETS)
                 )
                 .select("bucket")
                 .distinct()
@@ -182,7 +183,7 @@ def run_review_pipeline(
                     aggs,
                     back,
                     batch_id,
-                    num_buckets=num_state_buckets,
+                    num_buckets=NUM_STATE_BUCKETS,
                     touched=touched,
                 )
 

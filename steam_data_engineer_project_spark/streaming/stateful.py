@@ -95,40 +95,6 @@ def crawl_state_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def run_crawl_state_stream(
-    spark: Any,
-    events_dir: str,
-    ckpt_dir: str,
-    *,
-    max_files_per_trigger: int | None = None,
-) -> list[pd.DataFrame]:
-    """Drain available price-event JSON files through crawl_state_stream,
-    collecting each micro-batch's update rows (driver-side — this runner
-    exists for tests/demos; production would writeStream to a sink)."""
-    from ..schemas import PRICE_EVENT
-    from .price_pipeline import transform_price_events
-
-    reader = spark.readStream.schema(PRICE_EVENT)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    updates = crawl_state_stream(transform_price_events(reader.json(events_dir)))
-
-    batches: list[pd.DataFrame] = []
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batches.append(batch_df.toPandas())
-
-    q = (
-        updates.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return batches
-
-
 def run_crawl_state_to_table(
     spark: Any,
     events_dir: str,

@@ -28,13 +28,15 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: JSON event file columns; ``ts`` is epoch seconds
+EVENT_SCHEMA = "appid long, price double, ts double"
+#: tumbling window length
+WINDOW_DURATION = "1 hour"
+#: how far the watermark trails the max observed event time
+WATERMARK_DELAY = "30 minutes"
 
-def windowed_price_stats(
-    events: DataFrame,
-    *,
-    window_duration: str = "1 hour",
-    watermark_delay: str = "30 minutes",
-) -> DataFrame:
+
+def windowed_price_stats(events: DataFrame) -> DataFrame:
     """Tumbling-window per-app stats over a (streaming or batch) frame with
     ``appid``, ``price`` and an ``event_time`` timestamp column.
 
@@ -44,8 +46,8 @@ def windowed_price_stats(
     the batch run the oracle for the streamed one.
     """
     return (
-        events.withWatermark("event_time", watermark_delay)
-        .groupBy(F.window("event_time", window_duration), F.col("appid"))
+        events.withWatermark("event_time", WATERMARK_DELAY)
+        .groupBy(F.window("event_time", WINDOW_DURATION), F.col("appid"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.max("price").alias("max_price"),
@@ -60,62 +62,19 @@ def windowed_price_stats(
     )
 
 
-def run_windowed_stream(
-    spark,
-    events_dir: str,
-    ckpt_dir: str,
-    *,
-    schema: str = "appid long, price double, ts double",
-    max_files_per_trigger: int | None = 1,
-    window_duration: str = "1 hour",
-    watermark_delay: str = "30 minutes",
-):
-    """Drain JSON event files through the watermarked window aggregation,
-    returning the list of per-batch appended (finalized) window frames.
-    ``ts`` is epoch seconds."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    events = reader.json(events_dir).select(
-        "appid", "price", F.timestamp_seconds(F.col("ts")).alias("event_time")
-    )
-    out = windowed_price_stats(
-        events,
-        window_duration=window_duration,
-        watermark_delay=watermark_delay,
-    )
-
-    batches = []
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batches.append(batch_df.toPandas())
-
-    q = (
-        out.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return batches
-
-
 def run_windowed_to_table(
     spark,
     events_dir: str,
     work_dir: str,
     *,
-    schema: str = "appid long, price double, ts double",
     max_files_per_trigger: int | None = 1,
-    window_duration: str = "1 hour",
-    watermark_delay: str = "30 minutes",
     batch_shuffle_partitions: int | None = None,
 ) -> str:
-    """Production-shaped drain: each micro-batch's FINALIZED windows land in
-    a ``windows/batch_id=N`` parquet directory (overwrite →
-    replay-idempotent). Append mode emits each window exactly once, so the
-    union over batch dirs IS the result table — no dedup needed downstream.
+    """Drain JSON event files through the watermarked window aggregation:
+    each micro-batch's FINALIZED windows land in a ``windows/batch_id=N``
+    parquet directory (overwrite → replay-idempotent). Append mode emits
+    each window exactly once, so the union over batch dirs IS the result
+    table — no dedup needed downstream.
 
     ``batch_shuffle_partitions`` pins ``spark.sql.shuffle.partitions`` for
     the drain (restored after) — the count is frozen into the checkpoint's
@@ -123,20 +82,15 @@ def run_windowed_to_table(
     """
     from .drain import drain_to_batch_dirs
 
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream.schema(EVENT_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     events = reader.json(events_dir).select(
         "appid", "price", F.timestamp_seconds(F.col("ts")).alias("event_time")
     )
-    out = windowed_price_stats(
-        events,
-        window_duration=window_duration,
-        watermark_delay=watermark_delay,
-    )
     return drain_to_batch_dirs(
         spark,
-        out,
+        windowed_price_stats(events),
         os.path.join(work_dir, "windows"),
         os.path.join(work_dir, "window_checkpoint"),
         output_mode="append",

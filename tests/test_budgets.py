@@ -91,10 +91,12 @@ STEAL_RETRY_MIN = 0.02
 
 
 def _cpu_jiffies() -> tuple[int, int]:
-    """(steal, total) jiffies from the aggregate /proc/stat cpu line."""
+    """(steal, total) jiffies from the aggregate /proc/stat cpu line.
+    guest and guest_nice are already counted inside user and nice, so only
+    the first eight fields form the total."""
     with open("/proc/stat") as f:
         vals = [int(x) for x in f.readline().split()[1:]]
-    return (vals[7] if len(vals) > 7 else 0), sum(vals)
+    return (vals[7] if len(vals) > 7 else 0), sum(vals[:8])
 
 
 def _steal_fraction(before: tuple[int, int], after: tuple[int, int]) -> float:

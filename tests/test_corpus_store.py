@@ -163,6 +163,25 @@ def test_batch_id_partition_column_and_pruned_reads(spark, tmp_path):
     )[1].split("]")[0], "batch_id filter did not prune at the scan"
 
 
+def test_read_schema_follows_a_recreated_store(spark, tmp_path):
+    """read() caches a table's schema, but a store recreated at the same
+    root with an extra column must serve that column."""
+    import shutil
+
+    root = str(tmp_path / "s")
+    st = CorpusStore(root, tables=("hashes",))
+    st.admit({"hashes": spark.range(3).select(F.col("id").alias("h"))}, 0)
+    assert set(st.read(spark, "hashes").columns) == {"h", "batch_id"}
+
+    shutil.rmtree(root)
+    st = CorpusStore(root, tables=("hashes",))
+    wider = spark.range(3).select(F.col("id").alias("h"), F.lit(7).alias("extra"))
+    st.admit({"hashes": wider}, 0)
+    df = st.read(spark, "hashes")
+    assert set(df.columns) == {"h", "extra", "batch_id"}
+    assert {r.extra for r in df.collect()} == {7}
+
+
 def test_compaction_serve_equivalence_and_crash_safety(spark, tmp_path):
     """Five admitted batches; serve-side answers (doc-tier verdicts, KMV
     estimate via merge, Bloom probe) are IDENTICAL before and after

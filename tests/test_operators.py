@@ -3054,6 +3054,27 @@ def test_bloom_no_false_negatives_and_merge_equals_direct(spark):
     assert res.filter("n_hits != 1 OR n_probed != 1").count() == 0
 
 
+def test_bloom_rejects_fewer_than_one_hash(spark):
+    """With no hash positions every probe would pass the all-positions-set
+    test, so both the build and the probe refuse ``n_hashes < 1``."""
+    import pytest
+
+    from steam_data_engineer_project_spark.operators.bloom import (
+        bloom_bitset,
+        bloom_probe_count,
+    )
+
+    vals = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    bits = bloom_bitset(vals, "v", m_bits=1 << 10, n_hashes=2)
+    for n_hashes in (0, -1):
+        with pytest.raises(ValueError, match="n_hashes"):
+            bloom_bitset(vals, "v", m_bits=1 << 10, n_hashes=n_hashes)
+        with pytest.raises(ValueError, match="n_hashes"):
+            bloom_probe_count(
+                vals, "v", "id", bits, m_bits=1 << 10, n_hashes=n_hashes
+            )
+
+
 def test_bloom_probe_matches_explode_aggregate_form(spark):
     """Round-13 optimization guard: the per-hash broadcast-join probe
     (h narrow joins + row-wise conjunction) must emit exactly the

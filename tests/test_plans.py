@@ -155,6 +155,16 @@ def test_star_denorm_broadcasts_dimensions(spark):
     assert all(k.startswith("o_orderkey") for k in smj), smj
 
 
+def test_session_pins_join_preference_and_dataframe_debugging(spark):
+    """get_spark() fixes both settings as constants: the planner may pick
+    shuffled-hash joins, and PySpark's per-call DataFrame debugging is
+    off."""
+    assert spark.conf.get("spark.sql.join.preferSortMergeJoin") == "false"
+    assert (
+        spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    )
+
+
 def test_bucketed_tables_join_without_exchange(spark):
     """SCALE.md's co-located join story, demonstrated: two tables written
     bucketed+sorted on the join key sort-merge-join with ZERO Exchange in

@@ -367,7 +367,7 @@ def test_apply_in_pandas_with_state_matches_batch_crawl_state(spark):
         batch_crawl_state,
     )
     from steam_data_engineer_project_spark.streaming.stateful import (
-        run_crawl_state_stream,
+        run_crawl_state_to_table,
     )
 
     base = os.path.join(os.path.dirname(os.path.dirname(__file__)), ".scratch")
@@ -391,15 +391,17 @@ def test_apply_in_pandas_with_state_matches_batch_crawl_state(spark):
         events_dir = os.path.join(work, "events")
         msgs.repartition(3).write.mode("overwrite").json(events_dir)
 
-        batches = run_crawl_state_stream(
+        out_dir = run_crawl_state_to_table(
             spark,
             events_dir,
-            os.path.join(work, "ckpt"),
+            os.path.join(work, "engine"),
             max_files_per_trigger=1,  # force several micro-batches
         )
-        assert len(batches) >= 3  # state really crossed batch boundaries
+        # state really crossed batch boundaries
+        assert sum(d.startswith("batch_id=") for d in os.listdir(out_dir)) >= 3
+        updates = spark.read.parquet(out_dir).toPandas()
         final = (
-            pd.concat(batches)
+            updates.sort_values("batch_id", kind="stable")
             .groupby("appid", as_index=False)
             .last()  # the LAST emission per key is the converged state
             .sort_values("appid")
@@ -419,11 +421,28 @@ def test_apply_in_pandas_with_state_matches_batch_crawl_state(spark):
             final[want.columns].astype(want.dtypes.to_dict()), want
         )
 
-        # resume from the checkpoint: nothing new to process, state intact
-        again = run_crawl_state_stream(
-            spark, events_dir, os.path.join(work, "ckpt")
-        )
-        assert sum(len(b) for b in again) == 0
+        # resume from the checkpoint: nothing new to process, so no batch
+        # runs — no new commit, and no batch directory is rewritten (a
+        # re-run of the last batch would overwrite it with the same rows)
+        def snapshot():
+            commits = os.path.join(work, "engine", "stateful_checkpoint", "commits")
+            batches = {}
+            for d in sorted(os.listdir(out_dir)):
+                if d.startswith("batch_id="):
+                    p = os.path.join(out_dir, d)
+                    batches[d] = (
+                        os.stat(p).st_mtime_ns,
+                        sorted(
+                            (f, os.stat(os.path.join(p, f)).st_mtime_ns)
+                            for f in os.listdir(p)
+                        ),
+                    )
+            return sorted(os.listdir(commits)), batches
+
+        before = snapshot()
+        run_crawl_state_to_table(spark, events_dir, os.path.join(work, "engine"))
+        assert snapshot() == before
+        assert spark.read.parquet(out_dir).count() == len(updates)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -437,10 +456,8 @@ def test_watermarked_window_finalizes_and_drops_late_data(spark):
     import json as _json
     import time as _time
 
-    import pandas as pd
-
     from steam_data_engineer_project_spark.streaming.windowed import (
-        run_windowed_stream,
+        run_windowed_to_table,
     )
 
     H = 3600.0
@@ -483,10 +500,8 @@ def test_watermarked_window_finalizes_and_drops_late_data(spark):
         # batch 4: advances the watermark so the 13-14h window emits too.
         write_file("f4.json", [{"appid": 1, "price": 2.0, "ts": 16 * H}])
 
-        batches = run_windowed_stream(
-            spark, events_dir, os.path.join(work, "ckpt")
-        )
-        got = pd.concat(batches, ignore_index=True)
+        out_dir = run_windowed_to_table(spark, events_dir, work)
+        got = spark.read.parquet(out_dir).toPandas()
         rows = {
             (int(r.window_start.timestamp()), r.appid): (
                 r.n_events,
@@ -503,6 +518,7 @@ def test_watermarked_window_finalizes_and_drops_late_data(spark):
             (int(11 * H), 1): (1, 6.0),
             (int(13 * H), 2): (1, 9.0),
         }, rows
+        assert len(got) == len(rows)  # each window emitted exactly once
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -518,10 +534,8 @@ def test_windowed_replay_order_rides_on_mtime_not_write_order(spark):
     exactly the in-order result (including dropping the late event)."""
     import json as _json
 
-    import pandas as pd
-
     from steam_data_engineer_project_spark.streaming.windowed import (
-        run_windowed_stream,
+        run_windowed_to_table,
     )
 
     H = 3600.0
@@ -555,10 +569,8 @@ def test_windowed_replay_order_rides_on_mtime_not_write_order(spark):
         for i, name in enumerate(sorted(files)):
             os.utime(os.path.join(events_dir, name), (t0 + 2 * i,) * 2)
 
-        batches = run_windowed_stream(
-            spark, events_dir, os.path.join(work, "ckpt")
-        )
-        got = pd.concat(batches, ignore_index=True)
+        out_dir = run_windowed_to_table(spark, events_dir, work)
+        got = spark.read.parquet(out_dir).toPandas()
         rows = {
             (int(r.window_start.timestamp()), r.appid): (r.n_events, r.max_price)
             for r in got.itertuples()
@@ -569,6 +581,7 @@ def test_windowed_replay_order_rides_on_mtime_not_write_order(spark):
             (int(11 * H), 1): (1, 6.0),
             (int(13 * H), 2): (1, 9.0),
         }, rows
+        assert len(got) == len(rows)  # each window emitted exactly once
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
