@@ -494,10 +494,8 @@ def kmeans_int8(
     k: int = 8,
     n_iter: int = 3,
     qdf: DataFrame | None = None,
-    cache: bool = True,
     seed: str = "id",
     broadcast_state: bool = False,
-    persisted_out: list | None = None,
     state_out: list | None = None,
 ) -> DataFrame:
     """Fixed-iteration integer Lloyd k-means; returns one row per input id:
@@ -507,17 +505,12 @@ def kmeans_int8(
 
     Pass ``qdf`` (a precomputed :func:`quantized_vectors` frame) to share
     the quantization pass with other stages (the semdedup pair stage does).
-    ``cache`` persists the quantized projection — Lloyd makes ``n_iter + 1``
-    passes over it, and re-deriving it from the raw scan each pass is pure
-    waste; at 100 TB the same role is played by materializing the quantized
-    columns once (MEMORY_AND_DISK / a staging table) before iterating.
-    The persist is plan-keyed: repeated invocations over the same source
-    reuse ONE cache entry (Spark's cache manager dedups by canonicalized
-    plan), so bench loops don't accumulate copies; a long session
-    clustering MANY distinct corpora should pass ``cache=False``,
-    collect the handle via ``persisted_out`` (a list the persisted frame
-    is appended to, for ``.unpersist()`` once the result is materialized),
-    or ``spark.catalog.clearCache()`` between corpora.
+    The quantized base is persisted for the Lloyd loop only — its seed
+    collect and ``n_iter`` training passes would otherwise each re-derive
+    it from the raw scan — and released before this returns, so no call
+    leaves a cache entry behind. The returned assignment plan reads the
+    base once more; a caller that reads that plan more than once shares it
+    with ``localCheckpoint()`` (the semdedup suite does).
 
     ``seed`` picks the k seed rows — both engine-exact and oracle-replayable:
 
@@ -541,77 +534,76 @@ def kmeans_int8(
     the frozen model an incremental pipeline assigns LATER batches against
     (:func:`incremental_semantic_verdicts`) without re-clustering."""
     base = qdf if qdf is not None else quantized_vectors(df, vec_col, id_col)
-    if cache:
-        base = base.persist()
-        if persisted_out is not None:
-            persisted_out.append(base)
-
-    # init: k seed rows, state (cid, s=qv, c=1) — bounded k-row collect.
-    if seed == "hash":
-        order = [
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("s:"), F.col(id_col).cast("string"))), 1, 8
-                ),
-                16,
-                10,
-            ).cast("long"),
-            F.col(id_col),
-        ]
-    elif seed == "id":
-        order = [F.col(id_col)]
-    else:
-        raise ValueError(f"seed must be 'id' or 'hash', got {seed!r}")
-    cents = sorted(
-        (int(r[0]), [int(v) for v in r[1]], 1)
-        for r in base.orderBy(*order).limit(k).select(id_col, "qv").collect()
-    )
-    if not cents:
-        raise ValueError(f"empty corpus: no rows to seed {k} centroids from")
-    if len(cents) < k:
-        import warnings
-
-        warnings.warn(
-            f"seeded only {len(cents)} of {k} requested centroids "
-            f"(corpus has fewer rows); proceeding with {len(cents)}",
-            stacklevel=2,
-        )
-
-    # task count of the Arrow training passes (narrow over base — same
-    # partitioning); plan-only, no job. Decides per-iteration whether the
-    # partials collect is bounded enough to fold raw on the driver or must
-    # be reduced to ≤ k rows distributed first (_collect_partials).
-    n_tasks = base.rdd.getNumPartitions()
-    dim = len(cents[0][1])
-    for _ in range(n_iter):
-        # fused assign + per-task partial sums (one Arrow pass; guide
-        # §2.3 map-side aggregation — see _train_partials for the measured
-        # rationale), folded DRIVER-side over the collected rows — bounded
-        # at O(k) by _collect_partials (raw ≤ n_tasks·k rows when small,
-        # distributed-reduced to ≤ k rows past the bound), the same
-        # bounded-collect class as this loop's own per-iteration state and
-        # cheaper than the JVM groupBy it replaced (see _train_partials'
-        # docstring for the measured py4j/agg cost). Python ints are
-        # exact, so the fold order cannot change totals.
-        new: dict[int, tuple[list[int], int]] = {}
-        for r in _collect_partials(
-            _train_partials(base, id_col, cents, broadcast_state=broadcast_state),
-            n_tasks=n_tasks,
-            k=len(cents),
-            dim=dim,
-        ):
-            cid, c, s = int(r[0]), int(r[1]), r[2]
-            prev = new.get(cid)
-            if prev is None:
-                new[cid] = ([int(v) for v in s], c)
-            else:
-                ps, pc = prev
-                new[cid] = ([a + int(b) for a, b in zip(ps, s)], pc + c)
-        # an emptied cluster keeps its previous state (deterministic rule,
-        # mirrored in the SQL oracle)
+    base.persist()
+    try:
+        # init: k seed rows, state (cid, s=qv, c=1) — bounded k-row collect.
+        if seed == "hash":
+            order = [
+                F.conv(
+                    F.substring(
+                        F.md5(F.concat(F.lit("s:"), F.col(id_col).cast("string"))), 1, 8
+                    ),
+                    16,
+                    10,
+                ).cast("long"),
+                F.col(id_col),
+            ]
+        elif seed == "id":
+            order = [F.col(id_col)]
+        else:
+            raise ValueError(f"seed must be 'id' or 'hash', got {seed!r}")
         cents = sorted(
-            (cid, *(new.get(cid, (s, c)))) for cid, s, c in cents
+            (int(r[0]), [int(v) for v in r[1]], 1)
+            for r in base.orderBy(*order).limit(k).select(id_col, "qv").collect()
         )
+        if not cents:
+            raise ValueError(f"empty corpus: no rows to seed {k} centroids from")
+        if len(cents) < k:
+            import warnings
+
+            warnings.warn(
+                f"seeded only {len(cents)} of {k} requested centroids "
+                f"(corpus has fewer rows); proceeding with {len(cents)}",
+                stacklevel=2,
+            )
+
+        # task count of the Arrow training passes (narrow over base — same
+        # partitioning); plan-only, no job. Decides per-iteration whether the
+        # partials collect is bounded enough to fold raw on the driver or must
+        # be reduced to ≤ k rows distributed first (_collect_partials).
+        n_tasks = base.rdd.getNumPartitions()
+        dim = len(cents[0][1])
+        for _ in range(n_iter):
+            # fused assign + per-task partial sums (one Arrow pass; guide
+            # §2.3 map-side aggregation — see _train_partials for the measured
+            # rationale), folded DRIVER-side over the collected rows — bounded
+            # at O(k) by _collect_partials (raw ≤ n_tasks·k rows when small,
+            # distributed-reduced to ≤ k rows past the bound), the same
+            # bounded-collect class as this loop's own per-iteration state and
+            # cheaper than the JVM groupBy it replaced (see _train_partials'
+            # docstring for the measured py4j/agg cost). Python ints are
+            # exact, so the fold order cannot change totals.
+            new: dict[int, tuple[list[int], int]] = {}
+            for r in _collect_partials(
+                _train_partials(base, id_col, cents, broadcast_state=broadcast_state),
+                n_tasks=n_tasks,
+                k=len(cents),
+                dim=dim,
+            ):
+                cid, c, s = int(r[0]), int(r[1]), r[2]
+                prev = new.get(cid)
+                if prev is None:
+                    new[cid] = ([int(v) for v in s], c)
+                else:
+                    ps, pc = prev
+                    new[cid] = ([a + int(b) for a, b in zip(ps, s)], pc + c)
+            # an emptied cluster keeps its previous state (deterministic rule,
+            # mirrored in the SQL oracle)
+            cents = sorted(
+                (cid, *(new.get(cid, (s, c)))) for cid, s, c in cents
+            )
+    finally:
+        base.unpersist()
 
     if state_out is not None:
         state_out.extend(cents)
@@ -821,27 +813,15 @@ def train_ivf_codebook(
         raise ValueError("cannot train a codebook on an empty corpus")
     st: list = []
     # the returned assignment frame is lazy and unused — only the Lloyd
-    # training (driver-side, at build) and its final state are needed here.
-    # The training base persist is released right after: the fused pass
-    # below re-derives qv in its own projection, so the cache has no
-    # further consumer (a codebook is trained once per corpus release —
-    # leaking its cache entry would shadow serve-time memory for nothing).
-    ph: list = []
+    # training (driver-side, at build) and its final state are needed here;
+    # the fused pass below re-derives qv in its own projection.
     kmeans_int8(
-        df,
-        vec_col,
-        id_col,
-        k=n_centroids,
-        n_iter=n_iter,
-        state_out=st,
-        persisted_out=ph,
+        df, vec_col, id_col, k=n_centroids, n_iter=n_iter, state_out=st
     )
     fused = df.select(
         quantize_int8(vec_col).alias("qv"),
         _unit_micro_col(vec_col).alias("m"),
     )
-    for _p in ph:
-        _p.unpersist()
     agg: dict[int, tuple[list[int], int]] = {}
     for r in _collect_partials(
         _train_partials(fused, id_col, st, sum_col="m"),

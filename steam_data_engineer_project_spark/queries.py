@@ -455,30 +455,6 @@ _dsum = dsum
 _davg = davg
 
 
-#: the PREVIOUS invocation's persisted frames, per query slot. Spark's
-#: CacheManager matches persists by canonicalized plan, so without this a
-#: bench pass N+1 would silently serve pass N's InMemoryRelation instead of
-#: recomputing from the parquet inputs — min-over-passes must stay a
-#: cold-cache signal (round-12 verdict hygiene item 5). Within ONE
-#: invocation the persists keep serving their multi-consumer purpose.
-_LIVE_PERSISTS: dict[str, list] = {}
-
-
-def _rotate_persists(slot: str, handles: list) -> None:
-    """Unpersist the previous invocation's persisted frames for ``slot``,
-    then register ``handles`` (if any) as the new generation. Query bodies
-    call this at ENTRY with ``[]`` — before their own persists exist, so
-    the new generation starts cold — and assign ``_LIVE_PERSISTS[slot]``
-    directly once the new frames are persisted."""
-    for df in _LIVE_PERSISTS.pop(slot, []):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    if handles:
-        _LIVE_PERSISTS[slot] = handles
-
-
 # --------------------------------------------------------------------------
 # Relational core (SURVEY §2.2-§2.8 mapped onto the TPC-H-ish testdata)
 # --------------------------------------------------------------------------
@@ -2282,21 +2258,26 @@ def semdedup_cluster_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(~inc_cond, True)).alias("n_corpus"),
     ).first()
     k = _SEM_K * math.ceil(sizes_row["n"] / _SEM_SEED_UNIT)
-    # right-size the cached base for the Lloyd passes: each training pass
+    # right-size the shared base for the Lloyd passes: each training pass
     # is one Arrow task per partition, so partitions should hold enough
     # rows for the numpy matmul to dominate the per-task roundtrip
     # (guide §2.2 / §4.2). 64k rows ≈ 32 MB of qv per task; scale-adaptive
     # (1 partition at registry scale, thousands at 10⁹ vectors), never
-    # below one. coalesce() adds no Exchange; the one-time cache
-    # materialization computes the quantization at the coalesced
-    # parallelism, which below 64k rows is sub-second single-core work.
-    qdf = qdf.coalesce(max(1, math.ceil(sizes_row["n"] / 65536)))
-    # persist: the final N×k assignment pass feeds FOUR consumers (assign
-    # leg, size leg, both sides of the pair self-join) — uncached it would
-    # recompute the mapInPandas distance matrix per consumer.
+    # below one. coalesce() adds no Exchange; the one-time checkpoint
+    # computes the quantization at the coalesced parallelism, which below
+    # 64k rows is sub-second single-core work. localCheckpoint: both
+    # trainings, the final assignment, the pair leg and both incremental
+    # sides read this base — unshared, each would rescan, re-spread and
+    # re-quantize the embeddings.
+    qdf = qdf.coalesce(max(1, math.ceil(sizes_row["n"] / 65536))).localCheckpoint()
+    # localCheckpoint: the final N×k assignment pass feeds FOUR consumers
+    # (assign leg, size leg, both sides of the pair self-join) — unshared
+    # it would recompute the Arrow distance pass per consumer. Checkpoint
+    # blocks belong to the returned plan (reclaimed with it), so nothing
+    # outlives this invocation the way a persist's CacheManager entry does.
     #
     # The full-corpus training and the incremental-corpus training are
-    # INDEPENDENT driver-side job chains over the same cached base; run
+    # INDEPENDENT driver-side job chains over the same checkpointed base; run
     # them on two driver threads so each chain's small jobs back-fill the
     # cores the other leaves idle (guide §2.6 — measured: the suite's
     # build time is ~70% driver-loop latency, and the two chains overlap
@@ -2306,11 +2287,6 @@ def semdedup_cluster_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_q, inc_q = qdf.filter(~inc_cond), qdf.filter(inc_cond)
     k_inc = _SEM_K * math.ceil(sizes_row["n_corpus"] / _SEM_SEED_UNIT)
 
-    # drop the PREVIOUS invocation's caches before this one persists: a
-    # later bench pass must recompute from the parquet inputs, not
-    # plan-match the earlier pass's InMemoryRelation (see _rotate_persists)
-    _rotate_persists("dedup_embedding_cosine", [])
-
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
@@ -2318,7 +2294,7 @@ def semdedup_cluster_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _train_full():
         return kmeans_int8(
             None, "embedding", "vec_id", k=k, n_iter=_SEM_ITER, qdf=qdf
-        ).persist()
+        ).localCheckpoint()
 
     def _train_inc():
         return incremental_semantic_verdicts(
@@ -2338,12 +2314,6 @@ def semdedup_cluster_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         fut_verdicts = pool.submit(inheritable_thread_target(spark)(_train_inc))
         assigned = fut_assigned.result()
         verdicts = fut_verdicts.result()
-    # this invocation's persisted frames: the shared quantized base (qdf,
-    # persisted inside kmeans_int8), the corpus-side base the incremental
-    # training persisted (corpus_q — persist() is in-place, the handle is
-    # the frame itself), and the 4-consumer assignment frame. Registered
-    # for unpersist at the NEXT invocation's entry.
-    _LIVE_PERSISTS["dedup_embedding_cosine"] = [qdf, corpus_q, assigned]
     assign_leg = assigned.select(
         F.lit("assign").alias("part"),
         F.col("vec_id").alias("id_a"),
@@ -2384,7 +2354,7 @@ def semdedup_cluster_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # incremental legs: ≡5/≡7 (mod 10) = the incoming batch, rest = the
-    # existing corpus. Shares the persisted quantized base (both sides are
+    # existing corpus. Shares the checkpointed quantized base (both sides are
     # filters over `qdf`), so the only new corpus-scale work is the frozen
     # corpus clustering and the batch-vs-corpus pair join. (`verdicts`
     # was trained on the second driver thread above.)
@@ -6613,16 +6583,8 @@ def corpus_store_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         kk = _SEM_K * math.ceil(n_base / _SEM_SEED_UNIT)
         qb = quantized_vectors(vbase, "embedding", "vec_id")
         st: list = []
-        build_persists: list = []
         assign_base = kmeans_int8(
-            None,
-            "embedding",
-            "vec_id",
-            k=kk,
-            n_iter=_SEM_ITER,
-            qdf=qb,
-            state_out=st,
-            persisted_out=build_persists,
+            None, "embedding", "vec_id", k=kk, n_iter=_SEM_ITER, qdf=qb, state_out=st
         )
         store.write_codebook(semantic_state_table(spark, st))
 
@@ -6664,12 +6626,6 @@ def corpus_store_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 },
                 batch_id=bid,
             )
-        # the quantized training base served its last consumer when batch 0's
-        # sem slice was admitted above — release it (the store build runs
-        # once per session; a leaked cache entry would shadow every later
-        # pass's memory for nothing)
-        for _p in build_persists:
-            _p.unpersist()
         per[ckey] = root
     else:
         # refresh the live store's mtime so the cross-process scratch

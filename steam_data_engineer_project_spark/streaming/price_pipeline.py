@@ -214,6 +214,7 @@ def run_price_pipeline(
         except BaseException:
             batch_df.unpersist()
             raise
+        batch_state = None
         try:
             prices_fut = prices_pool.submit(
                 inheritable_thread_target(spark)(_write_prices)
@@ -262,12 +263,13 @@ def run_price_pipeline(
                 num_buckets=n_buckets,
                 touched=touched,
             )
-            batch_state.unpersist()
             prices_fut.result()  # surface a prices-write failure to the engine
         finally:
             # join the writer thread even when the chain raised — the engine
             # must not see the batch "done" with a write still in flight
             prices_pool.shutdown(wait=True)
+            if batch_state is not None:
+                batch_state.unpersist()
             batch_df.unpersist()
 
     saved = spark.conf.get("spark.sql.shuffle.partitions")

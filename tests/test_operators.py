@@ -2557,7 +2557,7 @@ def test_partials_reduced_distributed_when_collect_scales_with_tasks(
         return {
             (int(r[0]), int(r[1]))
             for r in cl.kmeans_int8(
-                None, "embedding", "vec_id", k=24, n_iter=3, qdf=qdf, cache=False
+                None, "embedding", "vec_id", k=24, n_iter=3, qdf=qdf
             )
             .select("vec_id", "cluster_id")
             .collect()
@@ -2844,24 +2844,43 @@ def test_kmeans_overflow_guard_raises_past_int64_bound(spark):
         _assign_to_centroids(base, "vec_id", [(0, [127] * 64, huge_count)])
 
 
-def test_kmeans_persisted_out_exposes_releasable_handle(spark):
-    """persisted_out hands the caller the persisted quantized frame so a
-    long session clustering many corpora can release the cache instead of
-    accumulating plan-keyed entries."""
+def test_clustering_callers_leave_no_cache_entry(spark):
+    """Every persist a clustering call makes is released before the call
+    returns, so a caller that never sees a handle leaks nothing: after
+    each result is collected, Spark's CacheManager is empty again. Two
+    registry invocations in a row pin that the second one neither finds
+    nor leaves the first one's entries."""
     from steam_data_engineer_project_spark.operators.clustering import (
+        incremental_semantic_verdicts,
         kmeans_int8,
+        semantic_dedup_pairs,
     )
+    from steam_data_engineer_project_spark.queries import QUERIES
 
-    rows = [(i, [float(i % 5)] * 4 ) for i in range(20)]
+    rows = [(i, [float(i % 5), float(i % 3), 1.0, 0.5]) for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    handles = []
-    out = kmeans_int8(
-        df, "embedding", "vec_id", k=2, n_iter=1, persisted_out=handles
-    )
-    out.count()
-    assert len(handles) == 1 and handles[0].is_cached
-    handles[0].unpersist(blocking=True)
-    assert not handles[0].is_cached
+    corpus, incoming = df.filter("vec_id < 30"), df.filter("vec_id >= 30")
+    sem = QUERIES["dedup_embedding_cosine"].spark
+    calls = [
+        ("kmeans_int8", lambda: kmeans_int8(df, "embedding", "vec_id", k=3)),
+        (
+            "semantic_dedup_pairs",
+            lambda: semantic_dedup_pairs(df, "embedding", "vec_id", k=3),
+        ),
+        (
+            "incremental_semantic_verdicts",
+            lambda: incremental_semantic_verdicts(
+                corpus, incoming, "embedding", "vec_id", k=3
+            ),
+        ),
+        ("dedup_embedding_cosine", lambda: sem(spark, "/root/testdata/sf0.001")),
+        ("dedup_embedding_cosine again", lambda: sem(spark, "/root/testdata/sf0.001")),
+    ]
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for name, build in calls:
+        build().collect()
+        assert cache_manager.isEmpty(), f"{name} left a CacheManager entry"
 
 
 def test_builder_fingerprint_tracks_names_and_nested_code():

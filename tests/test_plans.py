@@ -165,6 +165,66 @@ def test_session_pins_join_preference_and_dataframe_debugging(spark):
     )
 
 
+def test_every_persist_is_released_by_the_function_that_makes_it():
+    """Caches must not outlive the data they describe: every ``.persist(``
+    in the package sits in a function whose ``finally`` block calls
+    ``.unpersist(`` on the same frame, so no exit path (return or raise)
+    leaves a CacheManager entry behind. A frame that a RETURNED lazy plan
+    reads more than once is shared with ``localCheckpoint()`` instead,
+    whose blocks go with the plan."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / (
+        "steam_data_engineer_project_spark"
+    )
+
+    def is_call(node, attr):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == attr
+        )
+
+    persists, offenders = 0, []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        parent = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+
+        def owner(node):
+            while node in parent:
+                node = parent[node]
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    return node
+            return None
+
+        released: dict = {}  # function -> frames its finally blocks unpersist
+        for t in ast.walk(tree):
+            if isinstance(t, ast.Try):
+                released.setdefault(owner(t), set()).update(
+                    ast.unparse(c.func.value)
+                    for stmt in t.finalbody
+                    for c in ast.walk(stmt)
+                    if is_call(c, "unpersist")
+                )
+        for call in ast.walk(tree):
+            if not is_call(call, "persist"):
+                continue
+            persists += 1
+            up = parent[call]
+            if isinstance(up, ast.Expr):  # frame.persist()
+                frame = ast.unparse(call.func.value)
+            elif isinstance(up, ast.Assign) and isinstance(up.targets[0], ast.Name):
+                frame = up.targets[0].id  # frame = <plan>.persist()
+            else:
+                frame = None  # an unnamed persist cannot be released
+            if frame is None or frame not in released.get(owner(call), set()):
+                rel = path.relative_to(pkg.parent)
+                offenders.append(f"{rel}:{call.lineno} {ast.unparse(call)[:60]}")
+    assert persists, "the scan found no persist at all: is the package path right?"
+    assert not offenders, offenders
+
+
 def test_bucketed_tables_join_without_exchange(spark):
     """SCALE.md's co-located join story, demonstrated: two tables written
     bucketed+sorted on the join key sort-merge-join with ZERO Exchange in
@@ -535,7 +595,7 @@ def test_packing_costs_exactly_one_shuffle(spark):
 #: fixture and justify in the commit).
 EXCHANGE_BUDGET = {
     "ann_exact_suite": 4,  # round 7: the two standalone exact-scoring queries folded (2 + 2) to free a registry slot for corpus_store_suite
-    "ann_ivf_topk": 7,  # round 7: trained leg SERVES a stored parquet codebook (train runs once at the write action). Round 13: +2 — the one-time train's quantized-base persist is now RELEASED after training (cache hygiene), so the served plan honestly recomputes the _spread repartition + quantization from parquet instead of plan-matching the training's leaked InMemoryRelation; the two "new" exchanges were always executed on the first pass and merely hidden from warm plans before
+    "ann_ivf_topk": 7,  # round 7: trained leg SERVES a stored parquet codebook (train runs once at the write action). Round 13: +2 — kmeans_int8 releases its training persist before it returns (no persist outlives the call that made it), so the served plan recomputes the _spread repartition + quantization from parquet; no cache entry of the training is left for it to plan-match
     "ann_lsh_suite": 2,
     "cdc_suite": 3,
     "crawl_state_registry": 2,
@@ -548,7 +608,7 @@ EXCHANGE_BUDGET = {
     "dedup_cluster_canonical": 2,
     "dedup_corpus_lines": 12,  # +3 boilerplate leg: distinct-doc line count agg + the sharded top-m window (WindowGroupLimit-pruned) + its re-shard; +4 substring leg (shared-window distinct + doc-count agg + per-doc start-list agg + the left join back onto the token table)
     "dedup_cross_corpus": 34,  # two corpus-vs-corpus jobs: contamination + incremental verdicts (each an inverted-index build per side + pair agg) + the exact-tier distinct/join; +4 bloom leg (bitset distinct + bit_or agg on ≤131k words, per-value all-hit agg, per-doc count — the probe join itself is broadcast, no train shuffle); +6 span leg (corpus + batch window distincts, the corpus-side semi-join, per-doc start-list agg, coverage join — the batch side broadcasts both ways); −4 after the contamination and bloom legs started sharing one checkpointed shingle pass per side
-    "dedup_embedding_cosine": 6,  # +4 semdedup legs: pair self-join + size agg over the persisted quantized base (assignment itself is shuffle-free); round-6 incremental legs fit free — the batch side broadcasts and the frozen-state kmeans aggs run eagerly outside this plan
+    "dedup_embedding_cosine": 6,  # 2 lsh-leg spread repartitions (the bucket self-join broadcasts) + 4 semdedup: size agg, both sides of the pair self-join, the incremental per-batch stats agg. The quantized base and the final assignment are shared through localCheckpoint (no persist outlives the call that made it), so the audited plan reads their checkpoint RDDs; the assignment itself is shuffle-free, the incremental batch side broadcasts, and the Lloyd aggs run eagerly outside this plan
     "dedup_exact_docs": 8,  # +6 kmv leg: bigram distinct + WindowGroupLimit-pruned top-k + exact countDistinct comparison
     "sketch_merge_suite": 33,  # deliberately a 3-shard lifecycle in ONE plan: each of 4 sketch legs builds 3 per-day summaries (each its own distinct/agg/window) before merging — in production those are separate daily jobs storing tiny tables; every post-summary exchange here carries bounded rows (≤k·groups, ≤m/32 words, ≤top_m·shards)
     "dedup_minhash_lsh_docs": 11,

@@ -81,7 +81,7 @@ def main() -> None:
             k = Q._SEM_K * math.ceil(src.count() / Q._SEM_SEED_UNIT)
             assigned = kmeans_int8(
                 None, "embedding", "vec_id", k=k, n_iter=Q._SEM_ITER, qdf=qdf
-            ).persist()
+            ).localCheckpoint()
             return semantic_dedup_pairs(
                 None,
                 "embedding",
