@@ -8,13 +8,30 @@ and the session timezone pinned to UTC so timestamp semantics are
 reproducible against external oracles (the reference keeps
 ``Asia/Ho_Chi_Minh`` only for date-string partition keys — see
 ``functions.scalars.date_partition_key``; cite reference utils/common.py:142-144).
+
+A driver JVM spends most of its start-up loading and verifying classes from
+Spark's jars. The call that launches it therefore starts it from a dynamic
+AppCDS archive of those classes (JDK 17+): pre-parsed, pre-verified class
+metadata mapped from a file under ``$XDG_CACHE_HOME/steam-spark/`` (default
+``~/.cache/steam-spark/``), created once per host by the first launch that
+finds none. It holds class metadata derived from the JDK and the jars, keyed
+by both, never data or results; deleting the directory resets it.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import subprocess
+from contextlib import contextmanager, nullcontext
+from typing import NamedTuple
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+from .fsutil import exclusive_flock
 
 
 def get_spark(
@@ -27,7 +44,9 @@ def get_spark(
     """Build (or fetch) the tuned SparkSession.
 
     Parameters default from env: ``SPARK_GRAFT_CPUS`` controls local
-    parallelism (default 32 in the test environment).
+    parallelism (default ``os.cpu_count()``, or 8 if that is unknown).
+    The call that launches the JVM starts it from the class archive (see
+    the module docstring), creating the archive first if none exists.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
@@ -81,6 +100,151 @@ def get_spark(
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    # Decided before launch, and only by the call that launches the JVM:
+    # a JVM already running keeps the options it started with.
+    launches = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+    archive = _plan_class_archive() if launches else None
+    if archive is not None:
+        # defaultJavaOptions, so callers' extraJavaOptions stay theirs
+        builder = builder.config("spark.driver.defaultJavaOptions", archive.java_options)
+    with _spark_conf_dir(archive.conf_dir) if archive else nullcontext():
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if archive is not None and archive.create:
+        _dump_class_archive(spark, archive)
     return spark
+
+
+class _ClassArchive(NamedTuple):
+    path: str
+    java_home: str
+    #: the empty directory the launch uses as SPARK_CONF_DIR
+    conf_dir: str
+    #: True: this launch records its classes and dumps the archive
+    create: bool
+
+    @property
+    def java_options(self) -> str:
+        # -Xlog:cds*=off: the JVM's stdout is this process's stdout, and a
+        # dump (or an archive the JVM declines) logs hundreds of warnings there
+        if self.create:
+            return "-XX:+RecordDynamicDumpInfo -Xlog:cds*=off"
+        return f"-XX:SharedArchiveFile={self.path} -Xlog:cds*=off"
+
+
+def _plan_class_archive() -> _ClassArchive | None:
+    """How the launching call uses the class archive, or None to start the
+    JVM exactly as without one.
+
+    The archive records the launch class path, whose first entry is the
+    conf directory, and a dump fails on a non-empty directory there. So
+    the launch points ``SPARK_CONF_DIR`` at an empty directory, which is
+    only done when the user has not set it and ``$SPARK_HOME/conf`` holds
+    only ``*.template`` files, so Spark would read nothing there anyway."""
+    if "SPARK_CONF_DIR" in os.environ:
+        return None
+    spark_home = _find_spark_home()
+    conf = os.path.join(spark_home, "conf")
+    if os.path.isdir(conf) and not all(n.endswith(".template") for n in os.listdir(conf)):
+        return None
+    # spark-class runs $JAVA_HOME/bin/java, else the java on PATH
+    java = (
+        os.path.join(os.environ["JAVA_HOME"], "bin", "java")
+        if os.environ.get("JAVA_HOME")
+        else shutil.which("java")
+    )
+    jars = os.path.join(spark_home, "jars")
+    if not java or not os.path.isfile(java) or not os.path.isdir(jars):
+        return None
+    java_home = os.path.dirname(os.path.dirname(os.path.realpath(java)))
+    version = _java_version(java_home) or ""
+    major = version.split(".")[0].split("-")[0]  # "17.0.20", "21-ea"
+    if not major.isdigit() or int(major) < 17:
+        return None
+    key = hashlib.sha256(f"{java_home}\0{version}\0".encode())
+    with os.scandir(jars) as entries:
+        for e in sorted(entries, key=lambda e: e.name):
+            st = e.stat()
+            key.update(f"{e.name}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    cache = os.path.join(
+        os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache"),
+        "steam-spark",
+    )
+    conf_dir = os.path.join(cache, "empty-conf")
+    try:
+        os.makedirs(conf_dir, exist_ok=True)
+    except OSError:  # unwritable cache
+        return None
+    if os.listdir(conf_dir):
+        return None
+    path = os.path.join(cache, f"spark-classes-{key.hexdigest()[:20]}.jsa")
+    create = not os.path.exists(path)
+    # an existing archive is used from a read-only cache too
+    if create and not (
+        os.access(cache, os.W_OK) and os.access(os.path.join(java_home, "bin", "jcmd"), os.X_OK)
+    ):
+        return None
+    return _ClassArchive(path, java_home, conf_dir, create)
+
+
+def _java_version(java_home: str) -> str | None:
+    """``JAVA_VERSION`` from the JDK's ``release`` file."""
+    try:
+        with open(os.path.join(java_home, "release")) as f:
+            for line in f:
+                if line.startswith("JAVA_VERSION="):
+                    return line.split("=", 1)[1].strip().strip('"')
+    except OSError:
+        pass
+    return None
+
+
+@contextmanager
+def _spark_conf_dir(path: str):
+    """Set ``SPARK_CONF_DIR`` for the launch only: the JVM keeps it in its
+    environment, this process does not."""
+    os.environ["SPARK_CONF_DIR"] = path
+    try:
+        yield
+    finally:
+        del os.environ["SPARK_CONF_DIR"]
+
+
+def _dump_class_archive(spark: SparkSession, archive: _ClassArchive) -> None:
+    """Dump the recording JVM's loaded classes to ``archive.path``.
+
+    The dump goes to a temp file, published by ``os.replace`` only when
+    ``jcmd`` succeeds: a JVM mapping a truncated archive dies of SIGBUS.
+    Any failure leaves no archive, and the next launch records again."""
+    jvm = spark._jvm
+    system = jvm.java.lang.System
+    # a non-empty directory on the class path makes the dump kill the JVM
+    for entry in system.getProperty("java.class.path").split(os.pathsep):
+        if os.path.isdir(entry) and os.listdir(entry):
+            return
+    pid = jvm.java.lang.ProcessHandle.current().pid()
+    tmp = f"{archive.path}.{pid}.tmp"
+    try:
+        with exclusive_flock(archive.path + ".lock"):
+            if os.path.exists(archive.path):
+                return  # a concurrent launch created it first
+            # The JVM reports a finished dump on its System.out, which is
+            # this process's stdout: capture it there instead. jcmd exits 0
+            # even when the dump fails, so that report is the success signal.
+            stdout, report = system.out, jvm.java.io.ByteArrayOutputStream()
+            system.setOut(jvm.java.io.PrintStream(report, True))
+            try:
+                done = subprocess.run(
+                    [os.path.join(archive.java_home, "bin", "jcmd"), str(pid),
+                     "VM.cds", "dynamic_dump", tmp],
+                    capture_output=True, timeout=300,
+                )
+            finally:
+                system.setOut(stdout)
+            if done.returncode == 0 and "Dynamic dump to file" in report.toString():
+                os.replace(tmp, archive.path)
+    except (OSError, subprocess.SubprocessError):
+        pass  # run unshared
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
