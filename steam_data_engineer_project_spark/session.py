@@ -24,7 +24,6 @@ import hashlib
 import os
 import shutil
 import subprocess
-from contextlib import contextmanager, nullcontext
 from typing import NamedTuple
 
 from pyspark import SparkContext
@@ -103,12 +102,22 @@ def get_spark(
     # Decided before launch, and only by the call that launches the JVM:
     # a JVM already running keeps the options it started with.
     launches = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
-    archive = _plan_class_archive() if launches else None
+    archive = (
+        _plan_class_archive((extra_conf or {}).get("spark.driver.extraClassPath", ""))
+        if launches
+        else None
+    )
     if archive is not None:
         # defaultJavaOptions, so callers' extraJavaOptions stay theirs
         builder = builder.config("spark.driver.defaultJavaOptions", archive.java_options)
-    with _spark_conf_dir(archive.conf_dir) if archive else nullcontext():
+        # for the launch only: the JVM keeps it in its environment, this
+        # process does not
+        os.environ["SPARK_CONF_DIR"] = archive.conf_dir
+    try:
         spark = builder.getOrCreate()
+    finally:
+        if archive is not None:
+            del os.environ["SPARK_CONF_DIR"]
     spark.sparkContext.setLogLevel("WARN")
     if archive is not None and archive.create:
         _dump_class_archive(spark, archive)
@@ -132,16 +141,25 @@ class _ClassArchive(NamedTuple):
         return f"-XX:SharedArchiveFile={self.path} -Xlog:cds*=off"
 
 
-def _plan_class_archive() -> _ClassArchive | None:
+def _plan_class_archive(extra_class_path: str) -> _ClassArchive | None:
     """How the launching call uses the class archive, or None to start the
     JVM exactly as without one.
 
-    The archive records the launch class path, whose first entry is the
-    conf directory, and a dump fails on a non-empty directory there. So
+    The archive records the launch class path, and a dump fails on a
+    non-empty directory there. Its first entry is the conf directory, so
     the launch points ``SPARK_CONF_DIR`` at an empty directory, which is
     only done when the user has not set it and ``$SPARK_HOME/conf`` holds
-    only ``*.template`` files, so Spark would read nothing there anyway."""
+    only ``*.template`` files, so Spark would read nothing there anyway.
+    A non-empty directory among the entries the launcher takes from the
+    environment or ``extra_class_path`` would fail every dump, so it
+    skips the archive too, rather than record on every launch."""
     if "SPARK_CONF_DIR" in os.environ:
+        return None
+    entries = [extra_class_path] + [
+        os.environ.get(v, "")
+        for v in ("SPARK_CLASSPATH", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+    ]
+    if any(_nonempty_dir(p) for e in entries for p in e.split(os.pathsep)):
         return None
     spark_home = _find_spark_home()
     conf = os.path.join(spark_home, "conf")
@@ -199,15 +217,8 @@ def _java_version(java_home: str) -> str | None:
     return None
 
 
-@contextmanager
-def _spark_conf_dir(path: str):
-    """Set ``SPARK_CONF_DIR`` for the launch only: the JVM keeps it in its
-    environment, this process does not."""
-    os.environ["SPARK_CONF_DIR"] = path
-    try:
-        yield
-    finally:
-        del os.environ["SPARK_CONF_DIR"]
+def _nonempty_dir(path: str) -> bool:
+    return bool(path) and os.path.isdir(path) and bool(os.listdir(path))
 
 
 def _dump_class_archive(spark: SparkSession, archive: _ClassArchive) -> None:
@@ -219,9 +230,8 @@ def _dump_class_archive(spark: SparkSession, archive: _ClassArchive) -> None:
     jvm = spark._jvm
     system = jvm.java.lang.System
     # a non-empty directory on the class path makes the dump kill the JVM
-    for entry in system.getProperty("java.class.path").split(os.pathsep):
-        if os.path.isdir(entry) and os.listdir(entry):
-            return
+    if any(map(_nonempty_dir, system.getProperty("java.class.path").split(os.pathsep))):
+        return
     pid = jvm.java.lang.ProcessHandle.current().pid()
     tmp = f"{archive.path}.{pid}.tmp"
     try:

@@ -140,9 +140,10 @@ def test_only_the_launching_call_plans_or_dumps(spark, tmp_path, monkeypatch):
 
 
 def test_plan_keys_the_archive_by_jars_and_skips_a_live_conf_dir(tmp_path, monkeypatch):
-    """The archive name follows the jars (a touched jar gets a new one),
-    and a ``$SPARK_HOME/conf`` with anything but templates launches
-    without an archive and writes nothing."""
+    """The archive name follows the jars (a touched jar gets a new one);
+    a non-empty directory bound for the class path, or a
+    ``$SPARK_HOME/conf`` with anything but templates, launches without an
+    archive and writes nothing."""
     home = tmp_path / "spark-home"
     (home / "conf").mkdir(parents=True)
     (home / "jars").mkdir()
@@ -153,14 +154,19 @@ def test_plan_keys_the_archive_by_jars_and_skips_a_live_conf_dir(tmp_path, monke
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
     monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
 
-    plan = session._plan_class_archive()
+    plan = session._plan_class_archive("")
     assert plan is not None and plan.create
     assert os.path.dirname(plan.path) == str(tmp_path / "cache" / "steam-spark")
     assert os.listdir(plan.conf_dir) == []
     os.utime(jar, ns=(0, 0))
-    assert session._plan_class_archive().path != plan.path
+    assert session._plan_class_archive("").path != plan.path
+    # a non-empty directory the launcher puts on the class path
+    assert session._plan_class_archive(str(home / "jars")) is None
+    monkeypatch.setenv("HADOOP_CONF_DIR", str(home / "conf"))
+    assert session._plan_class_archive("") is None
+    monkeypatch.delenv("HADOOP_CONF_DIR")
 
     (home / "conf" / "spark-defaults.conf").write_text("spark.master local[1]\n")
     shutil.rmtree(tmp_path / "cache")
-    assert session._plan_class_archive() is None
+    assert session._plan_class_archive("") is None
     assert not (tmp_path / "cache").exists()
