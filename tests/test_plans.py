@@ -699,17 +699,19 @@ def test_every_query_within_its_shuffle_budget(plans):
 #: and driver-gated jobs) plus the noop write — read from the driver's
 #: status store. The Exchange budget above sees only the served plan; the
 #: jobs a builder fires before it returns are where an extra pass or a
-#: re-computation hides. Stage counts do not move with host load, and
+#: re-computation hides. Stage counts do not move with host load and
 #: measured the same at local[2] and local[4], so the pins carry no
 #: headroom: a count going UP fails, one going DOWN should be re-pinned.
-#: A failure prints the measured entry to paste once the extra work is
-#: intended.
+#: The few that vary between warm runs vary because AQE re-plans a join by
+#: whichever stages finished first; those pin the measured maximum and say
+#: where. A failure prints the measured entry to paste once the extra work
+#: is intended.
 STAGE_BUDGET = {
     "ann_exact_suite": 7,
     "ann_ivf_topk": 18,
     "ann_lsh_suite": 9,
     "cdc_suite": 3,
-    "corpus_pipeline_e2e": 85,  # 82-85 measured: AQE picks the decontamination joins' and the leakage join's strategy and build side by which sibling stages finished first, and the slower choices add a broadcast or a shuffle stage each; the max is pinned
+    "corpus_pipeline_e2e": 85,  # 82-85 measured: AQE picks a join's strategy and build side by which of its input stages finished first — seen at the decontamination join and the leakage join — and the slower choice adds a broadcast or a shuffle stage at each; the max is pinned
     "corpus_store_suite": 60,  # 59 or 60: AQE plans the span leg's coverage left join (operators/dedup.py:_span_coverage) as a build-left shuffled hash join, or, when the start-list aggregate's input stages finish first, as a broadcast of that aggregate — one more stage; the max is pinned
     "crawl_state_registry": 3,
     "dbt_dim_games_suite": 15,
@@ -721,7 +723,7 @@ STAGE_BUDGET = {
     "dedup_cross_corpus": 45,  # 44 or 45: the same AQE race as corpus_store_suite, over the span leg's coverage left join (operators/dedup.py:_span_coverage)
     "dedup_embedding_cosine": 25,
     "dedup_exact_docs": 8,
-    "dedup_minhash_lsh_docs": 8,  # 7 once in 17 warm runs (an AQE join choice); the max is pinned
+    "dedup_minhash_lsh_docs": 8,  # 7 in one of 17 warm runs (not traced); the max is pinned
     "dedup_ngram_jaccard_docs": 6,
     "dedup_simhash_docs": 5,
     "dim_star_denorm": 7,
