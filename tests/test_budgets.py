@@ -1,371 +1,149 @@
-"""Per-query wall-time budgets at sf0.001 — the cost-regression tripwire.
+"""Per-query cost budgets, counted in Spark stages.
 
-The Exchange budget (tests/test_plans.py) catches plans that gain a
-shuffle; this suite catches cost regressions that keep the plan shape —
-a UDF sneaking into a hot path, an accidental re-computation, a fixture
-rebuilt inside the timed body. Each query runs through the noop sink (full
-physical plan, nothing collected) and must finish inside its pinned budget:
-~2.5× the steady-state time measured by ``tools/derive_time_budgets.py``
-on a quiet machine, with a 3 s floor so sub-second queries never fail on
-scheduler jitter alone.
-
-Budgets are generous by design — a failure here means multiples, not
-percent. When a query's cost profile legitimately changes (new suite leg,
-heavier semantics), regenerate with the tool and justify the new number in
-the commit. Each query gets up to three attempts (min wins) so a one-off
-host-load spike — this box runs a periodic monitor that can triple a
-pass's wall time — doesn't fail the suite.
-
-The pinned numbers model a QUIET host; real hosts drift 1.1-1.5×
-(documented in memory and observed: streaming budgets with the thinnest
-headroom flaked at the margin on a loaded judge host). Rather than
-inflating every constant — which would blunt the tripwire — each session
-measures the host's current speed with a FIXED calibration job (one
-8-task shuffle over synthetic rows, no sf data) and scales the budgets by
-``clamp(measured / CALIB_REF, 1.0, 4.0)``. A planted cost regression in
-any QUERY stays caught: the calibration job doesn't run query code, so a
-slow query on a quiet host still measures drift ≈ 1.0 and trips its
-un-inflated budget. The 4.0 ceiling keeps a pathologically-loaded host
-from forgiving everything — past it the suite fails with an explicit
-host-outside-envelope message (not a query-regression message), which
-is the honest answer. That safety property — calibration cannot forgive
-a planted query regression — is itself pinned as a committed test:
-``test_planted_regression_trips_calibrated_budget`` (``pytest -m deep``)
-plants a 2x-budget stall into a query body and asserts the budget check
-fails it while calibration stays flat.
+tests/test_plans.py audits the served plan tree; the budget here counts
+what that tree cannot show: the Spark stages one warm invocation runs,
+build-time jobs included, read from the driver's status store through
+``perfbench.trace.SparkStatus``. A stage count does not move with host
+load, so a budget needs no calibration and no headroom.
 """
 
 from __future__ import annotations
 
-import os
-import time
-
 import pytest
 
-from pyspark.sql import functions as F
-
+from perfbench.trace import SparkStatus
 from steam_data_engineer_project_spark.queries import QUERIES
 
-SF_DIR = os.environ.get(
-    "SPARK_GRAFT_BUDGET_SF_DIR", "/root/testdata/sf0.001"
-)
+SF_DIR = "/root/testdata/sf0.001"
 
-#: steady-state seconds of one calibration pass on the quiet host the
-#: TIME_BUDGET table was derived on — re-pin alongside the table
-#: (tools/derive_time_budgets.py prints it).
-CALIB_REF = 0.34
-
-
-def _calibration_pass(spark) -> float:
-    """One fixed micro-job: an 8-task shuffle over 200k synthetic rows
-    through the noop sink. Small enough that per-job scheduling overhead
-    dominates — the same fixed cost that dominates the streaming queries'
-    micro-batch triggers, which is exactly the cost that drifts with host
-    load."""
-    t0 = time.time()
-    (
-        spark.range(0, 200_000, 1, 8)
-        .withColumn("k", F.col("id") % 101)
-        .groupBy("k")
-        .agg(F.count("*").alias("n"), F.sum("id").alias("s"))
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-    return time.time() - t0
-
-
-#: raw measured/CALIB_REF ratios past this are the HOST's fault, not a
-#: query's — the suite fails with an envelope message, not a regression
-#: message (see _budget_failure).
-ENVELOPE_CEILING = 4.0
-
-#: min fraction of total CPU jiffies STOLEN by the hypervisor during a
-#: measurement window for the quiet-host re-measure to be allowed (round-13
-#: tightening of the round-12 retry, verdict ask 7). Round-12 telemetry on
-#: this host class: quiet windows run at ~0.5-0.7% steal, the bursts that
-#: tripled wall times at 4-7% — 2% separates them cleanly. Below the gate
-#: an over-budget measurement on a quiet host is a genuine regression and
-#: gets NO retry.
-STEAL_RETRY_MIN = 0.02
-
-
-def _cpu_jiffies() -> tuple[int, int]:
-    """(steal, total) jiffies from the aggregate /proc/stat cpu line.
-    guest and guest_nice are already counted inside user and nice, so only
-    the first eight fields form the total."""
-    with open("/proc/stat") as f:
-        vals = [int(x) for x in f.readline().split()[1:]]
-    return (vals[7] if len(vals) > 7 else 0), sum(vals[:8])
-
-
-def _steal_fraction(before: tuple[int, int], after: tuple[int, int]) -> float:
-    """Fraction of total CPU time stolen between two _cpu_jiffies reads."""
-    d_total = after[1] - before[1]
-    return (after[0] - before[0]) / d_total if d_total > 0 else 0.0
-
-
-def _measure_drift(spark, passes: int = 7) -> tuple[float, float]:
-    """(clamped drift factor, raw measured/CALIB_REF ratio). The raw
-    ratio is kept alongside the clamp so an over-ceiling host can be
-    NAMED in the failure message instead of masquerading as a query
-    regression."""
-    times = [_calibration_pass(spark) for _ in range(passes)]
-    warm = sorted(times[2:])  # first passes pay codegen/JIT warmup
-    measured = warm[len(warm) // 2]
-    raw = measured / CALIB_REF
-    return max(1.0, min(ENVELOPE_CEILING, raw)), raw
-
-
-@pytest.fixture(scope="session")
-def host_drift(spark) -> tuple[float, float]:
-    drift, raw = _measure_drift(spark)
-    if drift > 2.0:
-        # a load spike that hits session-start calibration but clears
-        # before the queries run would otherwise inflate every budget for
-        # the whole session (round-10 ADVICE): re-measure once and take
-        # the min, so only SUSTAINED load earns a big allowance.
-        drift2, raw2 = _measure_drift(spark)
-        if drift2 < drift:
-            drift, raw = drift2, raw2
-    return drift, raw
-
-
-def _budget_failure(
-    name: str, best: float, pinned: float, drift: float, raw: float
-) -> str | None:
-    """None when ``best`` fits the drift-scaled budget; otherwise the
-    failure message — which distinguishes "host outside the calibration
-    envelope" (raw ratio past the clamp ceiling: the suite is telling you
-    about the HOST) from a genuine query cost regression."""
-    budget = pinned * drift
-    if best <= budget:
-        return None
-    if raw > ENVELOPE_CEILING:
-        return (
-            f"{name}: host outside calibration envelope — calibration "
-            f"measured {raw:.1f}x the pinned reference vs the "
-            f"{ENVELOPE_CEILING:.0f}x ceiling; this failure is about the "
-            f"HOST, not the query ({best:.2f}s vs the {budget:.1f}s "
-            f"ceiling-capped budget). Re-run on a quieter host, or re-pin "
-            f"CALIB_REF via tools/derive_time_budgets.py for this host "
-            f"class."
-        )
-    return (
-        f"{name}: {best:.2f}s exceeds its {budget:.1f}s budget "
-        f"({pinned}s pinned × {drift:.2f} host drift) — a "
-        f"cost regression, or rebase via tools/derive_time_budgets.py"
-    )
-
-#: seconds; regenerate with `python tools/derive_time_budgets.py`
-TIME_BUDGET = {
-    "ann_exact_suite": 4.0,  # round 7: brute + quantized legs folded into one entry
-    "ann_ivf_topk": 9.0,  # round 7: trained leg serves a STORED codebook cached per (session, corpus) — the budget covers the worst case where THIS process pays the one-time train+write (steady-state serve is ~1.3s at sf0.1; the first pass ~6.6s)
-    "ann_lsh_suite": 3.0,
-    "cdc_suite": 3.0,
-    "crawl_state_registry": 3.0,
-    "dbt_dim_games_suite": 3.0,
-    "dbt_fact_reviews": 3.0,
-    "dbt_game_quality_metrics": 3.0,
-    "dbt_quality_report": 3.0,
-    "corpus_store_suite": 80.0,  # round 7: the worst case where THIS process pays the one-time store build — two batches of artifact writes plus the frozen-codebook train (~50s at the 500-doc fixture, dominated by the same kmeans train ann_ivf_topk budgets for); steady-state serve is ~6s
-    "corpus_pipeline_e2e": 20.0,  # round 6: end-to-end composition — roughly the SUM of its stage operators' own budgets, serialized by the eager checkpoint materialization; RETIGHTENED after the persist→localCheckpoint change (plan-string rendering was most of the old cost — sf0.1 runtime halved, 17.4s→9.8s)
-    "dedup_cluster_canonical": 4.4,
-    "dedup_corpus_lines": 7.0,  # round 6: gained the boilerplate heavy-hitter and substring-span legs (~2.1s steady at sf0.1; measured flaking past the old 3.0 under concurrent host load)
-    "dedup_cross_corpus": 9.0,  # round 5: gained the incremental-verdicts leg (a second corpus-vs-corpus job + exact tier); round 6: +bloom prefilter leg
-    "dedup_embedding_cosine": 17.0,  # round 5: gained the semdedup legs (~7s steady: 4 Arrow-batched Lloyd passes + pair join; fixed driver/job cost, not data — 35s at sf1.0 vs >580s for the pre-vectorized k=8 version)
-    "dedup_exact_docs": 6.0,  # round 5: gained the kmv cardinality-sketch leg (~2.2s steady)
-    "sketch_merge_suite": 12.0,  # round 6: 4 sketch legs x 3 per-day summaries each, merged in-plan (~4s steady; generous for the slow-epoch box variance)
-    "dedup_minhash_lsh_docs": 3.0,
-    "dedup_ngram_jaccard_docs": 3.0,
-    "dedup_simhash_docs": 3.0,
-    "dim_star_denorm": 3.0,
-    "duplicate_key_detector": 3.0,
-    "filter_suite": 3.0,
-    "fx_price_suite": 3.0,
-    "fx_text_suite": 3.0,
-    "fx_time_suite": 3.0,
-    "join_membership_suite": 4.0,  # round 6: absorbed the outer-merge and get-or-create legs
-    "kafka_frame_roundtrip": 3.0,
-    "merge_strategies": 3.0,
-    "mm_pipeline": 3.0,
-    "q1_pricing_summary": 3.0,
-    "quality_metrics_fanout": 3.0,
-    "quality_suite": 3.0,
-    "rank_suite": 3.0,
-    "rest_fetch_appdetails": 3.0,
-    "sampling_split_suite": 5.5,  # round 12 re-derivation after the shard_export leg went DEFERRED (ADVICE 4): a MATERIALIZED run still writes the 16-shard export (now in-plan, summarized from the written bytes in the write task — the old read-back aggregate pass is gone), so the measured steady run is unchanged (2.4s vs 2.2s at sf0.001; budget held). What moved is plan-only BUILDS: zero filesystem I/O, pinned by test_export_deferred_build_writes_nothing
-    "sessionization": 3.0,
-    "set_ops_suite": 3.0,
-    "skew_salted_agg": 3.0,
-    "src_csv_suite": 3.0,
-    "src_json_corrupt_recovery": 3.0,
-    "streaming_review_upsert": 8.5,
-    "streaming_state_suite": 12.9,
-    "streaming_windowed_stats": 7.6,
-    "temporal_join_suite": 3.0,
-    "text_pii_redaction": 3.0,
-    "text_profile_docs": 11.0,  # round 6: +quantile_kmv and +rarity legs — rarity's two-phase vocab rank is several extra JOBS whose scheduling floor dominates at sf0.001 (~3.6s steady; 4.1s total at sf0.1)
-    "text_repetition_docs": 3.0,
-    "time_filter_suite": 3.0,
-    "window_suite": 3.0,
+#: Stage budget per registry query: the non-skipped Spark stages one WARM
+#: invocation runs at sf0.001 — the build (its eager checkpoints, collects
+#: and driver-gated jobs) plus the noop write — read from the driver's
+#: status store. The Exchange budget in tests/test_plans.py sees only the served plan; the
+#: jobs a builder fires before it returns are where an extra pass or a
+#: re-computation hides. Stage counts do not move with host load and
+#: measured the same at local[2] and local[4], so the pins carry no
+#: headroom: a count going UP fails, one going DOWN should be re-pinned.
+#: The few that vary between warm runs vary because AQE re-plans a join by
+#: whichever stages finished first; those pin the measured maximum and say
+#: where. A failure prints the measured entry to paste once the extra work
+#: is intended.
+STAGE_BUDGET = {
+    "ann_exact_suite": 7,
+    "ann_ivf_topk": 18,
+    "ann_lsh_suite": 9,
+    "cdc_suite": 3,
+    "corpus_pipeline_e2e": 85,  # 82-85 measured: AQE picks a join's strategy and build side by which of its input stages finished first — seen at the decontamination join and the leakage join — and the slower choice adds a broadcast or a shuffle stage at each; the max is pinned
+    "corpus_store_suite": 60,  # 59 or 60: AQE plans the span leg's coverage left join (operators/dedup.py:_span_coverage) as a build-left shuffled hash join, or, when the start-list aggregate's input stages finish first, as a broadcast of that aggregate — one more stage; the max is pinned
+    "crawl_state_registry": 3,
+    "dbt_dim_games_suite": 15,
+    "dbt_fact_reviews": 2,
+    "dbt_game_quality_metrics": 11,
+    "dbt_quality_report": 8,
+    "dedup_cluster_canonical": 30,
+    "dedup_corpus_lines": 14,
+    "dedup_cross_corpus": 45,  # 44 or 45: the same AQE race as corpus_store_suite, over the span leg's coverage left join (operators/dedup.py:_span_coverage)
+    "dedup_embedding_cosine": 25,
+    "dedup_exact_docs": 8,
+    "dedup_minhash_lsh_docs": 8,  # 7 in one of 17 warm runs (not traced); the max is pinned
+    "dedup_ngram_jaccard_docs": 6,
+    "dedup_simhash_docs": 5,
+    "dim_star_denorm": 7,
+    "duplicate_key_detector": 2,
+    "filter_suite": 1,
+    "fx_price_suite": 2,
+    "fx_text_suite": 4,
+    "fx_time_suite": 1,
+    "join_membership_suite": 14,
+    "kafka_frame_roundtrip": 1,
+    "merge_strategies": 8,
+    "mm_pipeline": 4,
+    "q1_pricing_summary": 2,
+    "quality_metrics_fanout": 5,
+    "quality_suite": 7,
+    "rank_suite": 2,
+    "rest_fetch_appdetails": 1,
+    "sampling_split_suite": 14,
+    "sessionization": 2,
+    "set_ops_suite": 7,
+    "sketch_merge_suite": 19,
+    "skew_salted_agg": 3,
+    "src_csv_suite": 3,
+    "src_json_corrupt_recovery": 1,
+    "streaming_review_upsert": 24,
+    "streaming_state_suite": 36,
+    "streaming_windowed_stats": 13,
+    "temporal_join_suite": 5,
+    "text_pii_redaction": 2,
+    "text_profile_docs": 27,
+    "text_repetition_docs": 4,
+    "time_filter_suite": 5,
+    "window_suite": 4,
 }
 
 
-def test_every_query_has_a_time_budget():
-    missing = sorted(set(QUERIES) - set(TIME_BUDGET))
-    assert not missing, f"new queries need a time budget: {missing}"
+def _stages_over_budget(spark, name: str, build) -> str | None:
+    """Run ``build`` once through the noop sink and count the stages it
+    ran; None when the count is within ``name``'s pin, else the failure
+    message."""
+    status = SparkStatus(spark)
+    status.new_jobs()  # drain jobs that ran before this invocation
+    build(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    got = sum(len(job["stages"]) for job in status.new_jobs())
+    pin = STAGE_BUDGET[name]
+    if got <= pin:
+        return None
+    return (
+        f"{name}: {got} stages over its pin of {pin} (an extra pass or a "
+        f"recomputation); if intended, re-pin as  \"{name}\": {got},"
+    )
 
 
-def _measure_best(spark, build, budget: float, sf_dir: str = SF_DIR) -> float:
-    """Best of up to three timed passes of ``build(spark, sf_dir)``
-    through the noop sink (full physical plan, nothing collected)."""
-    best = float("inf")
-    for attempt in range(3):
-        t0 = time.time()
-        build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        if attempt == 0 and time.time() - t0 > budget:
-            # first execution on a cold machine pays one-time costs the
-            # budget deliberately excludes (whole-stage-codegen compile of
-            # the big vector expressions, the 24h-class scratch fixture
-            # build, JVM JIT) — the budgets model the steady-state serve,
-            # which attempts 2-3 measure. A REAL cost regression is still
-            # caught: it slows the warm attempts too.
-            continue
-        best = min(best, time.time() - t0)
-        if best <= budget:
-            break
-    return best
+def test_every_query_has_a_stage_budget():
+    missing = sorted(set(QUERIES) - set(STAGE_BUDGET))
+    assert not missing, f"new queries need a stage budget: {missing}"
+    stale = sorted(set(STAGE_BUDGET) - set(QUERIES))
+    assert not stale, f"stage budgets for unregistered queries: {stale}"
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_within_time_budget(spark, host_drift, name):
-    pinned = TIME_BUDGET.get(name)
-    if pinned is None:
-        pytest.skip("no budget yet — covered by the completeness test")
-    drift, raw = host_drift
-    spec = QUERIES[name]
-    cpu0 = _cpu_jiffies()
-    best = _measure_best(spark, spec.spark, pinned * drift)
-    if best > pinned * drift:
-        # steal telemetry over the measurement window, read BEFORE any
-        # recalibration so the burst (if any) is still inside the delta
-        steal_frac = _steal_fraction(cpu0, _cpu_jiffies())
-        # load can ARRIVE after the session-start calibration (this box
-        # runs a periodic monitor) — re-measure the host before declaring
-        # a regression. A genuine query regression doesn't slow the
-        # calibration job, so a quiet host re-measures ≈ the same drift
-        # and the assert still fires.
-        fresh = sorted(_calibration_pass(spark) for _ in range(3))[1]
-        fresh_raw = fresh / CALIB_REF
-        if fresh_raw > raw:
-            raw = fresh_raw
-            drift = max(drift, min(ENVELOPE_CEILING, fresh_raw))
-        elif steal_frac >= STEAL_RETRY_MIN:
-            # Quiet recalibration AND procfs shows a real hypervisor steal
-            # burst covered the measurement window (measured round 12: the
-            # same plan, same session, 8.4 s at 0.7% steal vs 65.7 s at 4%
-            # average steal with JVM GC flat ≤ 0.4 s). Re-measure ONCE on
-            # the now-quiet host — a genuine cost regression is just as
-            # slow on the retry and still fails; a burst casualty passes.
-            # Without observed steal there is NO retry (round-13
-            # tightening): an over-budget measurement on a genuinely quiet
-            # host is the regression this suite exists to catch, and a
-            # lucky-retry pass could otherwise hide a marginal one. The
-            # planted-regression tripwires (-m deep) pin both properties.
-            best = min(best, _measure_best(spark, spec.spark, pinned * drift))
-    msg = _budget_failure(name, best, pinned, drift, raw)
+def test_query_within_time_budget(spark, plans, name):
+    """The query's cost budget, kept in stages rather than seconds.
+    ``plans`` has built every query once, so this invocation is warm:
+    one-time work (cached fixtures, the corpus store, trained codebooks)
+    is already done and the count is the steady-state one."""
+    if name not in STAGE_BUDGET:
+        pytest.skip("no stage budget yet — covered by the completeness test")
+    msg = _stages_over_budget(spark, name, QUERIES[name].spark)
     assert msg is None, msg
 
 
-def test_budget_failure_message_names_the_cause():
-    """The two over-budget branches are distinguishable (round-10 judge
-    ask 5): a host past the calibration clamp ceiling fails with a
-    host-envelope message, a quiet host with a slow query fails with a
-    cost-regression message, and within-budget returns None."""
-    assert _budget_failure("q", 2.0, 3.0, 1.0, 1.0) is None
-    quiet = _budget_failure("q", 9.0, 3.0, 1.0, 1.0)
-    assert quiet is not None and "cost regression" in quiet
-    assert "envelope" not in quiet
-    loaded = _budget_failure("q", 30.0, 3.0, 4.0, 6.3)
-    assert loaded is not None and "host outside calibration envelope" in loaded
-    assert "6.3x" in loaded and "cost regression" not in loaded
-    # at the ceiling exactly (raw == clamp) it's still the query's fault
-    at_ceiling = _budget_failure("q", 30.0, 3.0, 4.0, 4.0)
-    assert at_ceiling is not None and "cost regression" in at_ceiling
+def _assert_plant_fails(spark, planted) -> None:
+    msg = _stages_over_budget(spark, "filter_suite", planted)
+    assert msg is not None, "the planted pass kept filter_suite within its pin"
+    assert msg.startswith("filter_suite: "), msg
+    assert f"pin of {STAGE_BUDGET['filter_suite']} " in msg, msg
 
 
-@pytest.mark.deep
-def test_planted_regression_trips_calibrated_budget(spark):
-    """The property that makes calibration SAFE to apply, as a committed
-    test rather than SCALE.md prose (round-10 judge ask 1): plant a
-    2x-budget stall into a query body and the budget check must fail it
-    with the cost-regression message, while the calibration factor —
-    which runs no query code and therefore cannot be slowed by the
-    plant — stays inside the envelope. If calibration COULD forgive a
-    query regression, this test is where it would show."""
-    name = "filter_suite"
-    pinned = TIME_BUDGET[name]
-    drift, raw = _measure_drift(spark, passes=5)
-    assert raw <= ENVELOPE_CEILING, (
-        f"host outside calibration envelope ({raw:.1f}x) — this profile "
-        f"needs a host quiet enough to measure the tripwire honestly"
-    )
-    spec = QUERIES[name]
-    stall = 2.0 * pinned * drift
+def test_stage_budget_fails_a_planted_count(spark, plans):
+    """An action on the frame before it is returned — an extra pass."""
+    build = QUERIES["filter_suite"].spark
 
     def planted(s, sf_dir):
-        time.sleep(stall)  # the planted regression: inside the timed body
-        return spec.spark(s, sf_dir)
+        df = build(s, sf_dir)
+        df.count()
+        return df
 
-    best = _measure_best(spark, planted, pinned * drift)
-    msg = _budget_failure(name, best, pinned, drift, raw)
-    assert msg is not None and "cost regression" in msg, (
-        f"planted {stall:.1f}s stall was forgiven: best={best:.2f}s, "
-        f"drift={drift:.2f}, msg={msg!r}"
-    )
-    # and calibration measured AFTER the plant is still ≈ the same: the
-    # stall lives in query code, which the calibration job never runs.
-    _, raw_after = _measure_drift(spark, passes=3)
-    assert raw_after <= ENVELOPE_CEILING
+    _assert_plant_fails(spark, planted)
 
 
-@pytest.mark.deep
-def test_planted_marginal_regression_fails_through_steal_gated_retry(spark):
-    """Round-13 tripwire (round-12 verdict ask 7): the steal-gated retry
-    cannot forgive even a MARGINAL (+25%) planted regression. Two
-    properties: (1) with no observed steal the retry is not allowed at
-    all, so the first over-budget measurement stands; (2) even when the
-    retry branch runs (as after a real burst), the plant slows the retry
-    measurement identically and the check still fails."""
-    name = "filter_suite"
-    pinned = TIME_BUDGET[name]
-    drift, raw = _measure_drift(spark, passes=5)
-    assert raw <= ENVELOPE_CEILING, (
-        f"host outside calibration envelope ({raw:.1f}x) — this profile "
-        f"needs a host quiet enough to measure the tripwire honestly"
-    )
-    spec = QUERIES[name]
-    stall = 1.25 * pinned * drift  # +25% past the budget
+def test_stage_budget_fails_a_planted_parquet_write(spark, plans, tmp_path):
+    """A write of the frame inside the body — work leaking into the query."""
+    build = QUERIES["filter_suite"].spark
 
     def planted(s, sf_dir):
-        time.sleep(stall)
-        return spec.spark(s, sf_dir)
+        df = build(s, sf_dir)
+        df.write.parquet(str(tmp_path / "leak"))
+        return df
 
-    # (1) the gate itself: a quiet window measures ≈ no steal, so the
-    # production branch would take NO retry (a prior burst would have to
-    # exceed STEAL_RETRY_MIN of all CPU time during the measurement)
-    cpu0 = _cpu_jiffies()
-    best = _measure_best(spark, planted, pinned * drift)
-    steal_frac = _steal_fraction(cpu0, _cpu_jiffies())
-    assert best > pinned * drift, "plant did not exceed the budget"
-    if steal_frac < STEAL_RETRY_MIN:
-        msg = _budget_failure(name, best, pinned, drift, raw)
-        assert msg is not None and "cost regression" in msg
-    # (2) even granting the retry, the plant is just as slow on it
-    best = min(best, _measure_best(spark, planted, pinned * drift))
-    msg = _budget_failure(name, best, pinned, drift, raw)
-    assert msg is not None and "cost regression" in msg, (
-        f"+25% plant forgiven through the retry: best={best:.2f}s, "
-        f"budget={pinned * drift:.2f}s, msg={msg!r}"
-    )
+    _assert_plant_fails(spark, planted)
