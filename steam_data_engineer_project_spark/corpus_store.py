@@ -881,6 +881,7 @@ class CorpusStore:
 
         state = semantic_state_from_table(self.read_codebook(spark))
         stored = self.read(spark, SEM_ASSIGNED_TABLE)
+        # A job of its own: the ratio decides whether a retrain writes at all.
         ratio = float(
             codebook_drift_stat(
                 incoming_qdf.select(SEM_ID_COL, "qv"),
@@ -1063,7 +1064,7 @@ class CorpusStore:
             .groupBy("word_idx")
             .agg(F.bit_or("bits").alias("bits"))
         )
-        set_bits = merged.agg(
+        set_bits = merged.agg(  # the gauge's scalar is the result
             F.sum(F.bit_count("bits")).cast("long").alias("n")
         ).collect()[0]["n"]
         return (set_bits or 0) / params["m_bits"]

@@ -5,7 +5,13 @@ queue_size, pipeline_status — minus the pushgateway transport).
 
 ``observed`` rides Spark's df.observe(): metrics are computed inside the
 job that materializes the DataFrame — zero extra passes, exact, and
-read on the driver through the Observation after an action.
+read on the driver through the Observation after an action. The engine
+takes its row counts and convergence flags this way, not from count jobs
+(operators/components.py, corpus_pipeline_e2e's funnel). Each observation
+sits directly under the eager ``localCheckpoint()`` that materializes its
+frame — the job's RESULT stage, where each partition's metrics merge
+exactly once (a failed task attempt adds nothing) — has a name unique in
+any plan it appears in, and is read in the same call.
 """
 
 from __future__ import annotations

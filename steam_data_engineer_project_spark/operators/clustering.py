@@ -409,7 +409,7 @@ def _collect_partials(
     form (partial or fully-reduced rows)."""
     if n_tasks * k > _DRIVER_FOLD_MAX_PARTIAL_ROWS:
         partials = _reduce_partials(partials, dim)
-    return partials.collect()
+    return partials.collect()  # the folded state is the next pass's literal
 
 
 def _pair_scores_arrow(
@@ -536,7 +536,8 @@ def kmeans_int8(
     base = qdf if qdf is not None else quantized_vectors(df, vec_col, id_col)
     base.persist()
     try:
-        # init: k seed rows, state (cid, s=qv, c=1) — bounded k-row collect.
+        # init: k seed rows, state (cid, s=qv, c=1) — bounded k-row collect
+        # (own job: the seeds are the first Lloyd pass's literal).
         if seed == "hash":
             order = [
                 F.conv(
@@ -808,7 +809,7 @@ def train_ivf_codebook(
     noise."""
     import math
 
-    first = df.select(vec_col).first()
+    first = df.select(vec_col).first()  # fail empty input before training
     if first is None:
         raise ValueError("cannot train a codebook on an empty corpus")
     st: list = []

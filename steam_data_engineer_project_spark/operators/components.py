@@ -16,6 +16,8 @@ round ``localCheckpoint``s its labels: iterative self-referencing plans
 grow EXPONENTIALLY in lineage (each round embeds the previous plan twice),
 so truncation per round is correctness-of-operation, not a tuning detail —
 on a cluster use reliable ``checkpoint()`` to HDFS for fault tolerance.
+That checkpoint is the round's ONE job: its convergence flag (like the edge
+count that sizes the loop) is a ``monitoring.observed`` metric of it.
 For adversarially deep graphs at scale, swap in the alternating-star
 "large-star/small-star" contraction (same DataFrame shapes, logarithmic
 rounds).
@@ -25,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..monitoring import observed
 
 #: round cap of :func:`connected_components_star` (rounds grow with the log
 #: of the largest component, so it is never reached in practice)
@@ -46,7 +50,7 @@ def _partition_local_contract(e: DataFrame) -> DataFrame:
 
     Roots are chosen as the local MINIMUM id, so output edges always point
     small←large; the final component labeling is independent of this choice
-    (differentially tested against the un-contracted path)."""
+    (tested against union-find on graphs scattered over many partitions)."""
     schema = e.schema
 
     def contract(batches):
@@ -94,15 +98,14 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 20,
-    pre_contract: bool = True,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``; the
     component id is the minimum node id in the component. Deterministic,
     partitioning-independent.
 
-    ``pre_contract`` first collapses each PARTITION's subgraph to a depth-1
-    star forest with in-memory union-find (``_partition_local_contract`` —
-    exact, shuffle-free), so the global rounds see fewer, flatter edges.
+    Each PARTITION's subgraph is first collapsed to a depth-1 star forest
+    with in-memory union-find (``_partition_local_contract`` — exact,
+    shuffle-free), so the global rounds see fewer, flatter edges.
 
     Min-label propagation converges in O(diameter) rounds — the cheap path
     for the dense, shallow clusters near-dup dedup emits (one shuffle pair
@@ -114,23 +117,24 @@ def connected_components(
     e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
         F.col("a") != F.col("b")
     )
-    if pre_contract:
-        e0 = _partition_local_contract(e0)
     # Truncate BEFORE symmetrizing: the union's two branches would otherwise
     # each re-execute the whole upstream pair pipeline (the edges are
     # usually an un-materialized dedup plan) — measured as a full second
     # ngram-pair pass in the e2e corpus pipeline.
-    e0 = e0.localCheckpoint()
-    sym = e0.union(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    sym = (
-        sym.filter(F.col("a") != F.col("b")).distinct().localCheckpoint()
+    e0 = _partition_local_contract(e0).localCheckpoint()
+    sym, edge_obs = observed(
+        e0.union(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .filter(F.col("a") != F.col("b"))
+        .distinct(),
+        "cc_sym_edges",
     )
+    sym = sym.localCheckpoint()
     # The rounds below are O(diameter) JOBS whose cost on a small graph is
-    # pure scheduling (32-partition shuffles over a few hundred edges). The
-    # checkpoint just materialized sym, so counting it is metadata-cheap;
-    # shrink tiny graphs to a handful of partitions and let AQE keep the
-    # reduce sides matched. Big graphs keep their parallelism untouched.
-    n_edges = sym.count()
+    # pure scheduling (32-partition shuffles over a few hundred edges), so
+    # shrink tiny graphs to a handful of partitions (the edge count came
+    # with the checkpoint job) and let AQE keep the reduce sides matched.
+    # Big graphs keep their parallelism untouched.
+    n_edges = edge_obs.get["rows"]
     parts = max(1, min(sym.rdd.getNumPartitions(), n_edges // 50_000 + 1))
     if parts < sym.rdd.getNumPartitions():
         sym = sym.coalesce(parts)
@@ -141,61 +145,51 @@ def connected_components(
         .localCheckpoint()
     )
 
-    converged = False
-    for _ in range(max_iter):
+    for i in range(max_iter):
         nbr_min = (
             sym.join(labels, sym.b == labels.node)
             .groupBy("a")
             .agg(F.min("label").alias("nbr_min"))
         )
-        # Carry the previous label through the checkpoint so the convergence
-        # check is a filter over already-materialized data — no extra join,
-        # and type-agnostic (works for string node ids, unlike a label-sum).
-        new_labels = (
-            labels.join(nbr_min, labels.node == nbr_min.a, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"),
-                    F.coalesce(F.col("nbr_min"), F.col("label")),
-                ).alias("label"),
-                F.col("label").alias("prev"),
-            )
-            .localCheckpoint()
+        # The convergence flag rides the round's checkpoint job: a count of
+        # the rows whose label drops — no second job, and type-agnostic
+        # (works for string node ids, unlike a label-sum).
+        joined, probe = observed(
+            labels.join(nbr_min, labels.node == nbr_min.a, "left"),
+            f"cc_round_{i}",
+            {"changed": F.count_if(F.col("nbr_min") < F.col("label"))},
         )
-        changed = new_labels.filter(F.col("label") < F.col("prev")).limit(1).count()
-        labels = new_labels.drop("prev")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # Deep graph: hand off to the star algorithm. The node→label forest
-        # ALONE is not enough — two label roots of the same component (an
-        # interior local-min id splits the component into several trees)
-        # would never merge. Contract the ORIGINAL edges through the labels
-        # (label(a) — label(b)) and union the node→label edges: every G-edge
-        # stays connected through its endpoints' labels, no new connections
-        # appear, so this graph has exactly G's components at reduced
-        # diameter, and its min-id labeling IS the answer.
-        la = labels.select(F.col("node").alias("a"), F.col("label").alias("la"))
-        lb = labels.select(F.col("node").alias("b"), F.col("label").alias("lb"))
-        mapped = (
-            sym.join(la, "a")
-            .join(lb, "b")
-            .select(F.col("la").alias("node"), F.col("lb").alias("label"))
+        labels = joined.select(
+            "node", F.least("label", "nbr_min").alias("label")  # least skips nulls
+        ).localCheckpoint()
+        if probe.get["changed"] == 0:
+            return labels.select(F.col("node"), F.col("label").alias("component"))
+    # Deep graph: hand off to the star algorithm. The node→label forest
+    # ALONE is not enough — two label roots of the same component (an
+    # interior local-min id splits the component into several trees)
+    # would never merge. Contract the ORIGINAL edges through the labels
+    # (label(a) — label(b)) and union the node→label edges: every G-edge
+    # stays connected through its endpoints' labels, no new connections
+    # appear, so this graph has exactly G's components at reduced
+    # diameter, and its min-id labeling IS the answer.
+    la = labels.select(F.col("node").alias("a"), F.col("label").alias("la"))
+    lb = labels.select(F.col("node").alias("b"), F.col("label").alias("lb"))
+    mapped = (
+        sym.join(la, "a")
+        .join(lb, "b")
+        .select(F.col("la").alias("node"), F.col("lb").alias("label"))
+    )
+    star = connected_components_star(
+        mapped.union(labels.select("node", "label")), "node", "label"
+    )
+    return (
+        labels.select("node")
+        .join(star, "node", "left")
+        .select(
+            "node",
+            F.coalesce(F.col("component"), F.col("node")).alias("component"),
         )
-        star = connected_components_star(
-            mapped.union(labels.select("node", "label")), "node", "label"
-        )
-        return (
-            labels.select("node")
-            .join(star, "node", "left")
-            .select(
-                "node",
-                F.coalesce(F.col("component"), F.col("node")).alias("component"),
-            )
-        )
-    return labels.select(F.col("node"), F.col("label").alias("component"))
+    )
 
 
 def _large_star(sym: DataFrame) -> DataFrame:
@@ -268,17 +262,19 @@ def connected_components_star(
         .localCheckpoint()
     )
     prev_count = -1
-    for _ in range(STAR_MAX_ITER):
+    for i in range(STAR_MAX_ITER):
         sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        e_new = _small_star(_large_star(sym)).localCheckpoint()
-        n_new = e_new.count()
+        e_new, size = observed(_small_star(_large_star(sym)), f"cc_star_{i}")
+        e_new = e_new.localCheckpoint()
+        n_new = size.get["rows"]
+        # The fixed-point probe stays a job of its own: it compares two edge
+        # sets (a join, not a per-row aggregate), once the size stops moving.
         if n_new == prev_count and e_new.exceptAll(e).limit(1).count() == 0:
             e = e_new
             break
         prev_count = n_new
         e = e_new
-    stars = e
-    labels = stars.select(F.col("a").alias("node"), F.col("b").alias("component"))
+    labels = e.select(F.col("a").alias("node"), F.col("b").alias("component"))
     return (
         nodes.join(labels, "node", "left")
         .select(

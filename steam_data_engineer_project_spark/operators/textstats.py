@@ -438,6 +438,7 @@ def token_rarity_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     from .ranking import global_row_number
 
     ranked = global_row_number(vocab, ["__df", "__tok"], "__rank")
+    # own job: folding it into the plan kept text_profile_docs at 27 stages
     n_vocab = ranked.count()
     per_doc = (
         occ.join(ranked.select("__tok", "__rank"), "__tok")

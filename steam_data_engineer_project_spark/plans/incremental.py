@@ -98,6 +98,7 @@ def _refresh_locked(
     _recover_swap(mart_dir)  # repair a crash-torn data swap first
     wm = _read_watermark(mart_dir)
     fresh = source if wm is None else source.filter(F.col(ts_col) > wm)
+    # A job of its own: the no-new-rows exit must decide before any write.
     hi = fresh.agg(F.max(ts_col).alias("m")).collect()[0].m
     if hi is None:
         data_dir = os.path.join(mart_dir, "data")

@@ -111,6 +111,7 @@ from .quality import (
     run_checks,
     unique,
 )
+from .monitoring import observed
 from .schemas import PRICE_RAW_CSV
 from .sources.readers import incremental_resume, read_csv, read_json_recovering
 from .sources.rest import rest_fetch
@@ -1776,6 +1777,7 @@ def ann_lsh_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embeddings_by_bucket",
     )
     # the query vector is driver-side metadata (one row), as any ANN client's
+    # — its own job, as a literal of the plan served below
     qv = [float(x) for x in e.filter(F.col("vec_id") == 0).first()["embedding"]]
     from .operators.similarity import lsh_bucket_cosine_topk_pruned
 
@@ -1915,7 +1917,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       and integer norm, so a lossy store/serve roundtrip cannot hide
       behind a top-k that happens to agree."""
     e = _spread(spark, sf_dir, "embeddings", "vec_id")  # HOF vector math is interpreted: spread the single-row-group scan
-    q = [
+    q = [  # one-row job: the query vector is a literal of every plan below
         float(v)
         for v in e.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     ]
@@ -2228,7 +2230,7 @@ def semdedup_cluster_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE fused agg supplies both corpus sizes (full + incremental-corpus)
     # — the second count job this suite used to pay is pure scheduling
     # overhead at any scale (count prunes qv, so neither touches the
-    # quantization).
+    # quantization). A job of its own: the coalesce width below needs n.
     inc_cond = (F.col("vec_id") % 10).isin(5, 7)
     sizes_row = qdf.agg(
         F.count("*").alias("n"),
@@ -4881,7 +4883,7 @@ def streaming_windowed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value").alias("price"),
             (F.unix_micros("ts") / F.lit(1000000.0)).alias("ts"),
         )
-        lo, hi = msgs.agg(F.min("ts"), F.max("ts")).first()
+        lo, hi = msgs.agg(F.min("ts"), F.max("ts")).first()  # bounds name the files
         n_slices = 4
         span = (hi - lo) / n_slices + 1e-6
         ev_dir = os.path.join(stage, "events")
@@ -5738,27 +5740,17 @@ def corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured OOM-ing a vanilla 1 GB driver at sf0.01. On a cluster the
     same role is played by reliable ``checkpoint()``/staging tables
     (localCheckpoint trades executor-loss recoverability for speed —
-    same note as operators/components.py)."""
-    d = _docs(spark, sf_dir)
-    is_eval = F.col("source").isin("src0", "src1")
-    train0 = d.filter(~is_eval)
-    ev = d.filter(is_eval)
-
-    # Driver thread pool for the pipeline's INDEPENDENT work (guide §2.6):
-    # funnel counts launch as soon as their stage frame is materialized
-    # (instead of five serialized count jobs at the end), and the
-    # pair/quality chains fork after clean2. Shut down via the funnel
-    # gather below; on an exception path the pool is reaped by GC.
+    same note as operators/components.py). The funnel's five row counts
+    are ``monitoring.observed`` metrics of the clean1, clean2 and qual
+    checkpoint jobs, not count jobs of their own."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
-    pool = ThreadPoolExecutor(max_workers=4)
-
-    def _async_count(frame):
-        return pool.submit(inheritable_thread_target(spark)(frame.count))
-
-    n_input, n_eval = _async_count(train0), _async_count(ev)
+    d = _docs(spark, sf_dir)
+    is_eval = F.col("source").isin("src0", "src1")
+    train0 = d.filter(~is_eval)
+    ev = d.filter(is_eval)
 
     # min_shared=4 (≈ a ≥6-token verbatim quote): decontamination must
     # catch QUOTED benchmark material, not the incidental 2-shingle overlap
@@ -5772,12 +5764,23 @@ def corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("train_id").alias("doc_id"))
         .distinct()
     )
-    clean1 = train0.join(contam_ids, "doc_id", "left_anti").localCheckpoint()
-    n_clean1 = _async_count(clean1)
+    # clean1 = train0 minus contam_ids, as a flag join over ALL docs with
+    # the filter above the observation, so clean1's checkpoint job also
+    # counts the input and held-out rows (eval docs match no train id).
+    keep1 = ~is_eval & F.col("__contam").isNull()
+    flagged, decontam = observed(
+        d.join(contam_ids.withColumn("__contam", F.lit(True)), "doc_id", "left"),
+        "cpe_decontaminate",
+        {"input": F.count_if(~is_eval), "eval_heldout": F.count_if(is_eval),
+         "decontaminated": F.count_if(keep1)},
+    )
+    clean1 = flagged.filter(keep1).drop("__contam").localCheckpoint()
+    funnel_counts = [(s, decontam.get[s]) for s in ("input", "eval_heldout", "decontaminated")]
 
     exact_keep = exact_dedup(clean1, "text", "doc_id").select("doc_id")
-    clean2 = clean1.join(exact_keep, "doc_id").localCheckpoint()
-    n_clean2 = _async_count(clean2)
+    clean2, exact = observed(clean1.join(exact_keep, "doc_id"), "cpe_exact_dedup")
+    clean2 = clean2.localCheckpoint()
+    funnel_counts.append(("exact_canonical", exact.get["rows"]))
 
     # min_jaccard=0.5: "near-duplicate" means genuinely-similar documents
     # (the same truth definition the recall suite pins), not the 2-shared-
@@ -5806,10 +5809,11 @@ def corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "n_tokens", "quality_score"
         ).localCheckpoint()
 
-    fut_pairs = pool.submit(inheritable_thread_target(spark)(_pairs_chain))
-    fut_tq = pool.submit(inheritable_thread_target(spark)(_tq_chain))
-    pairs, comp = fut_pairs.result()
-    tq = fut_tq.result()
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        fut_pairs = pool.submit(inheritable_thread_target(spark)(_pairs_chain))
+        fut_tq = pool.submit(inheritable_thread_target(spark)(_tq_chain))
+        pairs, comp = fut_pairs.result()
+        tq = fut_tq.result()
     keyed = clean2.join(
         comp.withColumnRenamed("node", "doc_id"), "doc_id", "left"
     ).withColumn("split_key", F.coalesce(F.col("component"), F.col("doc_id")))
@@ -5822,15 +5826,15 @@ def corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         [0.1],
     ).select("lang", F.col("q_value").alias("len_cutoff"))
-    qual = (
-        feats.join(F.broadcast(cut), "lang")
-        .filter(
+    qual, kept = observed(
+        feats.join(F.broadcast(cut), "lang").filter(
             (F.col("n_tokens") >= F.col("len_cutoff"))
             & (F.col("quality_score") >= 0.5)
-        )
-        .localCheckpoint()
+        ),
+        "cpe_quality",
     )
-    n_qual = _async_count(qual)
+    qual = qual.localCheckpoint()
+    funnel_counts.append(("quality_kept", kept.get["rows"]))
 
     spl = deterministic_split(
         qual, "split_key", {"train": 0.9, "valid": 0.1}
@@ -5890,19 +5894,6 @@ def corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         return dfx.select(*sel)
 
-    # Funnel counts: submitted to the driver pool as each stage frame
-    # materialized above (each is a cheap scan of checkpointed
-    # partitions), so the five count jobs overlapped later stage builds
-    # instead of serializing here — this gather usually returns
-    # immediately (guide §2.6).
-    funnel_counts = [
-        ("input", n_input.result()),
-        ("eval_heldout", n_eval.result()),
-        ("decontaminated", n_clean1.result()),
-        ("exact_canonical", n_clean2.result()),
-        ("quality_kept", n_qual.result()),
-    ]
-    pool.shutdown(wait=True)
     funnel = spark.createDataFrame(
         funnel_counts, "stage string, __n long"
     )
@@ -6556,7 +6547,7 @@ def corpus_store_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the same scaling rule as the semdedup suite), freeze, store the
         # exact Lloyd state; every admitted batch is assigned against the
         # FROZEN state and appended to the stored inverted file.
-        n_base = vbase.count()
+        n_base = vbase.count()  # own job: k is needed before training
         kk = _SEM_K * math.ceil(n_base / _SEM_SEED_UNIT)
         qb = quantized_vectors(vbase, "embedding", "vec_id")
         st: list = []

@@ -221,7 +221,7 @@ def run_price_pipeline(
             )
             batch_state = batch_crawl_state(batch_df).persist()
             # The buckets this batch's keys hash into — notifications and
-            # the merge only ever read/write these.
+            # the merge only ever read/write these (collected before both).
             touched = sorted(
                 r.bucket
                 for r in batch_state.withColumn(

@@ -133,6 +133,7 @@ def run_review_pipeline(
             .persist()
         )
         try:
+            # collected first: the merge rewrites only these buckets' files
             touched = sorted(
                 r.bucket
                 for r in combined.withColumn(

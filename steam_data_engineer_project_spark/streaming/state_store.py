@@ -261,6 +261,7 @@ def merge_bucketed(
     _recover_bucket_swaps(state_dir)  # repair any crash-torn swap first
     bucketed = batch_state.withColumn("bucket", bucket_of(key_cols, num_buckets))
     if touched is None:
+        # collected first: only these buckets' files are rewritten below
         touched = sorted(
             r.bucket for r in bucketed.select("bucket").distinct().collect()
         )

@@ -1395,75 +1395,158 @@ print("RETRY-SURVIVED-OK")
 # ------------------------------------------------------------ connected components
 
 
+def _union_find_labels(edges) -> dict:
+    """Reference labeling: node → minimum node id of its component, by
+    union-find over ``edges`` (self-loop-only nodes included)."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+    comp: dict = {}
+    for n in parent:
+        comp.setdefault(find(n), []).append(n)
+    return {n: min(ns) for ns in comp.values() for n in ns}
+
+
+def _scattered_graph(seed: int) -> list:
+    """A random graph plus a 13-node chain; spread over 13 partitions, its
+    components routinely straddle partition boundaries (the chain edge by
+    edge), so the partition-local contraction's stars must re-merge in the
+    global rounds."""
+    import random
+
+    rng = random.Random(1000 + seed)
+    edges = [(rng.randrange(80), rng.randrange(80)) for _ in range(70)]
+    return edges + [(200 + i, 201 + i) for i in range(12)]
+
+
 def test_connected_components_matches_union_find(spark):
     """Random graphs vs a Python union-find reference: same components,
     min-id labeling, including chain graphs (worst-case diameter) and
-    isolated pairs."""
+    isolated pairs — both in the default layout and scattered over 13
+    partitions, where the partition-local contraction sees fragments of
+    every component."""
     import random
 
     from steam_data_engineer_project_spark.operators.components import (
         connected_components,
     )
 
+    cases = []
     for seed in range(3):
         rng = random.Random(seed)
         edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(50)]
         edges += [(100 + i, 101 + i) for i in range(8)]  # a 9-node chain
+        cases.append((f"seed={seed}", edges, None))
+        cases.append((f"scattered seed={seed}", _scattered_graph(seed), 13))
+    for label, edges, parts in cases:
         df = spark.createDataFrame(edges, ["id_a", "id_b"])
+        if parts:
+            df = df.repartition(parts)
         got = {
             r.node: r.component
             for r in connected_components(df).collect()
         }
-
-        parent: dict[int, int] = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[ra] = rb
-        comp: dict[int, list[int]] = {}
-        for n in parent:
-            comp.setdefault(find(n), []).append(n)
-        want = {n: min(ns) for ns in comp.values() for n in ns}
+        want = _union_find_labels(edges)
         # self-loops may leave a node absent from `got` if it had no real edge
         want = {n: c for n, c in want.items() if n in got}
-        assert got == want, f"seed={seed}"
+        assert got == want, label
 
 
-def test_partition_local_contract_is_exact(spark):
-    """The union-find pre-contraction must be invisible in the result:
-    pre_contract=True and =False produce identical labelings on random
-    graphs whose edges are scattered across many partitions (so components
-    routinely straddle partition boundaries and the contracted stars from
-    different partitions must re-merge in the global rounds), including a
-    chain split edge-by-edge across partitions."""
-    import random
+def test_connected_components_runs_no_driver_action(spark, monkeypatch):
+    """Every count and convergence flag is observed in the checkpoint job
+    that materializes its frame, so the labeling runs no count, collect,
+    first or take. The classic DataFrame class is patched because the
+    classic session dispatches to it (patching ``pyspark.sql.DataFrame``
+    changes nothing there). The scattered graph needs several label
+    rounds: its chain lands about one edge per partition."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
     from steam_data_engineer_project_spark.operators.components import (
         connected_components,
     )
 
-    for seed in range(3):
-        rng = random.Random(1000 + seed)
-        edges = [(rng.randrange(80), rng.randrange(80)) for _ in range(70)]
-        edges += [(200 + i, 201 + i) for i in range(12)]  # cross-part chain
-        df = spark.createDataFrame(edges, ["id_a", "id_b"]).repartition(13)
-        with_pre = {
-            r.node: r.component
-            for r in connected_components(df, pre_contract=True).collect()
-        }
-        without = {
-            r.node: r.component
-            for r in connected_components(df, pre_contract=False).collect()
-        }
-        assert with_pre == without, f"seed={seed}"
+    edges = _scattered_graph(0)
+    df = spark.createDataFrame(edges, ["id_a", "id_b"]).repartition(13)
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("driver action inside connected_components")
+
+    with monkeypatch.context() as m:
+        for action in ("count", "collect", "first", "take"):
+            m.setattr(ClassicDataFrame, action, refuse)
+        out = connected_components(df)
+    got = {r.node: r.component for r in out.collect()}
+    want = _union_find_labels(edges)
+    assert got == {n: c for n, c in want.items() if n in got}
+
+
+def test_observed_count_survives_injected_task_retry(tmp_path):
+    """A REAL task retry inside the observed stage leaves an observed row
+    count exact: in a subprocess running ``local[2,2]`` (maxFailures=2) a
+    flaky-once Python task hands its first Arrow batch up through the
+    observation, then fails; the eager ``localCheckpoint`` retries it and
+    the count equals the true row count (a failed attempt's partial
+    metrics are dropped, not merged)."""
+    import os
+    import subprocess
+    import sys
+
+    marker = str(tmp_path / "flaky_once_fired")
+    script = f"""
+import os
+from pyspark.sql import SparkSession
+from steam_data_engineer_project_spark.monitoring import observed
+
+marker = {marker!r}
+spark = (
+    SparkSession.builder.master("local[2,2]")
+    .config("spark.sql.shuffle.partitions", "2")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.execution.arrow.maxRecordsPerBatch", "50")
+    .getOrCreate()
+)
+n = 400
+
+def flaky_once(batches):
+    import os as _os
+    for i, batch in enumerate(batches):
+        if i == 1 and not _os.path.exists(marker):
+            open(marker, "w").close()
+            raise RuntimeError("planted flaky-once task failure")
+        yield batch
+
+src = spark.range(n).repartition(2).mapInPandas(flaky_once, schema="id long")
+out, obs = observed(src, "retry_probe_rows")
+out = out.localCheckpoint()
+assert os.path.exists(marker), "the planted failure never fired"
+assert obs.get["rows"] == n, obs.get
+spark.stop()
+print("OBSERVED-RETRY-OK")
+"""
+    env = dict(os.environ)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env["PYTHONPATH"] = repo + os.pathsep + env.get("PYTHONPATH", "")
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env=env,
+        cwd=repo,
+    )
+    assert proc.returncode == 0, proc.stdout + proc.stderr
+    assert "OBSERVED-RETRY-OK" in proc.stdout
+    assert os.path.exists(marker), "the flaky task never ran"
 
 
 def test_connected_components_star_deep_and_random_graphs(spark):
