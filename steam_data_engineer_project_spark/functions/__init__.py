@@ -2,8 +2,6 @@ from .scalars import (
     clean_array_string,
     comma_split,
     date_partition_key,
-    epoch_millis_to_ts,
-    epoch_seconds_to_ts,
     format_cents,
     html_strip,
     initial_price,
@@ -17,8 +15,6 @@ __all__ = [
     "clean_array_string",
     "comma_split",
     "date_partition_key",
-    "epoch_millis_to_ts",
-    "epoch_seconds_to_ts",
     "format_cents",
     "html_strip",
     "initial_price",

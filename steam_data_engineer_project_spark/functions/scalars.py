@@ -126,18 +126,6 @@ def html_strip(col: Column) -> Column:
     return F.trim(F.regexp_replace(no_tags, r"\s+", " "))
 
 
-def epoch_seconds_to_ts(col: Column) -> Column:
-    """Epoch-seconds -> timestamp (reference FROM_UNIXTIME / fromtimestamp;
-    models/staging/stg_reviews.sql:8, tasks/steam_tasks_improved.py:461)."""
-    return F.timestamp_seconds(col)
-
-
-def epoch_millis_to_ts(col: Column) -> Column:
-    """Epoch-millis -> timestamp (Debezium CDC ``after.timestamp/1000``;
-    tasks/steam_tasks_improved.py:586)."""
-    return F.timestamp_millis(col.cast("long"))
-
-
 def date_partition_key(ts: Column | None = None) -> Column:
     """``DDMMYYYY`` date-string partition key in tz Asia/Ho_Chi_Minh.
 

@@ -72,7 +72,6 @@ def _assign_to_centroids(
     id_col: str,
     cur: list[tuple[int, list[int], int]],
     *,
-    broadcast_state: bool = False,
     n_probe: int = 1,
 ) -> DataFrame:
     """One narrow assignment pass: (id, qv, cluster_id, dist) for the
@@ -87,7 +86,7 @@ def _assign_to_centroids(
     row instead of just the argmin — min(n_probe, k) rows per vector with
     an extra ``probe_rank`` column (0 = nearest; stable sort, so rank
     ties break to the smallest cid). This is IVF-style multi-probe
-    (similarity.ivf_topk's n_probe, applied to the semantic tier): a
+    (similarity.ivf_cosine_topk's n_probe, applied to the semantic tier): a
     vector near a Voronoi boundary also searches its runner-up cluster(s),
     which is what makes cluster-scoped dedup robust to boundary splits —
     the measured recall knee in tools/codebook_drift.py.
@@ -101,14 +100,6 @@ def _assign_to_centroids(
     through untouched — the per-cell ndarray wrapping the earlier
     mapInPandas form paid (round 12, guide §4.2) is gone; the distance
     math and tie rules are unchanged, so assignments are bit-identical.
-
-    ``broadcast_state=True`` ships the k×dim centroid state as a Spark
-    broadcast variable instead of inside the task closure: with
-    corpus-proportional k (k = N/500) on 10⁹ vectors the closure would
-    carry multi-GB of centroid lists PER TASK, while a broadcast is sent
-    once per executor over the torrent protocol. Results are bit-identical
-    (differential-tested); the closure path stays the default because at
-    registry/test scale the broadcast round-trip is pure overhead.
 
     ``id_col`` must be int64 (the emitted Arrow schema declares
     ``{id_col} long`` and the column passes through untouched — a
@@ -133,40 +124,29 @@ def _assign_to_centroids(
             f"count={c_max}): shard the corpus (by language/source) before "
             "clustering — see the module docstring's ~2e8-vector bound"
         )
-    state = (cids, S, C, np.einsum("kd,kd->k", S, S), C * C)
-    if broadcast_state:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        bstate = spark.sparkContext.broadcast(state)
-        state = None  # keep the k×dim arrays OUT of the task closure
-    else:
-        bstate = None
-
+    ss, c2i = np.einsum("kd,kd->k", S, S), C * C
+    c2f = c2i.astype(np.float64)
     p = max(1, min(int(n_probe), len(cur)))
 
     def fn(batches):
         import pyarrow as pa
 
-        b_cids, b_S, b_C, b_ss, b_c2i = bstate.value if bstate is not None else state
-        b_c2f = b_c2i.astype(np.float64)
-        b_dim = b_S.shape[1]
         for rb in batches:
             n = rb.num_rows
             if not n:
                 continue
-            X = np.asarray(rb.column(1).flatten()).reshape(n, b_dim)
-            dots = X @ b_S.T
+            X = np.asarray(rb.column(1).flatten()).reshape(n, dim)
+            dots = X @ S.T
             xx = np.einsum("nd,nd->n", X, X)
-            D = b_c2i[None, :] * xx[:, None] - 2 * b_C[None, :] * dots + b_ss[None, :]
-            dist = D.astype(np.float64) / b_c2f[None, :]
+            D = c2i[None, :] * xx[:, None] - 2 * C[None, :] * dots + ss[None, :]
+            dist = D.astype(np.float64) / c2f[None, :]
             if p == 1:
                 j = np.argmin(dist, axis=1)
                 yield pa.RecordBatch.from_arrays(
                     [
                         rb.column(0),
                         rb.column(1),
-                        pa.array(b_cids[j]),
+                        pa.array(cids[j]),
                         pa.array(dist[np.arange(n), j]),
                     ],
                     names=[id_col, "qv", "cluster_id", "dist"],
@@ -181,7 +161,7 @@ def _assign_to_centroids(
                     [
                         rb.column(0).take(idx),
                         rb.column(1).take(idx),
-                        pa.array(b_cids[J].ravel()),
+                        pa.array(cids[J].ravel()),
                         pa.array(dist[rows, J].ravel()),
                         pa.array(np.tile(np.arange(p, dtype=np.int64), n)),
                     ],
@@ -202,7 +182,6 @@ def _train_partials(
     id_col: str,
     cur: list[tuple[int, list[int], int]],
     *,
-    broadcast_state: bool = False,
     sum_col: str = "qv",
 ) -> DataFrame:
     """One Lloyd TRAINING pass fused into a single Arrow task pass: assign
@@ -260,15 +239,8 @@ def _train_partials(
         )
     k = len(cur)
     two_cols = sum_col != "qv"
-    state = (cids, S, C, np.einsum("kd,kd->k", S, S), C * C)
-    if broadcast_state:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        bstate = spark.sparkContext.broadcast(state)
-        state = None  # keep the k×dim arrays OUT of the task closure
-    else:
-        bstate = None
+    ss, c2i = np.einsum("kd,kd->k", S, S), C * C
+    c2f = c2i.astype(np.float64)
 
     def fn(batches):
         # mapInArrow + flat-values reshape: each batch's qv ListArray is
@@ -279,10 +251,6 @@ def _train_partials(
         # code" only pays when the batch really is one buffer).
         import pyarrow as pa
 
-        b_cids, b_S, b_C, b_ss, b_c2i = (
-            bstate.value if bstate is not None else state
-        )
-        c2f = b_c2i.astype(np.float64)
         sums = np.zeros((k, dim), dtype=np.int64)
         counts = np.zeros(k, dtype=np.int64)
         seen = False
@@ -297,13 +265,9 @@ def _train_partials(
                 if two_cols
                 else X
             )
-            dots = X @ b_S.T
+            dots = X @ S.T
             xx = np.einsum("nd,nd->n", X, X)
-            D = (
-                b_c2i[None, :] * xx[:, None]
-                - 2 * b_C[None, :] * dots
-                + b_ss[None, :]
-            )
+            D = c2i[None, :] * xx[:, None] - 2 * C[None, :] * dots + ss[None, :]
             j = np.argmin(D.astype(np.float64) / c2f[None, :], axis=1)
             counts += np.bincount(j, minlength=k)
             np.add.at(sums, j, M)
@@ -320,7 +284,7 @@ def _train_partials(
             offsets, pa.array(sums[nz].ravel())
         )
         yield pa.RecordBatch.from_arrays(
-            [pa.array(b_cids[nz]), pa.array(counts[nz]), s_col],
+            [pa.array(cids[nz]), pa.array(counts[nz]), s_col],
             names=["cluster_id", "c", "s"],
         )
 
@@ -495,7 +459,6 @@ def kmeans_int8(
     n_iter: int = 3,
     qdf: DataFrame | None = None,
     seed: str = "id",
-    broadcast_state: bool = False,
     state_out: list | None = None,
 ) -> DataFrame:
     """Fixed-iteration integer Lloyd k-means; returns one row per input id:
@@ -525,10 +488,6 @@ def kmeans_int8(
 
     Seeding fewer than k clusters (corpus smaller than k) warns and
     proceeds with the available rows; an empty corpus raises.
-
-    ``broadcast_state`` forwards to :func:`_assign_to_centroids` — ship
-    the per-iteration centroid state as a broadcast variable instead of
-    in the task closure (the 10⁹-vector path; results identical).
 
     ``state_out`` (a list) receives the FINAL (cid, s, c) centroid state —
     the frozen model an incremental pipeline assigns LATER batches against
@@ -586,7 +545,7 @@ def kmeans_int8(
             # exact, so the fold order cannot change totals.
             new: dict[int, tuple[list[int], int]] = {}
             for r in _collect_partials(
-                _train_partials(base, id_col, cents, broadcast_state=broadcast_state),
+                _train_partials(base, id_col, cents),
                 n_tasks=n_tasks,
                 k=len(cents),
                 dim=dim,
@@ -608,9 +567,7 @@ def kmeans_int8(
 
     if state_out is not None:
         state_out.extend(cents)
-    return _assign_to_centroids(
-        base, id_col, cents, broadcast_state=broadcast_state
-    ).drop("qv")
+    return _assign_to_centroids(base, id_col, cents).drop("qv")
 
 
 def semantic_dedup_pairs(
@@ -734,10 +691,15 @@ def semantic_dedup_pairs(
 
 
 def _unit_micro_col(vec_col: str):
-    """The m column of :func:`unit_micro_vectors` as a bare expression, so
-    the fused codebook pass can derive it in the same projection as qv.
-    One SQL-parser call (see _int_norm_sq); double literals explicit so no
-    DECIMAL sneaks into the engine-exact IEEE chain."""
+    """Each vector L2-normalized then quantized to integer micro-units —
+    m_i = ⌊(v_i / max(‖v‖, 1e-30))·10⁶ + 0.5⌋ — as a bare expression, so
+    the fused codebook pass derives it in the same projection as qv. Every
+    step is a single exactly-rounded IEEE op over an ORDERED fold (the norm
+    is a left fold over the array, mirrored by DuckDB's ``list_reduce``),
+    so the integers are bit-identical on any engine — which is what lets
+    the codebook built from their sums be oracle-hashed. One SQL-parser
+    call (see _int_norm_sq); double literals explicit so no DECIMAL sneaks
+    into the engine-exact IEEE chain."""
     c = f"`{vec_col}`"
     return F.expr(
         f"transform({c}, v -> CAST(floor(CAST(v AS DOUBLE) / "
@@ -745,16 +707,6 @@ def _unit_micro_col(vec_col: str):
         f"(a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), 1E-30) "
         f"* 1.0E6 + 0.5D) AS BIGINT))"
     )
-
-
-def unit_micro_vectors(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
-    """(id, m): each vector L2-normalized then quantized to integer
-    micro-units — m_i = ⌊(v_i / max(‖v‖, 1e-30))·10⁶ + 0.5⌋. Every step is
-    a single exactly-rounded IEEE op over an ORDERED fold (the norm is a
-    left fold over the array, mirrored by DuckDB's ``list_reduce``), so
-    the integers are bit-identical on any engine — which is what lets the
-    codebook built from their sums be oracle-hashed."""
-    return df.select(F.col(id_col), _unit_micro_col(vec_col).alias("m"))
 
 
 def train_ivf_codebook(
@@ -768,8 +720,7 @@ def train_ivf_codebook(
     """Trained IVF codebook: cluster the corpus with :func:`kmeans_int8`,
     then emit each cluster's elementwise floor-MEAN of the L2-NORMALIZED,
     micro-unit-quantized vectors as (centroid_id, cv array<long>) — the
-    input operators/similarity.ivf_assignments accepts in place of its
-    first-ids stand-in. Two deliberate choices:
+    codebook :func:`ivf_topk_trained` serves. Two deliberate choices:
 
     - Normalize BEFORE averaging: int8 quantization is per-vector
       scale-invariant, so the clustering is direction-only (spherical) and
@@ -778,7 +729,7 @@ def train_ivf_codebook(
       direction (measured recall@10 0.7 vs 0.9+ with the normalized mean
       on the random fixture).
     - INTEGER micro-unit arithmetic end to end: per-component unit values
-      are floored to micro-units (:func:`unit_micro_vectors`, engine-exact),
+      are floored to micro-units (:func:`_unit_micro_col`, engine-exact),
       summed per cluster as exact int64s (map-side combinable), and divided
       by the member count with ONE floor at the end — so the codebook is
       bit-identical on any engine and the trained path can be DuckDB
@@ -948,10 +899,9 @@ def ivf_topk_trained(
        ``cos_micro`` = ⌊cosine·10⁶ + 0.5⌋ (exact integer across engines).
 
     Returns (id, centroid_id, cos_micro) ordered by (cos_micro desc, id),
-    limit k. At scale steps 2's output is the inverted file (write
-    partitioned by centroid_id) and step 4 dynamic-partition-prunes it —
-    identical shape to similarity.ivf_cosine_topk_pruned, which accepts
-    this codebook directly."""
+    limit k. At scale step 2's output is the inverted file (write
+    partitioned by centroid_id), and step 4's broadcast probe join on that
+    column dynamic-partition-prunes it."""
     qdf = quantized_vectors(df, vec_col, id_col).withColumn(
         "nx", _int_norm_sq("qv")
     )
@@ -1064,7 +1014,6 @@ def incremental_semantic_verdicts(
     threshold: float = 0.95,
     corpus_qdf: DataFrame | None = None,
     incoming_qdf: DataFrame | None = None,
-    broadcast_state: bool = False,
     state: list | None = None,
     corpus_assigned: DataFrame | None = None,
     n_probe: int = 1,
@@ -1104,7 +1053,7 @@ def incremental_semantic_verdicts(
 
     ``n_probe > 1`` compares each incoming vector against its top-p
     NEAREST clusters instead of only the argmin (IVF multi-probe, the
-    same knob as similarity.ivf_topk): a twin that lands just across a
+    same knob as similarity.ivf_cosine_topk): a twin that lands just across a
     Voronoi boundary from its stored source — the dominant recall-loss
     mode under codebook staleness, measured in tools/codebook_drift.py —
     is still compared against it. Pair space grows to
@@ -1138,17 +1087,12 @@ def incremental_semantic_verdicts(
             k=k,
             n_iter=n_iter,
             qdf=corpus_qdf,
-            broadcast_state=broadcast_state,
             state_out=state,
         )
     else:
         corpus_assign = None
     inc_probe = _assign_to_centroids(
-        incoming_qdf,
-        id_col,
-        state,
-        broadcast_state=broadcast_state,
-        n_probe=n_probe,
+        incoming_qdf, id_col, state, n_probe=n_probe
     )
     # gate on the EMITTED schema, not the requested n_probe:
     # _assign_to_centroids clamps p = min(n_probe, k) and omits probe_rank
@@ -1177,9 +1121,7 @@ def incremental_semantic_verdicts(
         # over the corpus (still no re-clustering)
         if corpus_qdf is None:
             corpus_qdf = quantized_vectors(corpus, vec_col, id_col)
-        corp_base = _assign_to_centroids(
-            corpus_qdf, id_col, state, broadcast_state=broadcast_state
-        )
+        corp_base = _assign_to_centroids(corpus_qdf, id_col, state)
     corp_side = corp_base.select(
         F.col(id_col).alias("corp_id"),
         F.col("qv").alias("qb"),

@@ -283,9 +283,3 @@ def connected_components_star(
         )
     )
 
-
-def canonical_per_component(components: DataFrame) -> DataFrame:
-    """One row per component of a (node, component) labeling: its minimum
-    node id as the canonical representative (matches the component id by
-    construction)."""
-    return components.groupBy("component").agg(F.min("node").alias("canonical"))

@@ -969,7 +969,6 @@ def incremental_duplicated_spans(
     id_col: str,
     *,
     w: int = 10,
-    broadcast_batch: bool = True,
     corpus_windows: DataFrame | None = None,
 ) -> DataFrame:
     """Batch-vs-corpus substring dedup — the crawl-shaped form of
@@ -992,12 +991,9 @@ def incremental_duplicated_spans(
     incoming doc shares only with OTHER INCOMING docs does NOT count —
     batch-internal duplication is the full operator's job after admission.
 
-    ``broadcast_batch`` (default True) hints the batch's distinct window
-    hashes — and the matched subset, which is no larger — to both joins;
-    right for the crawl shape (a batch is MBs against a TB corpus). A
-    backfill-sized "batch" whose distinct windows exceed executor memory
-    should pass False and let the planner shuffle both joins instead —
-    results identical, exchanges instead of broadcasts.
+    The batch's distinct window hashes — and the matched subset, which is
+    no larger — are hinted to broadcast into both joins: a crawl batch is
+    MBs against a TB corpus.
 
     ``corpus_windows`` serves the corpus side from a STORED
     :func:`span_windows` artifact (append each admitted batch's windows)
@@ -1010,17 +1006,16 @@ def incremental_duplicated_spans(
         )
     inc_toks = _span_toks(incoming, text_col, id_col)
     inc_grams = _span_grams(inc_toks, id_col, w)
-    hint = F.broadcast if broadcast_batch else (lambda df: df)
     corpus_gh = (
         corpus_windows.select("gh").distinct()
         if corpus_windows is not None
         else span_windows(corpus, text_col, id_col, w=w)
     )
     matched = corpus_gh.join(
-        hint(inc_grams.select("gh").distinct()), "gh", "left_semi"
+        F.broadcast(inc_grams.select("gh").distinct()), "gh", "left_semi"
     )
     starts = (
-        inc_grams.join(hint(matched), "gh")
+        inc_grams.join(F.broadcast(matched), "gh")
         .groupBy(id_col)
         .agg(F.array_sort(F.collect_set("pos0")).alias("__starts"))
     )

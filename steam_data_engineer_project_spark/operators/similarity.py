@@ -9,10 +9,18 @@
   scale for small k).
 
 - lsh_bucket_cosine_topk: sign-projection LSH prefilter. Each vector gets a
-  bucket id from the signs of ``n_planes`` chosen coordinates (axis-aligned
-  hyperplanes — deterministic, engine-portable); only vectors in the query's
-  bucket are scored. At scale this turns a full scan into a partition-prunable
-  predicate if the table is written bucketed/partitioned by the LSH bucket.
+  bucket id from the signs of ``LSH_PLANES`` chosen coordinates (axis-aligned
+  hyperplanes — deterministic, engine-portable); only vectors in buckets
+  within ``LSH_PROBE_HAMMING`` bit flips of the query's are scored.
+  lsh_bucket_cosine_topk_pruned serves the same answer from a table written
+  partitioned by the bucket, where the probe set prunes the scan itself.
+
+- ivf_cosine_topk: IVF coarse quantizer over a deterministic first-ids
+  codebook; probes the centroids nearest the query and exact-scores their
+  members. The trained-codebook IVF path is clustering.ivf_topk_trained.
+
+Every operator takes the query vector as a list — a literal of the plan —
+so the scan is embarrassingly parallel and no plan joins the query back in.
 """
 
 from __future__ import annotations
@@ -24,11 +32,11 @@ from pyspark.sql import functions as F
 #: the coordinate stride, coprime to the usual embedding widths
 LSH_PLANES = 8
 LSH_STRIDE = 7
-#: multi-probe radius of :func:`lsh_bucket_cosine_topk` in bit flips
-LSH_PROBE_HAMMING = 1
-#: partition columns of the bucketed / inverted-file layouts
+#: multi-probe radius of both LSH top-k operators in bit flips: the query
+#: bucket plus its one- and two-bit-flip neighbors, 37 of 256 buckets
+LSH_PROBE_HAMMING = 2
+#: partition column of the bucketed layout
 BUCKET_COL = "bucket"
-CENTROID_COL = "centroid_id"
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -167,28 +175,22 @@ def ivf_assignments(
     vec_col: str,
     id_col: str,
     n_centroids: int = 16,
-    centroids: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer: assign every vector to its nearest centroid.
 
     Centroids are the embeddings of the ``n_centroids`` smallest ids —
-    deterministic and engine-portable (a trained k-means codebook would be
-    loaded the same way: as a small DataFrame broadcast into the assignment
-    join). Assignment is a broadcast nested-loop over the tiny centroid set
-    followed by a map-side-combinable ``max(struct(...))`` argmax — one
-    narrow pass over the data, no wide shuffle, so it scales linearly.
+    deterministic and engine-portable (the trained-codebook path is
+    operators/clustering.ivf_topk_trained). Assignment is a broadcast
+    nested-loop over the tiny centroid set followed by a
+    map-side-combinable ``max(struct(...))`` argmax — one narrow pass over
+    the data, no wide shuffle, so it scales linearly.
 
     Ties on the (6-dp-rounded) cosine break toward the smallest centroid id.
     Returns (assignments(id, centroid_id, centroid_cos), centroids).
-
-    Pass ``centroids`` (centroid_id, cv) to use a TRAINED codebook —
-    operators/clustering.train_ivf_codebook produces one from integer
-    k-means; the default remains the deterministic first-ids stand-in.
     """
-    if centroids is None:
-        centroids = df.filter(F.col(id_col) < n_centroids).select(
-            F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cv")
-        )
+    centroids = df.filter(F.col(id_col) < n_centroids).select(
+        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cv")
+    )
     scored = df.crossJoin(F.broadcast(centroids)).select(
         F.col(id_col),
         F.col("centroid_id"),
@@ -214,7 +216,6 @@ def ivf_cosine_topk(
     k: int = 10,
     n_centroids: int = 16,
     n_probe: int = 4,
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF ANN top-k: probe the ``n_probe`` centroids nearest the query, then
     exact-score only vectors assigned to those centroids.
@@ -226,9 +227,7 @@ def ivf_cosine_topk(
 
     Returns (id_col, centroid_id, cosine) ordered by rounded cosine, id.
     """
-    assigned, centroids = ivf_assignments(
-        df, vec_col, id_col, n_centroids, centroids=centroids
-    )
+    assigned, centroids = ivf_assignments(df, vec_col, id_col, n_centroids)
     q = F.array(*[F.lit(float(v)) for v in query_vec])
     probe = (
         centroids.select(
@@ -256,62 +255,25 @@ def lsh_bucket_cosine_topk_pruned(
     id_col: str,
     query_vec: list[float],
     k: int = 10,
-    n_planes: int = LSH_PLANES,
-    probe_hamming: int = LSH_PROBE_HAMMING,
 ) -> DataFrame:
     """The SCALE PATH of :func:`lsh_bucket_cosine_topk`: the table has been
     WRITTEN partitioned by its LSH bucket (``write.partitionBy(BUCKET_COL)``),
     so the probe set becomes a literal IN-predicate on the partition column —
     the scan reads only the probed bucket directories (static partition
     pruning: the FileScan's PartitionFilters carry the probe list, asserted
-    in tests/test_operators.py). Probe buckets are enumerated driver-side
-    from the query bucket (≤ 1 + n_planes ids for Hamming-1 — metadata, not
-    data). Results are identical to the in-plan variant by construction."""
-    q_bucket = query_bucket_id(query_vec, n_planes)
+    in tests/test_plans.py). Probe buckets are enumerated driver-side
+    from the query bucket (37 ids at Hamming-2 — metadata, not data).
+    Results are identical to the in-plan variant by construction."""
+    q_bucket = query_bucket_id(query_vec)
     probes = [
         b
-        for b in range(1 << n_planes)
-        if bin(b ^ q_bucket).count("1") <= probe_hamming
+        for b in range(1 << LSH_PLANES)
+        if bin(b ^ q_bucket).count("1") <= LSH_PROBE_HAMMING
     ]
     q = F.array(*[F.lit(float(v)) for v in query_vec])
     scored = df.filter(F.col(BUCKET_COL).isin(probes)).select(
         F.col(id_col),
         F.col(BUCKET_COL).cast("long").alias("bucket"),
-        F.round(cosine_similarity(F.col(vec_col), q), 6).alias("cosine"),
-    )
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
-
-
-def ivf_cosine_topk_pruned(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    centroids: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-) -> DataFrame:
-    """The SCALE PATH of :func:`ivf_cosine_topk`: the inverted file — the
-    table written partitioned by ``CENTROID_COL`` (each vector already
-    assigned) — probed via a broadcast join against the ``n_probe`` centroids
-    nearest the query. The join key is the partition column, so dynamic
-    partition pruning skips the unprobed centroid directories entirely (the
-    FileScan's PartitionFilters gain a dynamicpruning expression, asserted in
-    tests). No collect anywhere; the codebook stays a DataFrame."""
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
-    probe = (
-        centroids.select(
-            F.col(CENTROID_COL),
-            F.round(cosine_similarity(F.col("cv"), q), 6).alias("q_cos"),
-        )
-        .orderBy(F.desc("q_cos"), F.asc(CENTROID_COL))
-        .limit(n_probe)
-        .select(CENTROID_COL)
-    )
-    candidates = df.join(F.broadcast(probe), CENTROID_COL)
-    scored = candidates.select(
-        F.col(id_col),
-        F.col(CENTROID_COL).cast("long").alias("centroid_id"),
         F.round(cosine_similarity(F.col(vec_col), q), 6).alias("cosine"),
     )
     return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
@@ -326,9 +288,8 @@ def lsh_bucket_cosine_topk(
 ) -> DataFrame:
     """Approximate top-k: score only vectors in buckets within
     ``LSH_PROBE_HAMMING`` bit flips of the query's LSH bucket (multi-probe —
-    Hamming-1 probing recovers most neighbors lost to a single sign flip at
-    the cost of ``LSH_PLANES``× more candidate buckets out of
-    ``2^LSH_PLANES``).
+    Hamming-2 probing recovers most neighbors lost to one or two sign flips
+    at the cost of 37 candidate buckets out of ``2^LSH_PLANES``).
 
     Returns (id_col, bucket, cosine). On a table written bucketed/partitioned
     by the LSH id the bucket predicate prunes the scan; here it prunes
@@ -346,7 +307,7 @@ def lsh_bucket_cosine_topk(
     )
     scored = bucketed.select(
         F.col(id_col),
-        "bucket",
+        F.col("bucket").cast("long").alias("bucket"),
         F.round(cosine_similarity(F.col(vec_col), q), 6).alias("cosine"),
     )
     return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)

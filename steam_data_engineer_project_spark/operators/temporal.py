@@ -107,157 +107,6 @@ def asof_join(
     )
 
 
-def asof_join_split(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    left_ts: str,
-    right_ts: str,
-    payload: list[str],
-    range_width: float = 3600.0,
-) -> DataFrame:
-    """:func:`asof_join` for SKEWED equality keys: identical semantics, but a
-    hot key's rows no longer serialize into ONE partition's sort.
-
-    The plain formulation windows each key in a single partition — its
-    irreducible order dependency. This variant pre-splits time into coarse
-    ranges of ``range_width`` (same units as the ts columns) and windows on
-    (key, range) instead, so a hot key parallelizes across its active
-    ranges. Exactness across boundaries is preserved by CARRYING the last
-    right row into each range a left row occupies:
-
-    1. reduce the right side to its latest row per (key, range) — one
-       map-side-combinable struct-max groupBy (payload columns must be
-       orderable: no maps — pack them through the plain asof_join if not);
-    2. for every (key, range) the LEFT side occupies, find the carrier — the
-       latest reduced right row from any STRICTLY earlier range — with one
-       window over the (small) union of reduced rows and left anchors;
-    3. final window on (key, range) over {left rows, in-range right rows,
-       carriers}: inside a range the match is either an in-range right row
-       or the carrier, which is exactly the global as-of match.
-
-    Three shuffles instead of one — the price of splitting; use the plain
-    operator until a hot key binds. Differentially tested equal to
-    asof_join on skewed fixtures (tests/test_operators.py). Pick
-    ``range_width`` so a hot key's densest range stays executor-sized.
-    """
-    W = float(range_width)
-    ltypes = dict(left.dtypes)
-    rtypes = dict(right.dtypes)
-    lcols = list(left.columns)
-
-    def _rng(c):
-        return F.floor(F.col(c) / F.lit(W)).cast("long")
-
-    # (1) latest right row per (key, range): struct-max keyed by ts (unique
-    # per key+ts by precondition, so the max is total and deterministic).
-    r_last = (
-        right.withColumn("__rng", _rng(right_ts))
-        .groupBy(*on, "__rng")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col(right_ts).alias("ts"),
-                    *[F.col(c).alias(c) for c in payload],
-                )
-            ).alias("__m")
-        )
-    )
-    # (2) carrier per left-occupied (key, range): strictly-earlier-range
-    # as-of over the reduced rows. Anchors sort BEFORE same-range reduced
-    # rows, so the inclusive frame sees only ranges < theirs.
-    anchors = left.select(
-        *[F.col(c) for c in on], _rng(left_ts).alias("__rng")
-    ).distinct()
-    a2 = anchors.select(
-        *on,
-        "__rng",
-        F.lit(0).alias("__cside"),
-        F.lit(None)
-        .cast(
-            f"struct<ts:{rtypes[right_ts]},"
-            + ",".join(f"{c}:{rtypes[c]}" for c in payload)
-            + ">"
-        )
-        .alias("__m"),
-    )
-    rl2 = r_last.select(*on, "__rng", F.lit(1).alias("__cside"), "__m")
-    w_c = (
-        Window.partitionBy(*on)
-        .orderBy("__rng", "__cside")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carriers = (
-        a2.unionByName(rl2)
-        .withColumn(
-            "__carry",
-            F.last(F.when(F.col("__cside") == 1, F.col("__m")), True).over(w_c),
-        )
-        .filter((F.col("__cside") == 0) & F.col("__carry").isNotNull())
-        .select(*on, "__rng", F.col("__carry").alias("__m"))
-    )
-    # (3) final per-(key, range) window — the asof_join union/last shape.
-    l2 = left.select(
-        *[F.col(c) for c in lcols],
-        F.col(left_ts).alias("__ts"),
-        _rng(left_ts).alias("__rng"),
-        F.lit(1).alias("__side"),
-        *[F.lit(None).cast(rtypes[c]).alias(f"__p_{c}") for c in payload],
-        F.lit(None).cast(rtypes[right_ts]).alias("__rts"),
-    )
-
-    def _right_shape(df, rng_col):
-        return df.select(
-            *[F.col(c) for c in on],
-            *[
-                F.lit(None).cast(ltypes[c]).alias(c)
-                for c in lcols
-                if c not in on
-            ],
-            F.col("__m.ts").alias("__ts"),
-            rng_col.alias("__rng"),
-            F.lit(0).alias("__side"),
-            *[F.col(f"__m.{c}").alias(f"__p_{c}") for c in payload],
-            F.col("__m.ts").alias("__rts"),
-        )
-
-    r_in = _right_shape(
-        right.withColumn("__rng", _rng(right_ts)).select(
-            *on,
-            "__rng",
-            F.struct(
-                F.col(right_ts).alias("ts"),
-                *[F.col(c).alias(c) for c in payload],
-            ).alias("__m"),
-        ),
-        F.col("__rng"),
-    )
-    r_carry = _right_shape(carriers, F.col("__rng"))
-    w = (
-        Window.partitionBy(*on, "__rng")
-        .orderBy("__ts", "__side")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    packed = F.when(
-        F.col("__side") == 0,
-        F.struct(
-            F.col("__rts").alias("ts"),
-            *[F.col(f"__p_{c}").alias(c) for c in payload],
-        ),
-    )
-    return (
-        l2.unionByName(r_in)
-        .unionByName(r_carry)
-        .withColumn("__mm", F.last(packed, ignorenulls=True).over(w))
-        .filter(F.col("__side") == 1)
-        .select(
-            *[F.col(c) for c in lcols],
-            F.col("__mm.ts").alias(MATCHED_TS),
-            *[F.col(f"__mm.{c}").alias(c) for c in payload],
-        )
-    )
-
-
 def range_join_bucketed(
     points: DataFrame,
     intervals: DataFrame,

@@ -85,9 +85,11 @@ from .functions.scalars import (
     comma_split,
     date_partition_key,
     format_cents,
+    html_strip,
     initial_price,
     initial_price_cents,
     parse_discount,
+    parse_release_date,
     to_cents,
 )
 from .operators.merge import insert_ignore, merge_monotone_max, upsert_last_wins
@@ -130,9 +132,12 @@ from .operators.pii import pii_stats
 from .operators.sessionize import sessionize
 from .operators.skew import salted_aggregate
 from .operators.similarity import (
-    cosine_similarity,
+    BUCKET_COL,
+    brute_force_cosine_topk,
     embedding_near_dup_pairs,
     ivf_cosine_topk,
+    lsh_bucket_cosine_topk,
+    lsh_bucket_cosine_topk_pruned,
     lsh_bucket_id,
     quantize_int8,
 )
@@ -1098,14 +1103,15 @@ FROM parsed
 
 
 def fx_date_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F9: '12 Aug, 2020' date parse round-trip
+    """F9: '12 Aug, 2020' date parse round-trip through
+    ``functions.scalars.parse_release_date``
     (etl/transform/transform_game.py:21, format '%d %b, %Y')."""
     o = _t(spark, sf_dir, "orders")
     date_str = F.date_format("o_orderdate", "d MMM, yyyy")
     return o.select(
         "o_orderkey",
         date_str.alias("date_str"),
-        F.to_date(date_str, "d MMM, yyyy").cast("string").alias("parsed_date"),
+        parse_release_date(date_str).cast("string").alias("parsed_date"),
     )
 
 
@@ -1118,15 +1124,13 @@ FROM orders
 
 
 def fx_html_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F12: HTML tag strip + whitespace collapse
-    (etl/extract/steam_crawl_info.py:41-61)."""
+    """F12: HTML tag strip + whitespace collapse through
+    ``functions.scalars.html_strip`` (etl/extract/steam_crawl_info.py:41-61)."""
     d = _t(spark, sf_dir, "documents")
     html = F.concat(
         F.lit('<div class="desc"><b>'), F.col("text"), F.lit("</b><br/></div>")
     )
-    no_tags = F.regexp_replace(html, r"<[^>]+>", " ")
-    clean = F.trim(F.regexp_replace(no_tags, r"\s+", " "))
-    return d.select("doc_id", clean.alias("clean_text"))
+    return d.select("doc_id", html_strip(html).alias("clean_text"))
 
 
 FX_HTML_ORACLE = r"""
@@ -1664,18 +1668,6 @@ FROM fp f JOIN ntok n USING (doc_id)
 """
 
 
-def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force exact cosine top-10 against the vec_id=0 embedding.
-    Ordered by the ROUNDED score + id so both engines select identically."""
-    e = _spread(spark, sf_dir, "embeddings", "vec_id")  # HOF vector math is interpreted: spread the single-row-group scan
-    q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    scored = e.crossJoin(F.broadcast(q)).select(
-        "vec_id",
-        F.round(cosine_similarity(F.col("embedding"), F.col("qv")), 6).alias("cosine"),
-    )
-    return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(10)
-
-
 ANN_COSINE_ORACLE = """
 WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
 pairs AS (
@@ -1690,39 +1682,6 @@ pairs AS (
 SELECT vec_id, ROUND(dot / (SQRT(nx) * SQRT(ny)), 6) AS cosine
 FROM scores ORDER BY cosine DESC, vec_id LIMIT 10
 """
-
-
-def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed approximate cosine top-10: sign-projection bucket
-    prefilter (8 axis-aligned planes, stride 7, modulus = the embedding's own
-    dimension) with Hamming-2 multi-probe (the query bucket plus its one- and
-    two-bit-flip neighbors — 37 of 256 buckets, ~7× scan reduction), then
-    exact scoring within the probed buckets. The probe radius is the
-    recall/cost knob: tests/test_recall.py pins the recall@10 floor this
-    setting achieves on the near-random synthetic embeddings (real clustered
-    embedding spaces do much better at the same radius)."""
-    e = _spread(spark, sf_dir, "embeddings", "vec_id")  # HOF vector math is interpreted: spread the single-row-group scan
-    q = e.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv"),
-        lsh_bucket_id(F.col("embedding"), 8).alias("q_bucket"),
-    )
-    bucketed = e.select(
-        "vec_id", "embedding", lsh_bucket_id(F.col("embedding"), 8).alias("bucket")
-    )
-    scored = (
-        bucketed.join(
-            F.broadcast(q),
-            F.bit_count(bucketed.bucket.bitwiseXOR(q.q_bucket)) <= 2,
-        )
-        .select(
-            "vec_id",
-            F.col("bucket").cast("long").alias("bucket"),
-            F.round(cosine_similarity(F.col("embedding"), F.col("qv")), 6).alias(
-                "cosine"
-            ),
-        )
-    )
-    return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(10)
 
 
 _LSH_BITS_SQL = " + ".join(
@@ -1748,27 +1707,36 @@ FROM scores ORDER BY cosine DESC, vec_id LIMIT 10
 """
 
 
-def ann_lsh_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SCALE PATH of ann_lsh_topk, driver-verified end to end: the
-    embeddings are WRITTEN partitioned by their LSH bucket (the one-time
-    layout cost a real deployment pays at ingest), and the Hamming-2 probe
-    set becomes a literal IN-predicate on the partition column — the
-    FileScan reads only the 37/256 probed bucket directories
-    (PartitionFilters, asserted in tests/test_plans.py). Semantically
-    identical to ann_lsh_topk by construction, so it shares its oracle —
-    what this row proves is that the pruned LAYOUT returns the same answer.
+def ann_lsh_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH-bucketed approximate cosine top-10 against the vec_id=0
+    embedding, through both similarity operators, tagged by `part`:
+    sign-projection buckets (8 axis-aligned planes, stride 7, modulus = the
+    embedding's own dimension) with Hamming-2 multi-probe (the query bucket
+    plus its one- and two-bit-flip neighbors — 37 of 256 buckets), then
+    exact scoring within the probed buckets.
 
-    The layout is built once per source through ``_cached_fixture`` (an
-    ingest-time cost, not a per-query one), so repeated bench/driver
-    invocations measure the query, not the re-ingest."""
+    - in_plan (:func:`lsh_bucket_cosine_topk`): buckets computed in the
+      plan, so the probe prunes compute;
+    - pruned (:func:`lsh_bucket_cosine_topk_pruned`): the embeddings are
+      WRITTEN partitioned by their bucket (the one-time layout cost a real
+      deployment pays at ingest), and the probe set becomes a literal
+      IN-predicate on the partition column — the FileScan reads only the
+      37 probed bucket directories (PartitionFilters, asserted in
+      tests/test_plans.py).
+
+    Identical answers by construction: one shared oracle, duplicated per
+    tag. The probe radius is the recall/cost knob: tests/test_recall.py
+    pins the recall@10 floor it achieves on the near-random synthetic
+    embeddings. The layout is built once per source through
+    ``_cached_fixture`` (an ingest-time cost, not a per-query one)."""
     e = _t(spark, sf_dir, "embeddings")
 
     def _build(stage: str) -> None:
         e.select(
             "vec_id",
             "embedding",
-            lsh_bucket_id(F.col("embedding"), 8).alias("bucket"),
-        ).write.partitionBy("bucket").mode("overwrite").parquet(
+            lsh_bucket_id(F.col("embedding")).alias(BUCKET_COL),
+        ).write.partitionBy(BUCKET_COL).mode("overwrite").parquet(
             os.path.join(stage, "embeddings_by_bucket")
         )
 
@@ -1776,33 +1744,17 @@ def ann_lsh_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cached_fixture(sf_dir, "ann_layout", ("embeddings",), _build),
         "embeddings_by_bucket",
     )
-    # the query vector is driver-side metadata (one row), as any ANN client's
-    # — its own job, as a literal of the plan served below
-    qv = [float(x) for x in e.filter(F.col("vec_id") == 0).first()["embedding"]]
-    from .operators.similarity import lsh_bucket_cosine_topk_pruned
-
-    return lsh_bucket_cosine_topk_pruned(
-        spark.read.parquet(layout),
-        "embedding",
-        "vec_id",
-        qv,
-        k=10,
-        n_planes=8,
-        probe_hamming=2,
+    # the query vector is driver-side metadata (one row), as any ANN
+    # client's — its own job, as a literal of both legs' plans
+    qv = e.filter(F.col("vec_id") == 0).first()["embedding"]
+    spread = _spread(spark, sf_dir, "embeddings", "vec_id")  # HOF vector math is interpreted: spread the single-row-group scan
+    a = lsh_bucket_cosine_topk(spread, "embedding", "vec_id", qv, k=10)
+    b = lsh_bucket_cosine_topk_pruned(
+        spark.read.parquet(layout), "embedding", "vec_id", qv, k=10
     )
-
-
-def ann_lsh_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both LSH top-k paths, tagged: part='in_plan' computes buckets in the
-    plan (prunes compute), part='pruned' reads the bucket-PARTITIONED layout
-    so the probe set prunes the SCAN (PartitionFilters — plan-asserted in
-    tests/test_plans.py). Identical answers by construction: one shared
-    oracle, duplicated per tag."""
-    a = ann_lsh_topk(spark, sf_dir).select(F.lit("in_plan").alias("part"), "*")
-    b = ann_lsh_topk_pruned(spark, sf_dir).select(
-        F.lit("pruned").alias("part"), "*"
+    return a.select(F.lit("in_plan").alias("part"), "*").unionByName(
+        b.select(F.lit("pruned").alias("part"), "*")
     )
-    return a.unionByName(b)
 
 
 ANN_LSH_SUITE_ORACLE = f"""
@@ -1817,7 +1769,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     sibling of the MinHash/SimHash text dedups), tagged by `part`:
 
     - lsh_pair: sign-projection LSH bucket self-join (8 planes, stride 7 —
-      identical family to ann_lsh_topk) then exact cosine >= 0.30 on the
+      identical family to ann_lsh_suite) then exact cosine >= 0.30 on the
       surviving candidates. The bucket equi-join keeps the pair set
       ~n²/256; at scale the table is written bucketed by the LSH id so the
       join is co-partitioned.
@@ -2112,24 +2064,6 @@ SELECT vec_id, CAST(centroid_id AS BIGINT) AS centroid_id,
 FROM fpairs GROUP BY vec_id, centroid_id
 ORDER BY cosine DESC, vec_id LIMIT 10
 """
-
-
-def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """int8-quantized cosine top-10 against the vec_id=0 embedding: both
-    sides symmetric-quantized (scale = 127/max|x|, floor(x·scale+0.5)), the
-    per-vector scales cancel in cosine, so scoring runs on small integers —
-    4× narrower vectors on the wire. Query side quantized JVM-side from the
-    same table scan (broadcast), mirroring ann_cosine_topk's shape."""
-    e = _spread(spark, sf_dir, "embeddings", "vec_id")  # HOF vector math is interpreted: spread the single-row-group scan
-    q = e.filter(F.col("vec_id") == 0).select(
-        quantize_int8("embedding").alias("qv")
-    )
-    data = e.select("vec_id", quantize_int8("embedding").alias("dv"))
-    scored = data.crossJoin(F.broadcast(q)).select(
-        "vec_id",
-        F.round(cosine_similarity(F.col("dv"), F.col("qv")), 6).alias("q_cosine"),
-    )
-    return scored.orderBy(F.desc("q_cosine"), F.asc("vec_id")).limit(10)
 
 
 _Q8 = (
@@ -7087,22 +7021,36 @@ CORPUS_STORE_ORACLE = (
 
 
 def ann_exact_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-scoring ANN suite, tagged by `part`: `brute` (float cosine)
-    and `quantized` (int8 scale-cancelling cosine) top-10 against the
-    vec_id=0 query — the two standalone queries folded into one registry
-    entry to stay under the driver's 50-entry cap (both keep their own
-    oracle arms, and the component queries remain importable)."""
-    brute = ann_cosine_topk(spark, sf_dir).select(
-        F.lit("brute").alias("part"),
-        "vec_id",
-        F.col("cosine").alias("score"),
+    """Exact-scoring ANN suite: :func:`brute_force_cosine_topk` top-10
+    against the vec_id=0 query, tagged by `part` — `brute` over the float
+    embeddings, `quantized` over their int8 quantization (symmetric
+    scale = 127/max|x|, floor(x·scale+0.5); the per-vector scales cancel in
+    cosine, so scoring runs on small integers — 4× narrower vectors on the
+    wire)."""
+    q = (  # one-row job: both query vectors are literals of the plans below
+        _t(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") == 0)
+        .select("embedding", quantize_int8("embedding").alias("q8"))
+        .first()
     )
-    quant = ann_quantized_topk(spark, sf_dir).select(
-        F.lit("quantized").alias("part"),
+    e = _spread(spark, sf_dir, "embeddings", "vec_id")  # HOF vector math is interpreted: spread the single-row-group scan
+    brute = brute_force_cosine_topk(e, "embedding", "vec_id", q["embedding"], k=10)
+    quant = brute_force_cosine_topk(
+        e.select("vec_id", quantize_int8("embedding").alias("q8")),
+        "q8",
         "vec_id",
-        F.col("q_cosine").alias("score"),
+        q["q8"],
+        k=10,
     )
-    return brute.unionByName(quant)
+    return brute.select(
+        F.lit("brute").alias("part"), "vec_id", F.col("cosine").alias("score")
+    ).unionByName(
+        quant.select(
+            F.lit("quantized").alias("part"),
+            "vec_id",
+            F.col("cosine").alias("score"),
+        )
+    )
 
 
 ANN_EXACT_SUITE_ORACLE = f"""

@@ -29,9 +29,9 @@ SF_DIR = "/root/testdata/sf0.001"
 #: where. A failure prints the measured entry to paste once the extra work
 #: is intended.
 STAGE_BUDGET = {
-    "ann_exact_suite": 7,
+    "ann_exact_suite": 5,
     "ann_ivf_topk": 18,
-    "ann_lsh_suite": 9,
+    "ann_lsh_suite": 7,
     "cdc_suite": 3,
     "corpus_pipeline_e2e": 67,  # 64-66 measured in 63 warm runs (66 in 41); pinned at 67 because the same racing joins gave 82-85 before the funnel counts moved onto the checkpoints (18 stages fewer at each end), the top value in 3 of 67 runs: AQE picks a join's strategy and build side by which of its input stages finished first — seen at the decontamination join and the leakage join, plus one untraced site — and the slower choice adds a broadcast or a shuffle stage at each; the max is pinned
     "corpus_store_suite": 60,  # 59 or 60: AQE plans the span leg's coverage left join (operators/dedup.py:_span_coverage) as a build-left shuffled hash join, or, when the start-list aggregate's input stages finish first, as a broadcast of that aggregate — one more stage; the max is pinned

@@ -562,49 +562,6 @@ def test_lsh_bucketed_layout_prunes_partitions_and_matches(spark):
         shutil.rmtree(work, ignore_errors=True)
 
 
-def test_ivf_inverted_file_prunes_partitions_and_matches(spark):
-    """similarity.ivf_cosine_topk_pruned over the inverted file (table
-    partitioned by centroid_id): the broadcast probe join must prune the
-    scan via dynamic partition pruning, and results must equal the
-    assign-in-plan variant."""
-    import os
-    import shutil
-
-    from steam_data_engineer_project_spark.operators.similarity import (
-        ivf_assignments,
-        ivf_cosine_topk,
-        ivf_cosine_topk_pruned,
-    )
-
-    work = _scratch("ivf_layout_")
-    try:
-        e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        qv = [float(x) for x in e.filter(F.col("vec_id") == 0).first().embedding]
-        assigned, centroids = ivf_assignments(e, "embedding", "vec_id", 16)
-        layout = os.path.join(work, "inverted_file")
-        e.join(assigned.select("vec_id", "centroid_id"), "vec_id").write.partitionBy(
-            "centroid_id"
-        ).parquet(layout)
-
-        idf = spark.read.parquet(layout)
-        out = ivf_cosine_topk_pruned(
-            idf, "embedding", "vec_id", centroids, qv, k=10, n_probe=4
-        )
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "dynamicpruning" in plan, plan
-
-        got = [(r.vec_id, r.centroid_id, r.cosine) for r in out.collect()]
-        want = [
-            (r.vec_id, r.centroid_id, r.cosine)
-            for r in ivf_cosine_topk(
-                e, "embedding", "vec_id", qv, k=10, n_centroids=16, n_probe=4
-            ).collect()
-        ]
-        assert got == want
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
 # ------------------------------------------------------------ temporal joins
 
 
@@ -716,67 +673,6 @@ def test_asof_join_matches_bruteforce_on_random_data(spark):
             cands = [(rts, v) for (rk, rts, v) in rrows if rk == k and rts <= ts]
             want = max(cands, key=lambda c: c[0]) if cands else (None, None)
             assert got[lid] == want, f"seed={seed} lid={lid}"
-
-
-def test_asof_join_split_matches_plain_on_skewed_data(spark):
-    """asof_join_split must equal asof_join EXACTLY on a hot-key fixture:
-    one key holds most rows, ranges exist where the hot key has left rows
-    but NO right rows (the carrier must cross several empty ranges), plus
-    boundary-exact timestamps and a key with no earlier right row at all."""
-    import random
-
-    from steam_data_engineer_project_spark.operators.temporal import (
-        asof_join,
-        asof_join_split,
-    )
-
-    for seed in range(3):
-        rng = random.Random(seed)
-        lrows, rrows, used = [], [], set()
-        lid = 0
-        # hot key 0: left rows over [0, 400); right rows ONLY in [0, 100) —
-        # ranges 1..3 (width 100) have no right rows, forcing carry-across.
-        for _ in range(120):
-            lrows.append((0, rng.randrange(0, 400), lid)); lid += 1
-        for _ in range(25):
-            ts = rng.randrange(0, 100)
-            if (0, ts) not in used:
-                used.add((0, ts))
-                rrows.append((0, ts, rng.random()))
-        # boundary-exact: left and right rows AT a range boundary (ts=200)
-        lrows.append((0, 200, lid)); lid += 1
-        if (0, 200) not in used:
-            used.add((0, 200)); rrows.append((0, 200, 7.7))
-        # cold keys, including one whose left rows precede every right row
-        for k in (1, 2):
-            for _ in range(10):
-                lrows.append((k, rng.randrange(0, 400), lid)); lid += 1
-            for _ in range(5):
-                ts = rng.randrange(300, 400)
-                if (k, ts) not in used:
-                    used.add((k, ts)); rrows.append((k, ts, rng.random()))
-        left = spark.createDataFrame(lrows, "k long, ts long, lid long")
-        right = spark.createDataFrame(rrows, "k long, ts long, v double")
-        plain = {
-            r.lid: (r.asof_ts, r.v)
-            for r in asof_join(left, right, ["k"], "ts", "ts", ["v"]).collect()
-        }
-        split = {
-            r.lid: (r.asof_ts, r.v)
-            for r in asof_join_split(
-                left, right, ["k"], "ts", "ts", ["v"], range_width=100.0
-            ).collect()
-        }
-        assert split == plain, f"seed={seed}"
-        # sanity: the fixture really exercised carriers (some hot-key match
-        # came from a range earlier than the left row's own)
-        crossed = [
-            1
-            for (k, ts, i) in lrows
-            if k == 0 and plain[i][0] is not None
-            and ts // 100 > plain[i][0] // 100
-        ]
-        assert crossed, "fixture never crossed a range boundary"
 
 
 # ------------------------------------------------- chunking & sequence packing
@@ -1616,7 +1512,6 @@ def test_near_dup_pairs_to_canonical_docs(spark):
     canonical doc per cluster; components never straddle a
     deterministic_split (the leakage guarantee the split exists for)."""
     from steam_data_engineer_project_spark.operators.components import (
-        canonical_per_component,
         connected_components,
     )
     from steam_data_engineer_project_spark.operators.sampling import (
@@ -1629,7 +1524,8 @@ def test_near_dup_pairs_to_canonical_docs(spark):
     ).filter(F.col("jaccard") >= 0.5)
     comps = connected_components(pairs, "id_a", "id_b").persist()
     assert comps.count() > 0
-    canon = canonical_per_component(comps)
+    # one canonical doc per cluster: the node that labels its component
+    canon = comps.filter(F.col("node") == F.col("component"))
     assert canon.count() < comps.count()  # real clustering happened
 
     # route every member by its COMPONENT key: the whole cluster lands in
@@ -2506,32 +2402,6 @@ def test_semantic_dedup_cap_bounds_identical_flood_linearly(spark):
     assert {r.id_b for r in got} == set(range(1, n))
 
 
-def test_kmeans_broadcast_state_matches_closure_path(spark):
-    """broadcast_state=True (centroid state shipped as a Spark broadcast
-    variable, the 10⁹-vector path) is bit-identical to the default closure
-    path — same assignments, same exact distances."""
-    from steam_data_engineer_project_spark.operators.clustering import (
-        kmeans_int8,
-    )
-
-    rows = [
-        (i, [((i * 31 + j * 17) % 13 - 6) * 1.0 for j in range(8)])
-        for i in range(60)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    base = {
-        r.vec_id: (r.cluster_id, r.dist)
-        for r in kmeans_int8(df, "embedding", "vec_id", k=4, n_iter=3).collect()
-    }
-    bcast = {
-        r.vec_id: (r.cluster_id, r.dist)
-        for r in kmeans_int8(
-            df, "embedding", "vec_id", k=4, n_iter=3, broadcast_state=True
-        ).collect()
-    }
-    assert base == bcast
-
-
 def test_train_partials_match_assignment_aggregation(spark):
     """Round-12 optimization guard: the fused Arrow training pass
     (_train_partials — assignment + per-task partial sums in one
@@ -2570,21 +2440,18 @@ def test_train_partials_match_assignment_aggregation(spark):
         )
         .collect()
     }
-    for bstate in (False, True):
-        # fold the per-task (cluster_id, c, s array) partials exactly the
-        # way kmeans_int8's driver loop does (round 12: the JVM groupBy
-        # was replaced by this bounded driver-side fold)
-        got: dict = {}
-        for r in _train_partials(
-            qdf, "vec_id", cents, broadcast_state=bstate
-        ).collect():
-            cid, c, s = int(r[0]), int(r[1]), [int(v) for v in r[2]]
-            if cid in got:
-                ps, pc = got[cid]
-                got[cid] = ([a + b for a, b in zip(ps, s)], pc + c)
-            else:
-                got[cid] = (s, c)
-        assert got == want, f"broadcast_state={bstate}"
+    # fold the per-task (cluster_id, c, s array) partials exactly the way
+    # kmeans_int8's driver loop does (round 12: the JVM groupBy was
+    # replaced by this bounded driver-side fold)
+    got: dict = {}
+    for r in _train_partials(qdf, "vec_id", cents).collect():
+        cid, c, s = int(r[0]), int(r[1]), [int(v) for v in r[2]]
+        if cid in got:
+            ps, pc = got[cid]
+            got[cid] = ([a + b for a, b in zip(ps, s)], pc + c)
+        else:
+            got[cid] = (s, c)
+    assert got == want
 
 
 def test_partials_reduced_distributed_when_collect_scales_with_tasks(
@@ -2723,13 +2590,13 @@ def test_train_ivf_codebook_fused_matches_join_aggregate_form(spark):
     """Round-12 optimization guard: the fused codebook build (one Arrow
     pass deriving qv+m, assigning, and partial-summing m per task —
     _train_partials(sum_col='m')) must emit EXACTLY the codebook the old
-    formulation produced: kmeans assignment joined onto unit_micro_vectors
-    with a per-component floor-mean aggregate. int64 sums are exact and
+    formulation produced: kmeans assignment joined onto the micro-unit
+    vectors with a per-component floor-mean aggregate. int64 sums are exact and
     the ⌊Σm/c⌋ divides the same longs, so any divergence is a bug."""
     from steam_data_engineer_project_spark.operators.clustering import (
+        _unit_micro_col,
         kmeans_int8,
         train_ivf_codebook,
-        unit_micro_vectors,
     )
 
     rows = [
@@ -2740,7 +2607,7 @@ def test_train_ivf_codebook_fused_matches_join_aggregate_form(spark):
     dim = 6
 
     assigned = kmeans_int8(df, "embedding", "vec_id", k=5, n_iter=3)
-    unit = unit_micro_vectors(df, "embedding", "vec_id")
+    unit = df.select("vec_id", _unit_micro_col("embedding").alias("m"))
     want = {
         int(r["centroid_id"]): [int(v) for v in r["cv"]]
         for r in assigned.select("vec_id", "cluster_id")
@@ -3767,32 +3634,6 @@ def test_incremental_duplicated_spans_batch_vs_corpus_only(spark):
     # batch-internal 10-gram shared by docs 2 and 3: NOT corpus-backed
     assert r[2].n_dup_tokens == 0 and r[3].n_dup_tokens == 0
     assert r[4].n_dup_tokens == 0 and r[4].n_spans == 0
-
-
-def test_incremental_spans_shuffle_path_matches_broadcast_path(spark):
-    """broadcast_batch=False (the backfill-sized-batch escape hatch) must
-    produce identical rows to the broadcast default — only the join
-    strategy changes."""
-    from steam_data_engineer_project_spark.operators.dedup import (
-        incremental_duplicated_spans,
-    )
-
-    passage = " ".join(f"q{i}" for i in range(12))
-    corpus = spark.createDataFrame(
-        [(100, "corpus filler " + passage + " more filler")],
-        "doc_id long, text string",
-    )
-    incoming = spark.createDataFrame(
-        [(1, "lead " + passage + " tail"), (2, "nothing shared here at all now")],
-        "doc_id long, text string",
-    )
-    a = incremental_duplicated_spans(
-        corpus, incoming, "text", "doc_id", w=10, broadcast_batch=True
-    )
-    b = incremental_duplicated_spans(
-        corpus, incoming, "text", "doc_id", w=10, broadcast_batch=False
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
 def test_span_coverage_property_matches_python_replay(spark):

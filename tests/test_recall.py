@@ -25,8 +25,7 @@ SF_DIR = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="module")
 def exact_top10(spark):
-    # brute leg of the folded exact-scoring suite (round 7: ann_cosine_topk
-    # and ann_quantized_topk share one registry entry)
+    # brute leg of the exact-scoring suite (brute_force_cosine_topk)
     df = QUERIES["ann_exact_suite"].spark(spark, SF_DIR)
     return [r.vec_id for r in df.filter(df.part == "brute").collect()]
 
@@ -35,17 +34,20 @@ def test_ann_lsh_recall_floor(spark, exact_top10):
     """8 planes / Hamming-2 probe scans ~14.5% of buckets; measured
     recall@10 = 0.40 on the near-random synthetic embeddings (clustered real
     embeddings do far better at the same radius — random vectors are LSH's
-    worst case). Floor: 0.30."""
-    from steam_data_engineer_project_spark.queries import ann_lsh_topk
-
-    got = [r.vec_id for r in ann_lsh_topk(spark, SF_DIR).collect()]
+    worst case). Floor: 0.30. Scored on the suite's in_plan leg
+    (lsh_bucket_cosine_topk); the pruned leg returns the same rows."""
+    df = QUERIES["ann_lsh_suite"].spark(spark, SF_DIR)
+    got = [r.vec_id for r in df.filter(df.part == "in_plan").collect()]
     recall = len(set(exact_top10) & set(got)) / len(exact_top10)
     assert recall >= 0.30, f"ann_lsh recall@10 fell to {recall}"
 
 
 def test_ann_ivf_recall_floor(spark, exact_top10):
-    """16 centroids / probe 4; measured recall@10 = 1.0. Floor: 0.90."""
-    got = [r.vec_id for r in QUERIES["ann_ivf_topk"].spark(spark, SF_DIR).collect()]
+    """16 centroids / probe 4; measured recall@10 = 1.0. Floor: 0.90.
+    Scored on the firstids leg (ivf_cosine_topk) alone: the suite also
+    returns the trained leg's top-10, which would cover a drop here."""
+    df = QUERIES["ann_ivf_topk"].spark(spark, SF_DIR)
+    got = [r.vec_id for r in df.filter(df.part == "firstids").collect()]
     recall = len(set(exact_top10) & set(got)) / len(exact_top10)
     assert recall >= 0.90, f"ann_ivf recall@10 fell to {recall}"
 
@@ -128,33 +130,28 @@ def test_semdedup_planted_twin_recall(spark):
 
 
 def test_ann_ivf_trained_codebook_recall_floor(spark, exact_top10):
-    """IVF with a kmeans_int8-TRAINED codebook (train_ivf_codebook): the
-    trained path is what production would run, so its quality is pinned
-    too, not just its plumbing. On this NEAR-RANDOM fixture a learned
-    partition genuinely spreads a query's barely-above-noise neighbors
-    (random vectors are every space-partitioning index's worst case —
-    same caveat as the LSH floor above): measured recall@10 is 0.7 at
-    probe 4 and 0.9 at probe 8 of 16. Pin the probe-8 operating point;
-    clustered real embeddings reach the same recall at far lower probe."""
+    """IVF with a kmeans_int8-TRAINED codebook (train_ivf_codebook) through
+    the served all-integer path (ivf_topk_trained): the trained path is
+    what production would run, so its quality is pinned too, not just its
+    plumbing. On this NEAR-RANDOM fixture a learned partition genuinely
+    spreads a query's barely-above-noise neighbors (random vectors are
+    every space-partitioning index's worst case — same caveat as the LSH
+    floor above): measured recall@10 is 0.7 at probe 4 and 0.9 at probe 8
+    of 16. Pin the probe-8 operating point; clustered real embeddings
+    reach the same recall at far lower probe."""
     from steam_data_engineer_project_spark.operators.clustering import (
+        ivf_topk_trained,
         train_ivf_codebook,
-    )
-    from steam_data_engineer_project_spark.operators.similarity import (
-        ivf_cosine_topk,
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    q = [
-        float(v)
-        for v in emb.filter("vec_id = 0").select("embedding").first()[0]
-    ]
     book = train_ivf_codebook(
         emb, "embedding", "vec_id", n_centroids=16, n_iter=3
     )
     got = [
         r.vec_id
-        for r in ivf_cosine_topk(
-            emb, "embedding", "vec_id", q, k=10, n_probe=8, centroids=book
+        for r in ivf_topk_trained(
+            emb, "embedding", "vec_id", 0, k=10, n_probe=8, codebook=book
         ).collect()
     ]
     recall = len(set(exact_top10) & set(got)) / len(exact_top10)
