@@ -177,11 +177,19 @@ def main() -> None:
     shutil.rmtree(log_dir, ignore_errors=True)
     os.makedirs(log_dir, exist_ok=True)
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # The data is partitioned 32 ways whatever the host: the fixture and
+    # the synthetic join side are written in 32 partitions, and shuffles,
+    # AQE's coalescing floor and the spread scans use 32 too. Threads
+    # follow the host's cores. More threads than cores would time-slice
+    # each stage's tasks, so a straggler's max/median ratio would shrink
+    # toward 1: at local[32] on 4 cores the unsalted join read 2.0 and the
+    # uncapped n-gram 2.4, against 5.5 and 8.2 on a 32-core host.
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 32))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("skew-stress")
-        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.sql.shuffle.partitions", "32")
+        .config("spark.default.parallelism", "32")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
