@@ -183,7 +183,7 @@ def main() -> None:
     # follow the host's cores. More threads than cores would time-slice
     # each stage's tasks, so a straggler's max/median ratio would shrink
     # toward 1: at local[32] on 4 cores the unsalted join read 2.0 and the
-    # uncapped n-gram 2.4, against 5.5 and 8.2 on a 32-core host.
+    # uncapped n-gram 2.4.
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 32))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -206,6 +206,12 @@ def main() -> None:
     sc = spark.sparkContext
 
     def run(group: str, df_thunk) -> float:
+        # One unmeasured pass first. A cold stage's first wave of tasks
+        # pays code generation and JIT compilation; with fewer threads
+        # than partitions that wave reads as stragglers of a skew-free
+        # stage (up to 6.6x the median on 4 cores).
+        sc.setJobGroup(f"warmup:{group}", "warmup")
+        df_thunk().write.format("noop").mode("overwrite").save()
         sc.setJobGroup(group, group)
         t0 = time.time()
         df_thunk().write.format("noop").mode("overwrite").save()
