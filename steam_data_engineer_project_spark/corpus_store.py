@@ -84,7 +84,6 @@ import json
 import math
 import os
 import shutil
-import tempfile
 import time
 from contextlib import contextmanager
 from typing import Callable
@@ -92,7 +91,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .fsutil import exclusive_flock
+from .fsutil import atomic_write, exclusive_flock, fsync_dir
 
 #: per-(store root, table) parquet schema, learned at first read so later
 #: reads skip the eager footer-inference driver cost (see CorpusStore.read).
@@ -131,49 +130,6 @@ SEM_ASSIGNED_TABLE = "sem_assigned"
 SEM_ID_COL = "vec_id"
 
 
-def _atomic_write(path: str, content: str) -> None:
-    """Write ``content`` to ``path`` atomically AND durably: tmp file +
-    fsync + os.replace + parent-directory fsync. The rename makes readers
-    see the old file or the new one, never a torn write; the two fsyncs
-    extend that from process crashes to power loss — without them the
-    rename can become durable while the file's data (or the directory
-    entry itself) is still only in the page cache, exactly the torn state
-    the atomic write exists to prevent (same ordering fsync discipline as
-    any write-ahead log)."""
-    d = os.path.dirname(path)
-    os.makedirs(d, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=d, prefix=".tmp_")
-    try:
-        with os.fdopen(fd, "w") as f:
-            f.write(content)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, path)
-        _fsync_dir(d)
-    except BaseException:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-        raise
-
-
-def _fsync_dir(path: str) -> None:
-    """fsync a directory so a just-renamed/created entry inside it is
-    durable (POSIX: rename durability requires syncing the directory,
-    not just the file). Best-effort — some filesystems refuse O_RDONLY
-    dir fsync; a refusal downgrades to process-crash safety, it never
-    corrupts."""
-    try:
-        dfd = os.open(path, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
-    except OSError:
-        pass
-
-
 def _fsync_tree(path: str) -> None:
     """fsync every file and directory under ``path`` plus its parent
     entry — called on a batch's slice directory BEFORE its commit marker
@@ -190,8 +146,8 @@ def _fsync_tree(path: str) -> None:
                     os.close(fd)
             except OSError:
                 pass
-        _fsync_dir(root_)
-    _fsync_dir(os.path.dirname(path))
+        fsync_dir(root_)
+    fsync_dir(os.path.dirname(path))
 
 
 def _link_tree(src: str, dst: str) -> None:
@@ -488,7 +444,7 @@ class CorpusStore:
             self._m.setdefault("segments", {})
 
     def _flush(self) -> None:
-        _atomic_write(
+        atomic_write(
             os.path.join(self.root, MANIFEST),
             json.dumps(self._m, indent=1) + "\n",
         )
@@ -588,7 +544,7 @@ class CorpusStore:
                     f"injected crash after writing {name} "
                     f"(batch {batch_id} NOT committed)"
                 )
-        _atomic_write(
+        atomic_write(
             os.path.join(self.root, COMMITS, str(batch_id)), str(batch_id)
         )
 

@@ -1,11 +1,11 @@
 """Shared crash-protocol primitives for the engine's file-backed stores.
 
-Three stores own on-disk state the engine mutates in place — the corpus
-store (generation-flipped artifact slices), the streaming state store
-(bucket swaps + reshard), and the incremental mart (data-dir swap +
-watermark). Each arrived at the same two disciplines independently; this
-module is their single implementation, so the next crash bug has one
-place to hide instead of three:
+The stores that own on-disk state the engine mutates in place — the
+corpus store (generation-flipped artifact slices), the streaming state
+store (bucket swaps + reshard), the incremental mart (data-dir swap +
+watermark), the append-compaction watermark and the parquet upsert sinks —
+share three disciplines; this module is their single implementation, so
+the next crash bug has one place to hide:
 
 - **displace-install-delete** (:func:`swap_in` / :func:`recover_swap`):
   replacing a live directory by ATOMIC RENAMES only — the old state is
@@ -23,11 +23,14 @@ place to hide instead of three:
   a read sees old or new, never torn. Cluster analog: the local flock
   maps to a coordination-service lease, the same single-writer contract
   Delta's commit protocol needs on non-atomic-rename filesystems.
+- **atomic durable file write** (:func:`atomic_write`): a small metadata
+  file (manifest, watermark, bucket count) is replaced by tmp file +
+  fsync + rename + directory fsync, so a reader never sees it torn.
 
 The corpus store's generation flip keeps its own pointer-based protocol
 (readers resolve directories through the manifest, so replacement is a
 manifest update + orphan sweep, not a rename of a live path) but shares
-the lock primitive here.
+the lock and the file write here.
 """
 
 from __future__ import annotations
@@ -35,6 +38,7 @@ from __future__ import annotations
 import fcntl
 import os
 import shutil
+import tempfile
 from contextlib import contextmanager
 
 
@@ -91,3 +95,46 @@ def recover_swap(live: str, displaced: str) -> None:
         shutil.rmtree(displaced, ignore_errors=True)
     else:
         os.rename(displaced, live)
+
+
+def atomic_write(path: str, content: str) -> None:
+    """Write ``content`` to ``path`` atomically AND durably: tmp file +
+    fsync + os.replace + parent-directory fsync. The rename makes readers
+    see the old file or the new one, never a torn write; the two fsyncs
+    extend that from process crashes to power loss — without them the
+    rename can become durable while the file's data (or the directory
+    entry itself) is still only in the page cache, exactly the torn state
+    the atomic write exists to prevent (same ordering fsync discipline as
+    any write-ahead log)."""
+    d = os.path.dirname(path)
+    os.makedirs(d, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=d, prefix=".tmp_")
+    try:
+        with os.fdopen(fd, "w") as f:
+            f.write(content)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
+        fsync_dir(d)
+    except BaseException:
+        try:
+            os.unlink(tmp)
+        except OSError:
+            pass
+        raise
+
+
+def fsync_dir(path: str) -> None:
+    """fsync a directory so a just-renamed/created entry inside it is
+    durable (POSIX: rename durability requires syncing the directory,
+    not just the file). Best-effort — some filesystems refuse O_RDONLY
+    dir fsync; a refusal downgrades to process-crash safety, it never
+    corrupts."""
+    try:
+        dfd = os.open(path, os.O_RDONLY)
+        try:
+            os.fsync(dfd)
+        finally:
+            os.close(dfd)
+    except OSError:
+        pass

@@ -206,9 +206,13 @@ def ngram_jaccard_pairs(
     )
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
+    # The per-doc sizes build both shuffled hash joins, whose two sides
+    # share one exchange: left to AQE, the pair list was broadcast instead
+    # whenever its stage finished first, and the sizes' broadcast was then
+    # no longer shared by the second join.
     out = (
-        shared.join(sa, "id_a")
-        .join(sb, "id_b")
+        shared.join(sa.hint("shuffle_hash"), "id_a")
+        .join(sb.hint("shuffle_hash"), "id_b")
         .withColumn(
             "jaccard",
             F.round(
@@ -330,7 +334,15 @@ def minhash_lsh_candidates(
     )
     sa = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    est = pairs.join(sa, "id_a").join(sb, "id_b").withColumn(
+    # the pair list builds both shuffled hash joins: left to AQE, it or
+    # the signatures were broadcast by which stage finished first, and the
+    # signatures' broadcast was shared by the two joins only sometimes
+    est = (
+        pairs.hint("shuffle_hash")
+        .join(sa, "id_a")
+        .hint("shuffle_hash")
+        .join(sb, "id_b")
+    ).withColumn(
         "est_jaccard",
         F.expr(
             "round(size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y),"
@@ -583,8 +595,12 @@ def cross_corpus_contamination(
         .agg(F.count("*").alias("shared_shingles"))
         .filter(F.col("shared_shingles") >= min_shared)
     )
+    # The pair list is built into a shuffled hash join on train_id: left to
+    # AQE, whichever side's stage finished first was broadcast, and only
+    # one of the two build sides keeps the output partitioned by train_id.
     return (
-        cross.join(t_sizes, "train_id")
+        cross.hint("shuffle_hash")
+        .join(t_sizes, "train_id")
         .join(e_sizes, "eval_id")
         .select(
             "train_id",
@@ -690,9 +706,11 @@ def incremental_dedup_verdicts(
             F.max("jaccard").alias("max_jaccard"),
         )
     )
+    # both tiers hold at most one row per incoming doc: broadcast them
+    # rather than let AQE choose a strategy by stage finish order
     return (
-        inc_ids.join(exact, "inc_id", "left")
-        .join(near, "inc_id", "left")
+        inc_ids.join(F.broadcast(exact), "inc_id", "left")
+        .join(F.broadcast(near), "inc_id", "left")
         .select(
             F.col("inc_id").alias(id_col),
             F.when(F.col("is_exact"), F.lit("exact_dup"))
@@ -992,8 +1010,9 @@ def incremental_duplicated_spans(
     batch-internal duplication is the full operator's job after admission.
 
     The batch's distinct window hashes — and the matched subset, which is
-    no larger — are hinted to broadcast into both joins: a crawl batch is
-    MBs against a TB corpus.
+    no larger — are hinted to broadcast into both joins, and so are the
+    per-doc start lists into the coverage join: a crawl batch is MBs
+    against a TB corpus.
 
     ``corpus_windows`` serves the corpus side from a STORED
     :func:`span_windows` artifact (append each admitted batch's windows)
@@ -1019,4 +1038,5 @@ def incremental_duplicated_spans(
         .groupBy(id_col)
         .agg(F.array_sort(F.collect_set("pos0")).alias("__starts"))
     )
-    return _span_coverage(inc_toks, starts, id_col, w)
+    # unhinted, AQE chose broadcast or shuffled hash by stage finish order
+    return _span_coverage(inc_toks, F.broadcast(starts), id_col, w)

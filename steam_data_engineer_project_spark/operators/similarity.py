@@ -78,11 +78,11 @@ def brute_force_cosine_topk(
     return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
 
 
-def lsh_bucket_id(vec: Column, n_planes: int = LSH_PLANES) -> Column:
+def lsh_bucket_id(vec: Column) -> Column:
     """Sign-projection LSH bucket: bit j = (vec[(j*LSH_STRIDE) % dim] > 0).
 
     Axis-aligned planes with a coprime stride give a deterministic,
-    engine-portable 2^n_planes-bucket partitioning (a degenerate but valid
+    engine-portable 2^LSH_PLANES-bucket partitioning (a degenerate but valid
     member of the random-hyperplane family; full random planes would be a
     literal matrix built the same way). The modulus is the vector's own
     length (``size(vec)``), so any embedding dimension works — the data-side
@@ -97,7 +97,7 @@ def lsh_bucket_id(vec: Column, n_planes: int = LSH_PLANES) -> Column:
             > 0.0,
             F.lit(1 << j),
         ).otherwise(F.lit(0))
-        for j in range(n_planes)
+        for j in range(LSH_PLANES)
     ]
     out = bits[0]
     for b in bits[1:]:
@@ -105,14 +105,14 @@ def lsh_bucket_id(vec: Column, n_planes: int = LSH_PLANES) -> Column:
     return out
 
 
-def query_bucket_id(query_vec: list[float], n_planes: int = LSH_PLANES) -> int:
+def query_bucket_id(query_vec: list[float]) -> int:
     """Python-side mirror of :func:`lsh_bucket_id` for a literal query vector.
 
     Uses the same ``% len(vec)`` modulus as the Column version so data-side
     and query-side buckets always agree, at any embedding dimension.
     """
     bucket = 0
-    for j in range(n_planes):
+    for j in range(LSH_PLANES):
         if float(query_vec[(j * LSH_STRIDE) % len(query_vec)]) > 0.0:
             bucket += 1 << j
     return bucket

@@ -30,7 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fsutil import exclusive_flock, recover_swap, swap_in
+from ..fsutil import atomic_write, exclusive_flock, recover_swap, swap_in
 from ..operators.merge import upsert_last_wins
 
 _WM_FILE = "_high_watermark"
@@ -120,12 +120,9 @@ def _refresh_locked(
     tmp = f"{data_dir}.tmp"
     merged.write.mode("overwrite").parquet(tmp)
     swap_in(data_dir, tmp, f"{data_dir}.old")
-    # tmp + atomic rename: a crash mid-write must not leave a truncated
-    # watermark (unreadable, or silently older — the stale-wm replay is
-    # idempotent via upsert_last_wins, but a torn int is a hard crash on
-    # every later refresh)
-    wtmp = os.path.join(mart_dir, _WM_FILE + ".tmp")
-    with open(wtmp, "w") as f:
-        f.write(str(int(hi)))
-    os.rename(wtmp, os.path.join(mart_dir, _WM_FILE))
+    # a crash mid-write must not leave a truncated watermark (unreadable,
+    # or silently older — the stale-wm replay is idempotent via
+    # upsert_last_wins, but a torn int is a hard crash on every later
+    # refresh)
+    atomic_write(os.path.join(mart_dir, _WM_FILE), str(int(hi)))
     return spark.read.parquet(data_dir)

@@ -170,6 +170,9 @@ _CATALOG: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
 
+#: the directory this package is imported from, as Python workers need it
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read a driver parquet table (cached per session — see _CATALOG).
@@ -181,13 +184,19 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     type the reader produces so both generations yield identical µs-precision
     event times.
     """
-    import os
-
     # The caller may hand us an untuned session (the driver does); pin the
     # two semantics-bearing confs every query depends on. Both are
     # runtime-settable. UTC makes from_unixtime/epoch outputs match the
     # (timezone-naive) DuckDB oracle regardless of host TZ.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # Python workers unpickle this package's functions by module name, and
+    # a worker's own path holds only the driver's working directory: hand
+    # them the package root through the environment every Python function
+    # of this context carries, so they import it wherever the driver runs.
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join(paths + [_PACKAGE_ROOT])
     per = _CATALOG.setdefault(spark, {})
     key = (os.path.abspath(sf_dir), name)
     if key in per:
@@ -4590,9 +4599,7 @@ def streaming_review_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_dir = os.path.join(
         _cached_fixture(sf_dir, "review_events", ("events",), _build), "events"
     )
-    out = run_review_pipeline(
-        spark, events_dir, work, max_files_per_trigger=4, batch_shuffle_partitions=8
-    )
+    out = run_review_pipeline(spark, events_dir, work, max_files_per_trigger=4)
     store = spark.read.parquet(out["reviews_latest"])
     summ = spark.read.parquet(out["review_summaries"])
     return store.join(summ, ["appid", "author_steamid"]).select(
@@ -4695,7 +4702,7 @@ def streaming_state_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # threads (guide §2.6) so one drain's micro-batch tails back-fill the
     # cores the other leaves idle. Each gets its OWN cloned session
     # (shared SparkContext, separate SQLConf) so the per-drain
-    # ``batch_shuffle_partitions`` pin cannot race the other drain's
+    # shuffle-partitions pin cannot race the other drain's
     # save/restore of the session-global setting. Per-drain semantics,
     # checkpoints, and outputs are untouched — results are identical to
     # the sequential order.
@@ -4709,7 +4716,6 @@ def streaming_state_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             events_dir,
             os.path.join(work, "ext"),
             max_files_per_trigger=4,
-            batch_shuffle_partitions=8,
         )
 
     def _drain_engine():
@@ -4718,7 +4724,6 @@ def streaming_state_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             events_dir,
             os.path.join(work, "engine"),
             max_files_per_trigger=4,
-            batch_shuffle_partitions=8,
         )
 
     with ThreadPoolExecutor(max_workers=2) as drain_pool:
@@ -4849,10 +4854,7 @@ def streaming_windowed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_dir = os.path.join(
         _cached_fixture(sf_dir, "window_events", ("events",), _build), "events"
     )
-    out_dir = run_windowed_to_table(
-        spark, events_dir, work, max_files_per_trigger=1,
-        batch_shuffle_partitions=8,
-    )
+    out_dir = run_windowed_to_table(spark, events_dir, work, max_files_per_trigger=1)
     return (
         spark.read.parquet(out_dir)
         .filter(F.col("appid") >= 0)
@@ -5702,8 +5704,15 @@ def corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the filter above the observation, so clean1's checkpoint job also
     # counts the input and held-out rows (eval docs match no train id).
     keep1 = ~is_eval & F.col("__contam").isNull()
+    # This join and the leakage join below build a fixed side of a
+    # shuffled hash join: left to AQE, the strategy and build side went to
+    # whichever input stage finished first, and so did the stage count.
     flagged, decontam = observed(
-        d.join(contam_ids.withColumn("__contam", F.lit(True)), "doc_id", "left"),
+        d.join(
+            contam_ids.withColumn("__contam", F.lit(True)).hint("shuffle_hash"),
+            "doc_id",
+            "left",
+        ),
         "cpe_decontaminate",
         {"input": F.count_if(~is_eval), "eval_heldout": F.count_if(is_eval),
          "decontaminated": F.count_if(keep1)},
@@ -5777,7 +5786,9 @@ def corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     sa = spl.select(F.col("doc_id").alias("id_a"), F.col("split").alias("split_a"))
     sb = spl.select(F.col("doc_id").alias("id_b"), F.col("split").alias("split_b"))
     leak = (
-        pairs.join(sa, "id_a")
+        pairs.hint("shuffle_hash")
+        .join(sa, "id_a")
+        .hint("shuffle_hash")
         .join(sb, "id_b")
         .filter(F.col("split_a") != F.col("split_b"))
         .agg(F.count("*").cast("long").alias("n"))

@@ -12,12 +12,12 @@ testable without a broker.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..fsutil import recover_swap, swap_in
 from ..operators.merge import insert_ignore, upsert_last_wins
 
 
@@ -30,11 +30,14 @@ def append_parquet(df: DataFrame, path: str) -> None:
 
 
 def _overwrite_swap(df: DataFrame, path: str) -> None:
+    """Replace the table at ``path`` with ``df`` by
+    :func:`fsutil.swap_in`: the old table is displaced, never deleted
+    before the new one is in place. Each sink runs :func:`fsutil.recover_swap`
+    before it reads ``path``, so a swap a crash interrupted is repaired
+    before the merge reads the old rows."""
     tmp = path + ".tmp"
     df.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(tmp, path)
+    swap_in(path, tmp, path + ".old")
 
 
 def upsert_parquet(
@@ -48,6 +51,7 @@ def upsert_parquet(
     kafka/consumers/kafka_consumer_info.py:39-51; Mongo update_one upsert —
     kafka/consumers/kafka_consumer_reviews.py:61-65): read-merge-overwrite
     with incoming-wins conflict resolution."""
+    recover_swap(path, path + ".old")
     if os.path.exists(path):
         existing = spark.read.parquet(path)
         merged = upsert_last_wins(existing, incoming, key_cols, order_col)
@@ -67,6 +71,7 @@ def insert_ignore_parquet(
 ) -> None:
     """S11: INSERT IGNORE sink (kafka/consumers/kafka_consumer_info.py:56-68)
     — keep existing rows, add only absent keys."""
+    recover_swap(path, path + ".old")
     if os.path.exists(path):
         existing = spark.read.parquet(path)
         merged = insert_ignore(existing, incoming, key_cols, order_cols)

@@ -50,6 +50,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fsutil import atomic_write
+
 _COMPACTED = "_compacted"
 _WATERMARK = "_watermark"
 
@@ -170,10 +172,7 @@ def compact_appends(
     shutil.rmtree(seg, ignore_errors=True)  # orphan from a crashed run
     os.rename(tmp, seg)
 
-    wtmp = os.path.join(cdir, _WATERMARK + ".tmp")
-    with open(wtmp, "w") as f:
-        f.write(str(new_w))
-    os.rename(wtmp, os.path.join(cdir, _WATERMARK))
+    atomic_write(os.path.join(cdir, _WATERMARK), str(new_w))
 
     for b in live:
         shutil.rmtree(os.path.join(table_dir, f"batch_id={b}"), ignore_errors=True)

@@ -19,6 +19,13 @@ from pyspark.sql import DataFrame
 
 #: parquet files written per micro-batch directory
 FILES_PER_BATCH = 4
+#: ``spark.sql.shuffle.partitions`` every drain pins for its run (restored
+#: after): per-key work inside a micro-batch scales with BATCH size, not
+#: corpus size, and AQE does not coalesce partitions inside streaming
+#: micro-batch plans, so streaming jobs size their shuffles explicitly.
+#: For stateful streams the count is FROZEN into the checkpoint at first
+#: start and a restart with a different value is rejected by Spark.
+BATCH_SHUFFLE_PARTITIONS = 8
 
 
 def drain_to_batch_dirs(
@@ -28,16 +35,10 @@ def drain_to_batch_dirs(
     ckpt_dir: str,
     *,
     output_mode: str,
-    batch_shuffle_partitions: int | None = None,
 ) -> str:
     """Run ``stream_df`` to completion (AvailableNow) writing each
-    micro-batch to ``<out_dir>/batch_id=N``; returns ``out_dir``.
-
-    ``batch_shuffle_partitions`` pins ``spark.sql.shuffle.partitions`` for
-    the drain (restored after) — for stateful streams the count is FROZEN
-    into the checkpoint at first start and a restart with a different value
-    is rejected by Spark, so size it for the target key cardinality up
-    front."""
+    micro-batch to ``<out_dir>/batch_id=N``; returns ``out_dir``. The
+    drain runs at :data:`BATCH_SHUFFLE_PARTITIONS`."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.coalesce(FILES_PER_BATCH).write.mode("overwrite").parquet(
@@ -45,10 +46,7 @@ def drain_to_batch_dirs(
         )
 
     saved = spark.conf.get("spark.sql.shuffle.partitions")
-    if batch_shuffle_partitions is not None:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(batch_shuffle_partitions)
-        )
+    spark.conf.set("spark.sql.shuffle.partitions", str(BATCH_SHUFFLE_PARTITIONS))
     try:
         q = (
             stream_df.writeStream.outputMode(output_mode)

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalars import initial_price
 from ..schemas import PRICE_EVENT
+from .drain import BATCH_SHUFFLE_PARTITIONS
 from .state_store import bucket_of, merge_bucketed, read_state, resolve_num_buckets
 
 
@@ -154,7 +155,6 @@ def run_price_pipeline(
     *,
     max_files_per_trigger: int | None = None,
     num_state_buckets: int = 16,
-    batch_shuffle_partitions: int | None = None,
 ) -> dict[str, str]:
     """Drain all available price-event files through the pipeline.
 
@@ -165,12 +165,7 @@ def run_price_pipeline(
     (exactly-once file progress), and a replayed in-flight batch is
     idempotent (per-batch overwrite dirs + per-bucket merge markers).
 
-    ``batch_shuffle_partitions``: per-key work inside a micro-batch scales
-    with BATCH size, not corpus size, and AQE does not coalesce partitions
-    inside streaming micro-batch plans — so streaming jobs size their
-    shuffles explicitly (the standard Structured Streaming tuning). When
-    set, the session's ``spark.sql.shuffle.partitions`` is pinned to it for
-    the drain and restored afterwards; None leaves the session value.
+    The drain runs at ``drain.BATCH_SHUFFLE_PARTITIONS`` (restored after).
     """
     prices_dir = os.path.join(work_dir, "prices")
     state_dir = os.path.join(work_dir, "crawl_state")
@@ -216,9 +211,6 @@ def run_price_pipeline(
             raise
         batch_state = None
         try:
-            prices_fut = prices_pool.submit(
-                inheritable_thread_target(spark)(_write_prices)
-            )
             batch_state = batch_crawl_state(batch_df).persist()
             # The buckets this batch's keys hash into — notifications and
             # the merge only ever read/write these (collected before both).
@@ -230,6 +222,12 @@ def run_price_pipeline(
                 .select("bucket")
                 .distinct()
                 .collect()
+            )
+            # Started only now that the collect has materialized batch_df:
+            # started earlier, it raced the chain to build that cache, and
+            # the Spark job count depended on which thread got there first.
+            prices_fut = prices_pool.submit(
+                inheritable_thread_target(spark)(_write_prices)
             )
             # ST4: notifications against the PRE-merge state (touched
             # buckets only — exact, since batch keys live nowhere else).
@@ -273,8 +271,7 @@ def run_price_pipeline(
             batch_df.unpersist()
 
     saved = spark.conf.get("spark.sql.shuffle.partitions")
-    if batch_shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(batch_shuffle_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(BATCH_SHUFFLE_PARTITIONS))
     try:
         q = (
             events.writeStream.foreachBatch(handle_batch)

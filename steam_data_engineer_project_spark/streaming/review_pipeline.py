@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import REVIEW_EVENT
+from .drain import BATCH_SHUFFLE_PARTITIONS
 from .state_store import bucket_of, merge_bucketed
 
 _KEY = ("appid", "author_steamid")
@@ -66,14 +67,11 @@ def run_review_pipeline(
     work_dir: str,
     *,
     max_files_per_trigger: int | None = None,
-    batch_shuffle_partitions: int | None = None,
 ) -> dict[str, str]:
     """Drain review-event JSONL files; maintain the latest-wins review store
     and the first-wins summaries table, both bucketed by the upsert key.
     Resumable via checkpoint; replayed batches are merge-idempotent.
-    ``batch_shuffle_partitions`` pins the per-batch shuffle width for the
-    drain (restored after) — see run_price_pipeline for why streaming jobs
-    size micro-batch shuffles explicitly."""
+    The drain runs at ``drain.BATCH_SHUFFLE_PARTITIONS``."""
     store_dir = os.path.join(work_dir, "reviews_latest")
     summary_dir = os.path.join(work_dir, "review_summaries")
     ckpt_dir = os.path.join(work_dir, "checkpoint")
@@ -202,8 +200,7 @@ def run_review_pipeline(
             combined.unpersist()
 
     saved = spark.conf.get("spark.sql.shuffle.partitions")
-    if batch_shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(batch_shuffle_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(BATCH_SHUFFLE_PARTITIONS))
     try:
         q = (
             events.writeStream.foreachBatch(handle_batch)

@@ -49,7 +49,7 @@ import shutil
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fsutil import recover_swap, swap_in
+from ..fsutil import atomic_write, recover_swap, swap_in
 
 #: marker file inside each bucket dir: highest batch_id merged into it.
 #: The leading underscore keeps Spark's file listing from reading it as data.
@@ -85,11 +85,7 @@ def resolve_num_buckets(state_dir: str, requested: int) -> int:
     stored = stored_num_buckets(state_dir)
     if stored is not None:
         return stored
-    os.makedirs(state_dir, exist_ok=True)
-    tmp = os.path.join(state_dir, META_NUM_BUCKETS + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(str(requested))
-    os.rename(tmp, os.path.join(state_dir, META_NUM_BUCKETS))
+    atomic_write(os.path.join(state_dir, META_NUM_BUCKETS), str(requested))
     return requested
 
 
@@ -364,9 +360,7 @@ def reshard(
                 shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
     tmp = f"{state_dir}.reshard-{new_num_buckets}"
     if cur is None:  # empty store: just (re)write the metadata
-        os.makedirs(state_dir, exist_ok=True)
-        with open(os.path.join(state_dir, META_NUM_BUCKETS), "w") as f:
-            f.write(str(new_num_buckets))
+        atomic_write(os.path.join(state_dir, META_NUM_BUCKETS), str(new_num_buckets))
         return new_num_buckets
     marker = max(
         _last_merged(os.path.join(state_dir, d))
@@ -389,8 +383,7 @@ def reshard(
     # the layout metadata is written LAST: its presence is the certificate
     # _recover_reshard uses to tell a fully-staged layout (safe to adopt)
     # from an abandoned partial stage (roll back to .old instead)
-    with open(os.path.join(tmp, META_NUM_BUCKETS), "w") as f:
-        f.write(str(new_num_buckets))
+    atomic_write(os.path.join(tmp, META_NUM_BUCKETS), str(new_num_buckets))
     old = f"{state_dir}.old"
     shutil.rmtree(old, ignore_errors=True)  # leftover from a prior crash
     swap_in(state_dir, tmp, old)

@@ -101,18 +101,15 @@ def run_crawl_state_to_table(
     work_dir: str,
     *,
     max_files_per_trigger: int | None = None,
-    batch_shuffle_partitions: int | None = None,
 ) -> str:
     """Production-shaped drain of crawl_state_stream: each micro-batch's
     update rows land in an ``updates/batch_id=N`` parquet directory
     (overwrite → replay-idempotent, same contract as the price pipeline's
     append sink). The converged state is the max-``batch_id`` row per key.
 
-    ``batch_shuffle_partitions`` pins ``spark.sql.shuffle.partitions`` for
-    the drain (restored after): applyInPandasWithState hashes keys into
-    exactly that many engine state partitions, and the count is FROZEN into
-    the checkpoint at first start — a restart with a different value is
-    rejected by Spark, so size it for the target key cardinality up front.
+    applyInPandasWithState hashes keys into exactly
+    ``drain.BATCH_SHUFFLE_PARTITIONS`` engine state partitions, the count
+    the drain pins; it is FROZEN into the checkpoint at first start.
     """
     from ..schemas import PRICE_EVENT
     from .drain import drain_to_batch_dirs
@@ -128,5 +125,4 @@ def run_crawl_state_to_table(
         os.path.join(work_dir, "updates"),
         os.path.join(work_dir, "stateful_checkpoint"),
         output_mode="update",
-        batch_shuffle_partitions=batch_shuffle_partitions,
     )

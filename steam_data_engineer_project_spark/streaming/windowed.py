@@ -68,17 +68,14 @@ def run_windowed_to_table(
     work_dir: str,
     *,
     max_files_per_trigger: int | None = 1,
-    batch_shuffle_partitions: int | None = None,
 ) -> str:
     """Drain JSON event files through the watermarked window aggregation:
     each micro-batch's FINALIZED windows land in a ``windows/batch_id=N``
     parquet directory (overwrite → replay-idempotent). Append mode emits
     each window exactly once, so the union over batch dirs IS the result
     table — no dedup needed downstream.
-
-    ``batch_shuffle_partitions`` pins ``spark.sql.shuffle.partitions`` for
-    the drain (restored after) — the count is frozen into the checkpoint's
-    window state at first start, same constraint as any stateful stream.
+    The drain runs at ``drain.BATCH_SHUFFLE_PARTITIONS``, which is frozen
+    into the checkpoint's window state at first start.
     """
     from .drain import drain_to_batch_dirs
 
@@ -94,5 +91,4 @@ def run_windowed_to_table(
         os.path.join(work_dir, "windows"),
         os.path.join(work_dir, "window_checkpoint"),
         output_mode="append",
-        batch_shuffle_partitions=batch_shuffle_partitions,
     )

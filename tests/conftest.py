@@ -32,13 +32,11 @@ def plans(spark):
         # Each call constructs a FRESH DataFrame (the registry memoizes base
         # tables, not queries), so every QueryExecution here is
         # never-executed and renders the deterministic initial adaptive
-        # plan — Exchange budgets are pinned against THAT state and are
-        # independent of pytest selection/ordering. If query-level caching
-        # is ever introduced, an executed DataFrame would render the
-        # AQE-finalized plan (fewer Exchanges when SMJ→BHJ converts) with
-        # an "== Initial Plan ==" appendix; the split below keeps only the
-        # leading section so the audit degrades to the finalized plan
-        # rather than double-counting.
+        # plan, independent of pytest selection/ordering. If query-level
+        # caching is ever introduced, an executed DataFrame would render
+        # the AQE-finalized plan with an "== Initial Plan ==" appendix; the
+        # split below keeps only the leading section so the audits read
+        # the finalized plan rather than both.
         df = spec.spark(spark, SF_SMOKE)
         plan = df._jdf.queryExecution().executedPlan().toString()
         out[name] = plan.split("== Initial Plan ==")[0]

@@ -9,7 +9,13 @@ can't break the gate that grades everything else.
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import __spark_entry__ as E
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: The driver's observed recording cap — entries past this get no
 #: CORRECTNESS row no matter how green they are locally.
@@ -29,6 +35,37 @@ def test_every_query_has_an_oracle():
     q, o = E.queries(), E.oracle_sql()
     assert set(o) == set(q), sorted(set(q) ^ set(o))
     assert all(isinstance(s, str) and s.strip() for s in o.values())
+
+
+#: A driver following the recipe: the repository on ``sys.path`` only, a
+#: vanilla session, and a working directory of its own.
+OTHER_CWD_DRIVER = r"""
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+import __spark_entry__ as E
+spark = SparkSession.builder.master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
+df = E.queries()["rest_fetch_appdetails"](spark, "/root/testdata/sf0.001/")
+df.write.format("noop").mode("overwrite").save()
+print("driver-done")
+"""
+
+
+def test_python_workers_import_the_package_from_any_working_directory(tmp_path):
+    """rest_fetch_appdetails runs its fetch in a MapInPandas worker, which
+    unpickles the package's functions by module name; driven from outside
+    the repository, the worker must still find the package."""
+    env = {
+        k: v for k, v in os.environ.items()
+        if k not in ("PYTHONPATH", "SPARK_CONF_DIR", "PYSPARK_GATEWAY_PORT")
+    }
+    done = subprocess.run(
+        [sys.executable, "-c", OTHER_CWD_DRIVER, ROOT],
+        cwd=str(tmp_path), env=env, stdout=subprocess.PIPE,
+        stderr=subprocess.PIPE, text=True, timeout=300,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    assert done.stdout.strip().endswith("driver-done"), done.stdout[-3000:]
 
 
 def test_entry_runs_and_is_stable(spark):

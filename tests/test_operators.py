@@ -211,10 +211,10 @@ def test_lsh_bucket_dim_agnostic(spark):
     df = spark.createDataFrame([(i, v) for i, v in enumerate(vecs)], ["id", "vec"])
     got = {
         r.id: r.b
-        for r in df.select("id", lsh_bucket_id(F.col("vec"), 8).alias("b")).collect()
+        for r in df.select("id", lsh_bucket_id(F.col("vec")).alias("b")).collect()
     }
     for i, v in enumerate(vecs):
-        assert got[i] == query_bucket_id(v, 8), f"vec {i}: data/query bucket mismatch"
+        assert got[i] == query_bucket_id(v), f"vec {i}: data/query bucket mismatch"
 
 
 def test_lsh_topk_multiprobe_finds_query(spark):
@@ -543,7 +543,7 @@ def test_lsh_bucketed_layout_prunes_partitions_and_matches(spark):
         e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         qv = [float(x) for x in e.filter(F.col("vec_id") == 0).first().embedding]
         layout = os.path.join(work, "emb_by_bucket")
-        e.withColumn("bucket", lsh_bucket_id(F.col("embedding"), 8)).write.partitionBy(
+        e.withColumn("bucket", lsh_bucket_id(F.col("embedding"))).write.partitionBy(
             "bucket"
         ).parquet(layout)
 

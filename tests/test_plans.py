@@ -10,8 +10,9 @@ The sweep builds every registered query's physical plan at sf0.001 (plan
 construction is free; the few side-effecting queries run their tiny
 pipelines) and greps the plan tree — the same audit the round judges run.
 
-tests/test_budgets.py counts what the plan tree cannot show: the Spark
-stages one warm invocation runs, build-time jobs included.
+The cost budget is tests/test_budgets.py: the exact number of Spark
+stages one warm invocation runs, build-time jobs included, so it counts
+every shuffle this tree shows and those behind an eager checkpoint too.
 """
 
 from __future__ import annotations
@@ -661,76 +662,3 @@ def test_packing_costs_exactly_one_shuffle(spark):
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
     assert "Exchange SinglePartition" not in plan, plan
     assert "Exchange rangepartitioning" not in plan, plan
-
-
-#: Shuffle budget per registry query: the Exchange count of its audited
-#: physical plan at sf0.001. Every Exchange at 100 TB is a full network
-#: pass over its input, so a count creeping UP is a scale regression even
-#: when results stay correct — this pin turns that into a test failure.
-#: Counts may legitimately go DOWN (tighten the budget when they do) or
-#: change when a query's semantics change (re-derive with the audit
-#: fixture and justify in the commit).
-EXCHANGE_BUDGET = {
-    "ann_exact_suite": 2,  # one spread repartition per leg; both query vectors are plan literals, so nothing broadcasts
-    "ann_ivf_topk": 7,  # round 7: trained leg SERVES a stored parquet codebook (train runs once at the write action). Round 13: +2 — kmeans_int8 releases its training persist before it returns (no persist outlives the call that made it), so the served plan recomputes the _spread repartition + quantization from parquet; no cache entry of the training is left for it to plan-match
-    "ann_lsh_suite": 1,  # the in_plan leg's spread repartition; the query vector is a plan literal and the pruned leg reads the bucket layout
-    "cdc_suite": 3,
-    "crawl_state_registry": 2,
-    "dbt_dim_games_suite": 14,
-    "dbt_fact_reviews": 1,
-    "dbt_game_quality_metrics": 6,
-    "dbt_quality_report": 6,
-    "corpus_pipeline_e2e": 8,  # round 6: 9-stage composition; stage materialization moved from persist to eager localCheckpoint (plan-tree flattening — see the query docstring), so the audited plan counts only the post-checkpoint arms (split/mix/pack windows, leakage join, funnel aggs); the stage-build exchanges run eagerly outside this plan, same accounting as the kmeans iterations
-    "corpus_store_suite": 43,  # round 7 baseline 41 (the SERVED plan only — store build/append writes run once at construction, cached per session+corpus). Seven read-side jobs union here: 2 doc-tier verdict legs (each: stored-shingle postings + batch postings + pair agg + 2 size aggs + hash-tier distinct/join), span coverage (batch window distinct + stored semi-join + start-list agg), bloom probe (per-value all-hit agg + per-doc count; bitset joins broadcast), 3 KMV estimate arms (per-sketch window + agg), semantic verdicts (batch broadcast, stored inverted file never shuffles wide), codebook summary. Round 9: +2 for the sem_b2_p2 driver-gated multi-probe leg's own batch-sized aggregates — and the legs' final stats-attach joins now broadcast (they sort-merged before), so the second sem leg costs 2, not 4.
-    "dedup_cluster_canonical": 2,
-    "dedup_corpus_lines": 12,  # +3 boilerplate leg: distinct-doc line count agg + the sharded top-m window (WindowGroupLimit-pruned) + its re-shard; +4 substring leg (shared-window distinct + doc-count agg + per-doc start-list agg + the left join back onto the token table)
-    "dedup_cross_corpus": 34,  # two corpus-vs-corpus jobs: contamination + incremental verdicts (each an inverted-index build per side + pair agg) + the exact-tier distinct/join; +4 bloom leg (bitset distinct + bit_or agg on ≤131k words, per-value all-hit agg, per-doc count — the probe join itself is broadcast, no train shuffle); +6 span leg (corpus + batch window distincts, the corpus-side semi-join, per-doc start-list agg, coverage join — the batch side broadcasts both ways); −4 after the contamination and bloom legs started sharing one checkpointed shingle pass per side
-    "dedup_embedding_cosine": 6,  # 2 lsh-leg spread repartitions (the bucket self-join broadcasts) + 4 semdedup: size agg, both sides of the pair self-join, the incremental per-batch stats agg. The quantized base and the final assignment are shared through localCheckpoint (no persist outlives the call that made it), so the audited plan reads their checkpoint RDDs; the assignment itself is shuffle-free, the incremental batch side broadcasts, and the Lloyd aggs run eagerly outside this plan
-    "dedup_exact_docs": 8,  # +6 kmv leg: bigram distinct + WindowGroupLimit-pruned top-k + exact countDistinct comparison
-    "sketch_merge_suite": 33,  # deliberately a 3-shard lifecycle in ONE plan: each of 4 sketch legs builds 3 per-day summaries (each its own distinct/agg/window) before merging — in production those are separate daily jobs storing tiny tables; every post-summary exchange here carries bounded rows (≤k·groups, ≤m/32 words, ≤top_m·shards)
-    "dedup_minhash_lsh_docs": 11,
-    "dedup_ngram_jaccard_docs": 9,
-    "dedup_simhash_docs": 4,
-    "dim_star_denorm": 2,
-    "duplicate_key_detector": 1,
-    "filter_suite": 0,
-    "fx_price_suite": 1,
-    "fx_text_suite": 4,
-    "fx_time_suite": 0,
-    "join_membership_suite": 5,  # round 6: absorbed outer_union_merge (2: the two pre-join aggs) and get_or_create_dim (2: distinct + two-phase global row number)
-    "kafka_frame_roundtrip": 0,
-    "merge_strategies": 7,
-    "mm_pipeline": 2,
-    "q1_pricing_summary": 1,
-    "quality_metrics_fanout": 2,
-    "quality_suite": 5,
-    "rank_suite": 1,
-    "rest_fetch_appdetails": 0,
-    "sampling_split_suite": 15,  # +2 token_budget window leg; +5 temperature leg (two corpus passes — group sizing + budget cut — are intrinsic to mix rebalancing); +2 shard-manifest leg (its own spread scan + one map-side-combinable groupBy on 64 shard keys); +2 shard_export leg, now DEFERRED (round-11 ADVICE 4): its spread scan + the content-hash repartition(16) moved INSIDE the audited plan (they ran in the old eager write job, hidden from this count) while the old read-back groupBy exchange is gone — one MORE exchange visible here but one FEWER pass overall, since the per-shard summary now rides the write task instead of re-reading the export
-    "sessionization": 1,
-    "set_ops_suite": 4,
-    "skew_salted_agg": 2,
-    "src_csv_suite": 1,
-    "src_json_corrupt_recovery": 0,
-    "streaming_review_upsert": 0,
-    "streaming_state_suite": 2,  # +1: the prices_compacted verification agg
-    "streaming_windowed_stats": 0,
-    "temporal_join_suite": 3,
-    "text_pii_redaction": 1,
-    "text_profile_docs": 17,  # +3 bm25 single-row corpus-stats aggregate; +2 quantile leg (per-lang window + its own spread scan); +4 quantile_kmv leg (k=64 sample window — WindowGroupLimit-pruned — + sample quantile window + sample_n agg + its broadcast back); +4 rarity leg (vocab df agg + the two-phase global rank's range exchange + token join + per-doc agg — the vocab rank itself rides localCheckpoint outside this plan)
-    "text_repetition_docs": 2,
-    "time_filter_suite": 2,
-    "window_suite": 3,
-}
-
-
-def test_every_query_within_its_shuffle_budget(plans):
-    """No registry query's plan may gain an Exchange silently."""
-    missing = sorted(set(plans) - set(EXCHANGE_BUDGET))
-    assert not missing, f"new queries need a shuffle budget: {missing}"
-    over = {
-        n: (len(re.findall(r"\bExchange ", p)), EXCHANGE_BUDGET[n])
-        for n, p in plans.items()
-        if len(re.findall(r"\bExchange ", p)) > EXCHANGE_BUDGET[n]
-    }
-    assert not over, f"shuffle regressions (actual, budget): {over}"

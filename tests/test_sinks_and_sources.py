@@ -9,6 +9,7 @@ import os
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from steam_data_engineer_project_spark.monitoring import observed
@@ -53,6 +54,37 @@ def test_upsert_and_insert_ignore_sinks(spark):
         append_parquet(batch1, ap_path)
         append_parquet(batch1, ap_path)
         assert spark.read.parquet(ap_path).count() == 4
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def test_upsert_sink_keeps_old_rows_when_the_install_rename_fails(
+    spark, monkeypatch
+):
+    """A failure between writing the new table and installing it must not
+    cost the old rows: the next upsert still merges onto them."""
+    work = _work()
+    try:
+        path = os.path.join(work, "upsert")
+        old = spark.createDataFrame([(1, "a", 10), (2, "b", 10)], ["k", "payload", "ts"])
+        new = spark.createDataFrame([(2, "b2", 20), (3, "c", 20)], ["k", "payload", "ts"])
+        upsert_parquet(spark, old, path, ["k"], "ts")
+
+        rename = os.rename
+
+        def failing_install(src, dst):
+            if src == path + ".tmp":
+                raise OSError("injected: install rename failed")
+            rename(src, dst)
+
+        monkeypatch.setattr(os, "rename", failing_install)
+        with pytest.raises(OSError, match="injected"):
+            upsert_parquet(spark, new, path, ["k"], "ts")
+        monkeypatch.setattr(os, "rename", rename)
+
+        upsert_parquet(spark, new, path, ["k"], "ts")
+        got = {r.k: r.payload for r in spark.read.parquet(path).collect()}
+        assert got == {1: "a", 2: "b2", 3: "c"}
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
