@@ -206,13 +206,14 @@ def ngram_jaccard_pairs(
     )
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    # The per-doc sizes build both shuffled hash joins, whose two sides
-    # share one exchange: left to AQE, the pair list was broadcast instead
-    # whenever its stage finished first, and the sizes' broadcast was then
-    # no longer shared by the second join.
+    # Both pair joins are sort-merge joins, whose size sides share one
+    # exchange: left to AQE, the pair list was broadcast instead whenever
+    # its stage finished first, and the sizes' broadcast was then no longer
+    # shared by the second join. Neither side is bounded by construction,
+    # and a sort-merge join spills where a hash build would not.
     out = (
-        shared.join(sa.hint("shuffle_hash"), "id_a")
-        .join(sb.hint("shuffle_hash"), "id_b")
+        shared.join(sa.hint("shuffle_merge"), "id_a")
+        .join(sb.hint("shuffle_merge"), "id_b")
         .withColumn(
             "jaccard",
             F.round(
@@ -334,13 +335,15 @@ def minhash_lsh_candidates(
     )
     sa = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    # the pair list builds both shuffled hash joins: left to AQE, it or
-    # the signatures were broadcast by which stage finished first, and the
-    # signatures' broadcast was shared by the two joins only sometimes
+    # both signature joins are sort-merge joins: left to AQE, the pair
+    # list or the signatures were broadcast by which stage finished first,
+    # and the signatures' broadcast was shared by the two joins only
+    # sometimes; the pair list grows with the data, so it is never built
+    # into a hash map that cannot spill
     est = (
-        pairs.hint("shuffle_hash")
+        pairs.hint("shuffle_merge")
         .join(sa, "id_a")
-        .hint("shuffle_hash")
+        .hint("shuffle_merge")
         .join(sb, "id_b")
     ).withColumn(
         "est_jaccard",
@@ -595,11 +598,12 @@ def cross_corpus_contamination(
         .agg(F.count("*").alias("shared_shingles"))
         .filter(F.col("shared_shingles") >= min_shared)
     )
-    # The pair list is built into a shuffled hash join on train_id: left to
-    # AQE, whichever side's stage finished first was broadcast, and only
-    # one of the two build sides keeps the output partitioned by train_id.
+    # The pair list meets the train sizes in a sort-merge join on train_id:
+    # left to AQE, whichever side's stage finished first was broadcast, and
+    # only one of the two build sides kept the output partitioned by
+    # train_id. The pair list grows with the data; a sort-merge join spills.
     return (
-        cross.hint("shuffle_hash")
+        cross.hint("shuffle_merge")
         .join(t_sizes, "train_id")
         .join(e_sizes, "eval_id")
         .select(

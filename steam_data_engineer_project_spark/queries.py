@@ -5704,12 +5704,14 @@ def corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the filter above the observation, so clean1's checkpoint job also
     # counts the input and held-out rows (eval docs match no train id).
     keep1 = ~is_eval & F.col("__contam").isNull()
-    # This join and the leakage join below build a fixed side of a
-    # shuffled hash join: left to AQE, the strategy and build side went to
-    # whichever input stage finished first, and so did the stage count.
+    # This join and the leakage join below are sort-merge joins: left to
+    # AQE, the strategy and build side went to whichever input stage
+    # finished first, and so did the stage count. Neither the contaminated
+    # ids nor the pair list is bounded by construction; a sort-merge join
+    # spills where a hash build would not.
     flagged, decontam = observed(
         d.join(
-            contam_ids.withColumn("__contam", F.lit(True)).hint("shuffle_hash"),
+            contam_ids.withColumn("__contam", F.lit(True)).hint("shuffle_merge"),
             "doc_id",
             "left",
         ),
@@ -5786,9 +5788,9 @@ def corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     sa = spl.select(F.col("doc_id").alias("id_a"), F.col("split").alias("split_a"))
     sb = spl.select(F.col("doc_id").alias("id_b"), F.col("split").alias("split_b"))
     leak = (
-        pairs.hint("shuffle_hash")
+        pairs.hint("shuffle_merge")
         .join(sa, "id_a")
-        .hint("shuffle_hash")
+        .hint("shuffle_merge")
         .join(sb, "id_b")
         .filter(F.col("split_a") != F.col("split_b"))
         .agg(F.count("*").cast("long").alias("n"))

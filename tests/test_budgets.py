@@ -26,27 +26,27 @@ SF_DIR = "/root/testdata/sf0.001"
 #: Every query runs one count, the same at local[2] and local[4]: a join
 #: whose strategy AQE would otherwise pick by which input stage finished
 #: first has a fixed one (a broadcast where the small side is bounded by
-#: construction, else a shuffle_hash hint with a fixed build side). A
-#: failure says whether the count went up or down and prints the entry to
-#: paste once the change is intended.
+#: construction, else a sort-merge join hint, which spills). A failure
+#: says whether the count went up or down and prints the entry to paste
+#: once the change is intended.
 STAGE_BUDGET = {
     "ann_exact_suite": 5,
     "ann_ivf_topk": 18,
     "ann_lsh_suite": 7,
     "cdc_suite": 3,
-    "corpus_pipeline_e2e": 64,  # the decontamination and leakage joins build a fixed side of a shuffled hash join, as do the contamination and near-dup pair joins (operators/dedup.py: cross_corpus_contamination, ngram_jaccard_pairs)
+    "corpus_pipeline_e2e": 64,  # the decontamination and leakage joins are hinted sort-merge joins, as are the contamination and near-dup pair joins (operators/dedup.py: cross_corpus_contamination, ngram_jaccard_pairs)
     "corpus_store_suite": 60,  # the span leg's start lists and the doc tier's per-batch verdicts broadcast (operators/dedup.py: incremental_duplicated_spans, incremental_dedup_verdicts)
     "crawl_state_registry": 3,
     "dbt_dim_games_suite": 15,
     "dbt_fact_reviews": 2,
     "dbt_game_quality_metrics": 11,
     "dbt_quality_report": 8,
-    "dedup_cluster_canonical": 25,  # the per-doc sizes build both pair joins of ngram_jaccard_pairs (operators/dedup.py)
+    "dedup_cluster_canonical": 25,  # both pair joins of ngram_jaccard_pairs are hinted sort-merge joins (operators/dedup.py)
     "dedup_corpus_lines": 14,
-    "dedup_cross_corpus": 44,  # the same fixed joins as corpus_store_suite, plus the contamination pair list's shuffled hash join
+    "dedup_cross_corpus": 44,  # the same fixed joins as corpus_store_suite, plus the contamination pair list's sort-merge join
     "dedup_embedding_cosine": 25,
     "dedup_exact_docs": 8,
-    "dedup_minhash_lsh_docs": 8,  # the candidate pair list builds both signature joins (operators/dedup.py:minhash_lsh_candidates)
+    "dedup_minhash_lsh_docs": 8,  # both signature joins are hinted sort-merge joins (operators/dedup.py:minhash_lsh_candidates)
     "dedup_ngram_jaccard_docs": 7,  # as dedup_cluster_canonical
     "dedup_simhash_docs": 5,
     "dim_star_denorm": 7,
