@@ -67,6 +67,16 @@ UNCAPPED_HOT_DOCS = 8_000  # hot set for the no-cap counterfactual
 HOT_FK_FRAC_PCT = 30  # % of big-side join rows remapped to one key
 N_JOIN_ROWS = 40_000_000  # synthetic big side for the join legs
 N_JOIN_KEYS = 200_000
+DRIVER_HEAP_MB_MAX = 24 << 10
+
+
+def driver_heap_mb() -> int:
+    """The driver JVM's heap: 24 GB, or five eighths of the host's memory
+    where that is less. The rest is left to the JVM's off-heap memory,
+    the Python workers and the OS: a 24 GB heap on a 16 GB host was
+    killed by the kernel during the uncapped n-gram leg."""
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return min(DRIVER_HEAP_MB_MAX, host_mb * 5 // 8)
 
 
 def build_fixture(spark, dst: str) -> None:
@@ -185,6 +195,7 @@ def main() -> None:
     # toward 1: at local[32] on 4 cores the unsalted join read 2.0 and the
     # uncapped n-gram 2.4.
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 32))
+    heap_mb = driver_heap_mb()
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("skew-stress")
@@ -193,7 +204,7 @@ def main() -> None:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", f"{heap_mb}m")
         .config("spark.ui.enabled", "false")
         .config("spark.eventLog.enabled", "true")
         .config("spark.eventLog.dir", log_dir)
@@ -312,6 +323,8 @@ def main() -> None:
     result = {
         **provenance(OUT),
         "sf_dir": SF_DIR,
+        "local_threads": int(cpus),
+        "driver_memory_mb": heap_mb,
         "fixture": {
             "hot_shingle_frac_pct": HOT_FRAC_PCT,
             "hot_sentence": HOT_SENTENCE,
