@@ -10,18 +10,22 @@ reproducible against external oracles (the reference keeps
 ``functions.scalars.date_partition_key``; cite reference utils/common.py:142-144).
 
 A driver JVM spends most of its start-up loading and verifying classes from
-Spark's jars. The call that launches it therefore starts it from a dynamic
-AppCDS archive of those classes (JDK 17+): pre-parsed, pre-verified class
+Spark's jars. The call that launches it therefore starts it from a static
+AppCDS archive of those classes (JDK 17+): pre-parsed, pre-linked class
 metadata mapped from a file under ``$XDG_CACHE_HOME/steam-spark/`` (default
-``~/.cache/steam-spark/``), created once per host by the first launch that
-finds none. It holds class metadata derived from the JDK and the jars, keyed
-by both, never data or results; deleting the directory resets it.
+``~/.cache/steam-spark/``). The first launch that finds none lists the
+classes it loads, and a separate ``java -Xshare:dump`` builds the archive
+from that list. It holds class metadata derived from the JDK and the jars,
+keyed by both and by the heap's compressed-oops mode, never data or
+results; deleting the directory resets it.
 """
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import os
+import re
 import shutil
 import subprocess
 from typing import NamedTuple
@@ -31,6 +35,11 @@ from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 from .fsutil import exclusive_flock
+
+#: hashed into the class archive's key, so that no checkout maps an archive
+#: of another format (the dynamic archives of older checkouts)
+_ARCHIVE_FORMAT = "static-classlist"
+_SIZE_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
 
 
 def get_spark(
@@ -43,13 +52,20 @@ def get_spark(
     """Build (or fetch) the tuned SparkSession.
 
     Parameters default from env: ``SPARK_GRAFT_CPUS`` controls local
-    parallelism (default ``os.cpu_count()``, or 8 if that is unknown).
+    parallelism (default ``os.cpu_count()``, or 8 if that is unknown), and
+    ``SPARK_DRIVER_MEMORY`` the driver heap (default :func:`driver_heap_mb`).
     The call that launches the JVM starts it from the class archive (see
-    the module docstring), creating the archive first if none exists.
+    the module docstring), and creates the archive once the session is up
+    if none exists.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
+    extra_conf = extra_conf or {}
+    driver_memory = extra_conf.get(
+        "spark.driver.memory",
+        os.environ.get("SPARK_DRIVER_MEMORY", f"{driver_heap_mb()}m"),
+    )
 
     builder = (
         SparkSession.builder.master(master)
@@ -78,11 +94,12 @@ def get_spark(
         # plans).
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # local mode: the driver is the only JVM; give it headroom but leave
-        # space for the OS and Python workers (container has 128 GiB).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        # space for the OS and Python workers (driver_heap_mb).
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         # Broadcast threshold: dims (region/nation/supplier-sized tables)
-        # should always broadcast; 64 MB is safe with 48g driver.
+        # should always broadcast; 64 MB is safe with a driver heap of
+        # 1 GB or more.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Let the planner choose shuffled-hash join when its size
         # conditions fit (guide §3.1/§9): SHJ skips both sort passes of a
@@ -96,14 +113,13 @@ def get_spark(
         # the big fact⋈fact joins keep the spill-graceful SMJ path.
         .config("spark.sql.join.preferSortMergeJoin", "false")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in extra_conf.items():
+        builder = builder.config(k, v)
     # Decided before launch, and only by the call that launches the JVM:
     # a JVM already running keeps the options it started with.
     launches = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
     archive = (
-        _plan_class_archive((extra_conf or {}).get("spark.driver.extraClassPath", ""))
+        _plan_class_archive(extra_conf.get("spark.driver.extraClassPath", ""), driver_memory)
         if launches
         else None
     )
@@ -115,33 +131,52 @@ def get_spark(
         os.environ["SPARK_CONF_DIR"] = archive.conf_dir
     try:
         spark = builder.getOrCreate()
+        spark.sparkContext.setLogLevel("WARN")
+        if archive is not None and archive.create:
+            _dump_class_archive(spark, archive)
     finally:
         if archive is not None:
             del os.environ["SPARK_CONF_DIR"]
-    spark.sparkContext.setLogLevel("WARN")
-    if archive is not None and archive.create:
-        _dump_class_archive(spark, archive)
+            if archive.create:
+                _remove(archive.class_list)
     return spark
+
+
+def driver_heap_mb(max_mb: int = 48 << 10) -> int:
+    """The default driver heap: ``max_mb``, or five eighths of the host's
+    memory where that is less. The rest is left to the JVM's off-heap
+    memory, the Python workers and the OS: a heap larger than the host is
+    bounded by the kernel's out-of-memory killer rather than by Java."""
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return min(max_mb, host_mb * 5 // 8)
 
 
 class _ClassArchive(NamedTuple):
     path: str
-    java_home: str
+    java: str
     #: the empty directory the launch uses as SPARK_CONF_DIR
     conf_dir: str
-    #: True: this launch records its classes and dumps the archive
+    #: the launch's ``spark.driver.memory``; the dump runs with the same
+    #: heap, so the archive is of the launch's compressed-oops mode
+    driver_memory: str
+    #: True: this launch lists its classes and dumps the archive
     create: bool
 
     @property
+    def class_list(self) -> str:
+        """Where a creating launch lists the classes it loads."""
+        return f"{self.path}.{os.getpid()}.classlist"
+
+    @property
     def java_options(self) -> str:
-        # -Xlog:cds*=off: the JVM's stdout is this process's stdout, and a
-        # dump (or an archive the JVM declines) logs hundreds of warnings there
+        # -Xlog:cds*=off: the JVM's stdout is this process's stdout, where
+        # an archive the JVM declines logs hundreds of warnings
         if self.create:
-            return "-XX:+RecordDynamicDumpInfo -Xlog:cds*=off"
+            return f"-XX:DumpLoadedClassList={self.class_list} -Xlog:cds*=off"
         return f"-XX:SharedArchiveFile={self.path} -Xlog:cds*=off"
 
 
-def _plan_class_archive(extra_class_path: str) -> _ClassArchive | None:
+def _plan_class_archive(extra_class_path: str, driver_memory: str) -> _ClassArchive | None:
     """How the launching call uses the class archive, or None to start the
     JVM exactly as without one.
 
@@ -152,8 +187,13 @@ def _plan_class_archive(extra_class_path: str) -> _ClassArchive | None:
     only ``*.template`` files, so Spark would read nothing there anyway.
     A non-empty directory among the entries the launcher takes from the
     environment or ``extra_class_path`` would fail every dump, so it
-    skips the archive too, rather than record on every launch."""
-    if "SPARK_CONF_DIR" in os.environ:
+    skips the archive too, rather than record on every launch.
+
+    A JVM maps only an archive dumped in its own compressed-oops mode,
+    which its heap decides (``driver_memory``, a ``-Xmx`` size): each
+    mode has an archive of its own."""
+    heap = _heap_bytes(driver_memory)
+    if heap is None or "SPARK_CONF_DIR" in os.environ:
         return None
     entries = [extra_class_path] + [
         os.environ.get(v, "")
@@ -179,7 +219,9 @@ def _plan_class_archive(extra_class_path: str) -> _ClassArchive | None:
     major = version.split(".")[0].split("-")[0]  # "17.0.20", "21-ea"
     if not major.isdigit() or int(major) < 17:
         return None
-    key = hashlib.sha256(f"{java_home}\0{version}\0".encode())
+    # compressed oops address at most 32 GB of heap
+    mode = "coops" if heap < 32 << 30 else "nocoops"
+    key = hashlib.sha256(f"{_ARCHIVE_FORMAT}\0{mode}\0{java_home}\0{version}\0".encode())
     with os.scandir(jars) as entries:
         for e in sorted(entries, key=lambda e: e.name):
             st = e.stat()
@@ -195,14 +237,19 @@ def _plan_class_archive(extra_class_path: str) -> _ClassArchive | None:
         return None
     if os.listdir(conf_dir):
         return None
-    path = os.path.join(cache, f"spark-classes-{key.hexdigest()[:20]}.jsa")
+    path = os.path.join(cache, f"spark-classes-{mode}-{key.hexdigest()[:20]}.jsa")
     create = not os.path.exists(path)
     # an existing archive is used from a read-only cache too
-    if create and not (
-        os.access(cache, os.W_OK) and os.access(os.path.join(java_home, "bin", "jcmd"), os.X_OK)
-    ):
+    if create and not os.access(cache, os.W_OK):
         return None
-    return _ClassArchive(path, java_home, conf_dir, create)
+    return _ClassArchive(path, java, conf_dir, driver_memory, create)
+
+
+def _heap_bytes(size: str) -> int | None:
+    """Bytes of a ``-Xmx`` size such as ``4g`` or ``10043m`` (the launcher
+    passes ``spark.driver.memory`` to ``-Xmx`` as it is), or None."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)", size.lower())
+    return int(m[1]) * _SIZE_UNITS[m[2]] if m else None
 
 
 def _java_version(java_home: str) -> str | None:
@@ -221,40 +268,38 @@ def _nonempty_dir(path: str) -> bool:
     return bool(path) and os.path.isdir(path) and bool(os.listdir(path))
 
 
-def _dump_class_archive(spark: SparkSession, archive: _ClassArchive) -> None:
-    """Dump the recording JVM's loaded classes to ``archive.path``.
+def _remove(path: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)
 
-    The dump goes to a temp file, published by ``os.replace`` only when
-    ``jcmd`` succeeds: a JVM mapping a truncated archive dies of SIGBUS.
+
+def _dump_class_archive(spark: SparkSession, archive: _ClassArchive) -> None:
+    """Dump the classes the launch listed to ``archive.path``.
+
+    A static dump, in a JVM of its own on the launch's class path and
+    heap: it loads and links every listed class itself, where a dynamic
+    dump of the running JVM archives only the classes already linked
+    (64% of the classes a launch loads, against 85%). Its exit code is
+    the success signal, and a failed dump leaves the session's JVM
+    untouched. The dump goes to a temp file, published by ``os.replace``
+    only on success: a JVM mapping a truncated archive dies of SIGBUS.
     Any failure leaves no archive, and the next launch records again."""
-    jvm = spark._jvm
-    system = jvm.java.lang.System
-    # a non-empty directory on the class path makes the dump kill the JVM
-    if any(map(_nonempty_dir, system.getProperty("java.class.path").split(os.pathsep))):
-        return
-    pid = jvm.java.lang.ProcessHandle.current().pid()
-    tmp = f"{archive.path}.{pid}.tmp"
+    class_path = spark._jvm.java.lang.System.getProperty("java.class.path")
+    tmp = f"{archive.path}.{os.getpid()}.tmp"
     try:
         with exclusive_flock(archive.path + ".lock"):
             if os.path.exists(archive.path):
                 return  # a concurrent launch created it first
-            # The JVM reports a finished dump on its System.out, which is
-            # this process's stdout: capture it there instead. jcmd exits 0
-            # even when the dump fails, so that report is the success signal.
-            stdout, report = system.out, jvm.java.io.ByteArrayOutputStream()
-            system.setOut(jvm.java.io.PrintStream(report, True))
-            try:
-                done = subprocess.run(
-                    [os.path.join(archive.java_home, "bin", "jcmd"), str(pid),
-                     "VM.cds", "dynamic_dump", tmp],
-                    capture_output=True, timeout=300,
-                )
-            finally:
-                system.setOut(stdout)
-            if done.returncode == 0 and "Dynamic dump to file" in report.toString():
+            done = subprocess.run(
+                [archive.java, "-Xshare:dump", f"-Xmx{archive.driver_memory}",
+                 f"-XX:SharedClassListFile={archive.class_list}",
+                 f"-XX:SharedArchiveFile={tmp}", "-cp", class_path],
+                stdin=subprocess.DEVNULL, stdout=subprocess.DEVNULL,
+                stderr=subprocess.DEVNULL, timeout=600,
+            )
+            if done.returncode == 0:
                 os.replace(tmp, archive.path)
     except (OSError, subprocess.SubprocessError):
         pass  # run unshared
     finally:
-        if os.path.exists(tmp):
-            os.remove(tmp)
+        _remove(tmp)

@@ -1,18 +1,22 @@
-"""The driver JVM's class archive (``session.get_spark``).
+"""The driver JVM's class archive and default heap (``session.get_spark``).
 
-The first launch on a host records its classes and dumps them to an AppCDS
-archive under ``$XDG_CACHE_HOME/steam-spark/``; later launches map it. Each
-child here is a fresh process, so it launches its own JVM, with
-``XDG_CACHE_HOME`` pointed at the test's own directory."""
+The first launch on a host lists the classes it loads, and a static dump in
+a JVM of its own builds an AppCDS archive from that list under
+``$XDG_CACHE_HOME/steam-spark/``; later launches of the same compressed-oops
+mode map it. Each child here is a fresh process, so it launches its own
+JVM, with ``XDG_CACHE_HOME`` pointed at the test's own directory."""
 
 from __future__ import annotations
 
-import glob
 import json
 import os
+import re
 import shutil
 import subprocess
 import sys
+
+import pytest
+from pyspark.sql import SparkSession
 
 from steam_data_engineer_project_spark import session
 from steam_data_engineer_project_spark.session import get_spark
@@ -32,9 +36,10 @@ conf = {"spark.driver.memory": "1g"}
 if java_opts:
     conf["spark.driver.extraJavaOptions"] = java_opts
 spark = get_spark("session-test", shuffle_partitions=2, extra_conf=conf)
-assert [r.id for r in spark.range(3).collect()] == [0, 1, 2]
 jvm = spark._jvm
 mf = jvm.java.lang.management.ManagementFactory
+ready_s = mf.getRuntimeMXBean().getUptime() / 1000
+assert [r.id for r in spark.range(3).collect()] == [0, 1, 2]
 diag = mf.getPlatformMXBean(
     jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
 )
@@ -43,6 +48,7 @@ with open(report, "w") as f:
         "SharedArchiveFile": diag.getVMOption("SharedArchiveFile").getValue(),
         "UseG1GC": diag.getVMOption("UseG1GC").getValue(),
         "args": list(mf.getRuntimeMXBean().getInputArguments()),
+        "ready_s": ready_s,
         "conf_dir_before": conf_dir,
         "conf_dir_after": os.environ.get("SPARK_CONF_DIR"),
         "probe": spark.conf.get("spark.steamspark.probe", None),
@@ -74,32 +80,62 @@ def _child(tmp_path, name: str, java_opts: str = "", **env) -> dict:
         return json.load(f)
 
 
+def _cache_files(tmp_path) -> list[str]:
+    return sorted(os.listdir(tmp_path / "cache" / "steam-spark"))
+
+
 def test_first_launch_creates_the_archive_and_later_launches_map_it(tmp_path):
-    """Child 1, under perfbench's options, records and dumps; child 2, on
-    the default G1 collector and with C2, maps the same archive. Neither
-    writes anything to stdout but the sentinel: a dump's ~577 cds warnings
-    and its report would land on a pipe that returns a result on its last
-    line."""
+    """Child 1, under perfbench's options, lists its classes and dumps;
+    child 2, on the default G1 collector and with C2, maps the same
+    archive, and at least 80% of the classes it loads until the session
+    is ready come from it (a dynamic dump of the running JVM covered 64%).
+    Neither writes anything to stdout but the sentinel: the dump's report
+    or an archive's warnings would land on a pipe that returns a result on
+    its last line."""
     first = _child(tmp_path, "first", PERFBENCH_OPTS)
-    assert "-XX:+RecordDynamicDumpInfo" in first["args"]
+    assert any(a.startswith("-XX:DumpLoadedClassList=") for a in first["args"])
+    assert not any("RecordDynamicDumpInfo" in a for a in first["args"])
     assert first["UseG1GC"] == "false"
-    archives = glob.glob(str(tmp_path / "cache" / "steam-spark" / "*.jsa"))
-    assert len(archives) == 1 and os.path.getsize(archives[0]) > 0
-    assert not glob.glob(str(tmp_path / "cache" / "**" / "*.tmp"), recursive=True)
+    # one archive, published whole: no class list or temp file is left
+    files = _cache_files(tmp_path)
+    archives = [f for f in files if f.endswith(".jsa")]
+    assert len(archives) == 1, files
+    assert files == sorted(archives + [archives[0] + ".lock", "empty-conf"])
+    archive = str(tmp_path / "cache" / "steam-spark" / archives[0])
+    assert os.path.getsize(archive) > 0
 
     class_log = tmp_path / "classes.log"
     second = _child(tmp_path, "second", f"-Xlog:class+load=info:file={class_log}")
     assert second["UseG1GC"] == "true"
-    assert second["SharedArchiveFile"] == archives[0]
-    assert not any("RecordDynamicDumpInfo" in a for a in second["args"])
-    # the JVM did map it: Spark classes come from the archive's top layer
+    assert second["SharedArchiveFile"] == archive
+    assert not any("DumpLoadedClassList" in a for a in second["args"])
+    sources = []
     with open(class_log) as f:
-        assert any(
-            " org.apache.spark." in line and "source: shared objects file (top)" in line
-            for line in f
-        )
+        for line in f:
+            m = re.match(r"\[([\d.]+)s\].* source: (.*)", line)
+            if m and float(m[1]) <= second["ready_s"]:
+                sources.append(m[2])
+    shared = sum(s.startswith("shared objects file") for s in sources)
+    assert shared >= 0.8 * len(sources), f"{shared} of {len(sources)} classes from the archive"
+    assert _cache_files(tmp_path) == files
     # the launch's SPARK_CONF_DIR stays out of this process's environment
     assert first["conf_dir_after"] is None and second["conf_dir_after"] is None
+
+
+def test_a_failed_dump_leaves_a_working_session_and_no_archive(tmp_path):
+    """A non-empty directory on the launched class path (here from
+    ``PYSPARK_SUBMIT_ARGS``, which the plan does not read) fails the static
+    dump. The session still answers its query, and the cache holds no
+    archive, temp file or class list, so the next launch records again."""
+    jar_dir = tmp_path / "classes"
+    jar_dir.mkdir()
+    (jar_dir / "a.txt").write_text("not empty")
+    report = _child(tmp_path, "failed",
+                    PYSPARK_SUBMIT_ARGS=f"--driver-class-path {jar_dir} pyspark-shell")
+    assert any(a.startswith("-XX:DumpLoadedClassList=") for a in report["args"])
+    assert report["SharedArchiveFile"] == ""
+    files = _cache_files(tmp_path)
+    assert [f for f in files if not f.endswith(".lock")] == ["empty-conf"], files
 
 
 def test_user_spark_conf_dir_launches_without_the_archive(tmp_path):
@@ -112,7 +148,7 @@ def test_user_spark_conf_dir_launches_without_the_archive(tmp_path):
     report = _child(tmp_path, "guard", SPARK_CONF_DIR=str(conf_dir))
     assert report["probe"] == "from-user-conf"
     assert report["SharedArchiveFile"] == ""
-    assert not any("SharedArchiveFile" in a or "RecordDynamicDumpInfo" in a
+    assert not any("SharedArchiveFile" in a or "DumpLoadedClassList" in a
                    for a in report["args"])
     assert report["conf_dir_before"] == report["conf_dir_after"] == str(conf_dir)
     assert not (tmp_path / "cache").exists()
@@ -139,34 +175,72 @@ def test_only_the_launching_call_plans_or_dumps(spark, tmp_path, monkeypatch):
     assert not os.listdir(tmp_path)
 
 
-def test_plan_keys_the_archive_by_jars_and_skips_a_live_conf_dir(tmp_path, monkeypatch):
-    """The archive name follows the jars (a touched jar gets a new one);
-    a non-empty directory bound for the class path, or a
-    ``$SPARK_HOME/conf`` with anything but templates, launches without an
-    archive and writes nothing."""
+def test_default_driver_heap_fits_the_host(monkeypatch):
+    """With ``SPARK_DRIVER_MEMORY`` unset, the builder's driver heap is no
+    larger than the host's memory, whatever the host."""
+
+    class Launched(Exception):
+        pass
+
+    def launch(builder):
+        raise Launched(dict(builder._options))
+
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    monkeypatch.setattr(session, "_plan_class_archive", lambda *_args: None)
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", launch)
+    with pytest.raises(Launched) as launched:
+        get_spark("heap-test")
+    heap = session._heap_bytes(launched.value.args[0]["spark.driver.memory"])
+    assert heap is not None
+    assert heap <= os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+@pytest.fixture
+def spark_home(tmp_path, monkeypatch):
+    """A ``SPARK_HOME`` with one jar and a template-only conf directory,
+    and an empty cache under ``tmp_path``."""
     home = tmp_path / "spark-home"
     (home / "conf").mkdir(parents=True)
     (home / "jars").mkdir()
     (home / "conf" / "spark-defaults.conf.template").write_text("")
-    jar = home / "jars" / "spark-core.jar"
-    jar.write_bytes(b"jar")
+    (home / "jars" / "spark-core.jar").write_bytes(b"jar")
     monkeypatch.setenv("SPARK_HOME", str(home))
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
     monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    return home
 
-    plan = session._plan_class_archive("")
+
+def test_plan_keys_the_archive_by_jars_and_skips_a_live_conf_dir(spark_home, tmp_path,
+                                                                 monkeypatch):
+    """The archive name follows the jars (a touched jar gets a new one);
+    a non-empty directory bound for the class path, or a
+    ``$SPARK_HOME/conf`` with anything but templates, launches without an
+    archive and writes nothing."""
+    plan = session._plan_class_archive("", "8g")
     assert plan is not None and plan.create
     assert os.path.dirname(plan.path) == str(tmp_path / "cache" / "steam-spark")
     assert os.listdir(plan.conf_dir) == []
-    os.utime(jar, ns=(0, 0))
-    assert session._plan_class_archive("").path != plan.path
+    os.utime(spark_home / "jars" / "spark-core.jar", ns=(0, 0))
+    assert session._plan_class_archive("", "8g").path != plan.path
     # a non-empty directory the launcher puts on the class path
-    assert session._plan_class_archive(str(home / "jars")) is None
-    monkeypatch.setenv("HADOOP_CONF_DIR", str(home / "conf"))
-    assert session._plan_class_archive("") is None
+    assert session._plan_class_archive(str(spark_home / "jars"), "8g") is None
+    monkeypatch.setenv("HADOOP_CONF_DIR", str(spark_home / "conf"))
+    assert session._plan_class_archive("", "8g") is None
     monkeypatch.delenv("HADOOP_CONF_DIR")
 
-    (home / "conf" / "spark-defaults.conf").write_text("spark.master local[1]\n")
+    (spark_home / "conf" / "spark-defaults.conf").write_text("spark.master local[1]\n")
     shutil.rmtree(tmp_path / "cache")
-    assert session._plan_class_archive("") is None
+    assert session._plan_class_archive("", "8g") is None
     assert not (tmp_path / "cache").exists()
+
+
+def test_plan_keys_the_archive_by_compressed_oops_mode(spark_home):
+    """A JVM with a heap of 32 GB or more runs without compressed oops and
+    declines an archive dumped with them, and the reverse: the two modes
+    get different archives, heaps of one mode share one."""
+    paths = {m: session._plan_class_archive("", m).path
+             for m in ("1g", "8g", "31g", "32g", "48g", "65536m")}
+    assert paths["8g"] != paths["48g"]
+    assert paths["1g"] == paths["8g"] == paths["31g"]
+    assert paths["32g"] == paths["48g"] == paths["65536m"]
+    assert session._plan_class_archive("", "8 GB") is None

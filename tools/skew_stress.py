@@ -53,6 +53,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from artifact_meta import provenance  # noqa: E402
+from steam_data_engineer_project_spark.session import driver_heap_mb  # noqa: E402
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else os.path.join(_REPO, ".sf1data")
@@ -68,15 +69,6 @@ HOT_FK_FRAC_PCT = 30  # % of big-side join rows remapped to one key
 N_JOIN_ROWS = 40_000_000  # synthetic big side for the join legs
 N_JOIN_KEYS = 200_000
 DRIVER_HEAP_MB_MAX = 24 << 10
-
-
-def driver_heap_mb() -> int:
-    """The driver JVM's heap: 24 GB, or five eighths of the host's memory
-    where that is less. The rest is left to the JVM's off-heap memory,
-    the Python workers and the OS: a 24 GB heap on a 16 GB host was
-    killed by the kernel during the uncapped n-gram leg."""
-    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
-    return min(DRIVER_HEAP_MB_MAX, host_mb * 5 // 8)
 
 
 def build_fixture(spark, dst: str) -> None:
@@ -195,7 +187,9 @@ def main() -> None:
     # toward 1: at local[32] on 4 cores the unsalted join read 2.0 and the
     # uncapped n-gram 2.4.
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 32))
-    heap_mb = driver_heap_mb()
+    # a 24 GB heap on a 16 GB host was killed by the kernel during the
+    # uncapped n-gram leg
+    heap_mb = driver_heap_mb(DRIVER_HEAP_MB_MAX)
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("skew-stress")
