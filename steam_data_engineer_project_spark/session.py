@@ -18,6 +18,16 @@ classes it loads, and a separate ``java -Xshare:dump`` builds the archive
 from that list. It holds class metadata derived from the JDK and the jars,
 keyed by both and by the heap's compressed-oops mode, never data or
 results; deleting the directory resets it.
+
+Spark's execution memory comes in pages (``spark.buffer.pageSize``), and a
+task's sort, aggregation map or broadcast relation takes a whole one even
+for a few rows. Spark sizes them from the heap (16 MB under a 3 GB heap, 64
+MB under 10 GB), and the old generation keeps what they held. The session
+sets the smallest page whose 8,192-entry page table still covers the
+unified memory region of the heap it resolves, 1 MB up to about 14 GB, so
+a task reserves memory in proportion to what it holds and one task can
+still take the whole pool. A ``spark.buffer.pageSize`` in ``extra_conf``
+wins.
 """
 
 from __future__ import annotations
@@ -26,6 +36,7 @@ import contextlib
 import hashlib
 import os
 import re
+import shlex
 import shutil
 import subprocess
 from typing import NamedTuple
@@ -40,6 +51,9 @@ from .fsutil import exclusive_flock
 #: of another format (the dynamic archives of older checkouts)
 _ARCHIVE_FORMAT = "static-classlist"
 _SIZE_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+#: pages a task can hold at once (TaskMemoryManager's page table); a task
+#: that fills it fails with "Have already allocated a maximum of 8192 pages"
+_PAGE_TABLE = 8192
 
 
 def get_spark(
@@ -113,6 +127,13 @@ def get_spark(
         # the big fact⋈fact joins keep the spill-graceful SMJ path.
         .config("spark.sql.join.preferSortMergeJoin", "false")
     )
+    page = _page_size_bytes(driver_memory, extra_conf.get("spark.executor.memory"))
+    if page is not None:
+        # Spark sizes its pages from the heap and the cores (16 MB under a
+        # 3 GB heap, 64 MB under 10 GB), and each task's sort, aggregation
+        # map or broadcast relation takes a whole page, however few rows
+        # it holds (_page_size_bytes)
+        builder = builder.config("spark.buffer.pageSize", f"{page >> 20}m")
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     # Decided before launch, and only by the call that launches the JVM:
@@ -151,6 +172,22 @@ def driver_heap_mb(max_mb: int = 48 << 10) -> int:
     return min(max_mb, host_mb * 5 // 8)
 
 
+def _page_size_bytes(driver_memory: str, executor_memory: str | None = None) -> int | None:
+    """The memory page (``spark.buffer.pageSize``) for a heap: the smallest
+    power of two of at least 1 MB whose ``_PAGE_TABLE`` pages cover Spark's
+    unified memory region, ``0.6 × (heap − 300 MB)``, so one task can still
+    take the whole execution pool. The heap is the larger of the two sizes
+    given; None, to keep Spark's default, when either does not parse."""
+    heaps = [_heap_bytes(m) for m in (driver_memory, executor_memory) if m is not None]
+    if None in heaps:
+        return None
+    unified = 0.6 * (max(heaps) - (300 << 20))
+    page = 1 << 20
+    while _PAGE_TABLE * page < unified:
+        page <<= 1
+    return page
+
+
 class _ClassArchive(NamedTuple):
     path: str
     java: str
@@ -186,8 +223,9 @@ def _plan_class_archive(extra_class_path: str, driver_memory: str) -> _ClassArch
     only done when the user has not set it and ``$SPARK_HOME/conf`` holds
     only ``*.template`` files, so Spark would read nothing there anyway.
     A non-empty directory among the entries the launcher takes from the
-    environment or ``extra_class_path`` would fail every dump, so it
-    skips the archive too, rather than record on every launch.
+    environment, ``PYSPARK_SUBMIT_ARGS`` or ``extra_class_path`` would fail
+    every dump, so it skips the archive too, rather than record on every
+    launch.
 
     A JVM maps only an archive dumped in its own compressed-oops mode,
     which its heap decides (``driver_memory``, a ``-Xmx`` size): each
@@ -195,7 +233,7 @@ def _plan_class_archive(extra_class_path: str, driver_memory: str) -> _ClassArch
     heap = _heap_bytes(driver_memory)
     if heap is None or "SPARK_CONF_DIR" in os.environ:
         return None
-    entries = [extra_class_path] + [
+    entries = [extra_class_path, *_submit_class_path()] + [
         os.environ.get(v, "")
         for v in ("SPARK_CLASSPATH", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
     ]
@@ -243,6 +281,22 @@ def _plan_class_archive(extra_class_path: str, driver_memory: str) -> _ClassArch
     if create and not os.access(cache, os.W_OK):
         return None
     return _ClassArchive(path, java, conf_dir, driver_memory, create)
+
+
+def _submit_class_path() -> list[str]:
+    """The driver class-path entries in ``PYSPARK_SUBMIT_ARGS``, given as
+    ``--driver-class-path`` or ``--conf spark.driver.extraClassPath=``
+    (each also as ``--opt=value``), the two forms spark-submit reads."""
+    args = shlex.split(os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
+    out = []
+    for opt, value in zip(args, args[1:] + [""]):
+        if "=" in opt and opt.startswith("--"):
+            opt, value = opt.split("=", 1)
+        if opt == "--driver-class-path":
+            out.append(value)
+        elif opt in ("--conf", "-c") and value.startswith("spark.driver.extraClassPath="):
+            out.append(value.split("=", 1)[1])
+    return out
 
 
 def _heap_bytes(size: str) -> int | None:

@@ -1,4 +1,5 @@
-"""The driver JVM's class archive and default heap (``session.get_spark``).
+"""The driver JVM's class archive, default heap and memory page size
+(``session.get_spark``).
 
 The first launch on a host lists the classes it loads, and a static dump in
 a JVM of its own builds an AppCDS archive from that list under
@@ -31,6 +32,21 @@ import json, os, sys
 from steam_data_engineer_project_spark.session import get_spark
 
 report, java_opts = sys.argv[1], sys.argv[2]
+if sys.argv[3:] == ["fail-dump"]:
+    # the static dump leaves a partial archive and exits 1
+    import subprocess
+    from steam_data_engineer_project_spark import session
+    run = subprocess.run
+
+    def failing_dump(args, **kwargs):
+        if "-Xshare:dump" not in args:
+            return run(args, **kwargs)
+        tmp = next(a.split("=", 1)[1] for a in args if a.startswith("-XX:SharedArchiveFile="))
+        with open(tmp, "wb") as f:
+            f.write(b"partial")
+        return subprocess.CompletedProcess(args, 1)
+
+    session.subprocess.run = failing_dump
 conf_dir = os.environ.get("SPARK_CONF_DIR")
 conf = {"spark.driver.memory": "1g"}
 if java_opts:
@@ -57,7 +73,7 @@ print(%r)
 """ % SENTINEL
 
 
-def _child(tmp_path, name: str, java_opts: str = "", **env) -> dict:
+def _child(tmp_path, name: str, java_opts: str = "", *flags: str, **env) -> dict:
     """Run CHILD in a fresh process; assert the sentinel is all it wrote
     to stdout and return its report."""
     child_env = {k: v for k, v in os.environ.items()
@@ -70,7 +86,7 @@ def _child(tmp_path, name: str, java_opts: str = "", **env) -> dict:
     )
     report = tmp_path / f"{name}.json"
     done = subprocess.run(
-        [sys.executable, "-c", CHILD, str(report), java_opts],
+        [sys.executable, "-c", CHILD, str(report), java_opts, *flags],
         cwd=str(tmp_path), env=child_env, stdout=subprocess.PIPE,
         stderr=subprocess.PIPE, text=True, timeout=300,
     )
@@ -123,19 +139,33 @@ def test_first_launch_creates_the_archive_and_later_launches_map_it(tmp_path):
 
 
 def test_a_failed_dump_leaves_a_working_session_and_no_archive(tmp_path):
-    """A non-empty directory on the launched class path (here from
-    ``PYSPARK_SUBMIT_ARGS``, which the plan does not read) fails the static
-    dump. The session still answers its query, and the cache holds no
-    archive, temp file or class list, so the next launch records again."""
-    jar_dir = tmp_path / "classes"
-    jar_dir.mkdir()
-    (jar_dir / "a.txt").write_text("not empty")
-    report = _child(tmp_path, "failed",
-                    PYSPARK_SUBMIT_ARGS=f"--driver-class-path {jar_dir} pyspark-shell")
+    """A dump that exits 1 after writing part of its temp file leaves the
+    session answering its query, and the cache with no archive, temp file
+    or class list, so the next launch records again."""
+    report = _child(tmp_path, "failed", "", "fail-dump")
     assert any(a.startswith("-XX:DumpLoadedClassList=") for a in report["args"])
     assert report["SharedArchiveFile"] == ""
     files = _cache_files(tmp_path)
     assert [f for f in files if not f.endswith(".lock")] == ["empty-conf"], files
+
+
+@pytest.mark.parametrize("submit_args", [
+    "--driver-class-path {dir} pyspark-shell",
+    "--conf spark.driver.extraClassPath={dir} pyspark-shell",
+])
+def test_submit_args_class_path_launches_without_the_archive(tmp_path, submit_args):
+    """A non-empty directory put on the driver's class path by
+    ``PYSPARK_SUBMIT_ARGS`` would fail every static dump: the launch
+    neither records nor maps an archive, and writes nothing to the cache."""
+    jar_dir = tmp_path / "classes"
+    jar_dir.mkdir()
+    (jar_dir / "a.txt").write_text("not empty")
+    report = _child(tmp_path, "submit-args",
+                    PYSPARK_SUBMIT_ARGS=submit_args.format(dir=jar_dir))
+    assert report["SharedArchiveFile"] == ""
+    assert not any("SharedArchiveFile" in a or "DumpLoadedClassList" in a
+                   for a in report["args"])
+    assert not (tmp_path / "cache").exists()
 
 
 def test_user_spark_conf_dir_launches_without_the_archive(tmp_path):
@@ -178,6 +208,14 @@ def test_only_the_launching_call_plans_or_dumps(spark, tmp_path, monkeypatch):
 def test_default_driver_heap_fits_the_host(monkeypatch):
     """With ``SPARK_DRIVER_MEMORY`` unset, the builder's driver heap is no
     larger than the host's memory, whatever the host."""
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    heap = session._heap_bytes(_builder_options(monkeypatch)["spark.driver.memory"])
+    assert heap is not None
+    assert heap <= os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def _builder_options(monkeypatch, extra_conf: dict[str, str] | None = None) -> dict:
+    """The options ``get_spark`` hands the builder, with no JVM started."""
 
     class Launched(Exception):
         pass
@@ -185,14 +223,11 @@ def test_default_driver_heap_fits_the_host(monkeypatch):
     def launch(builder):
         raise Launched(dict(builder._options))
 
-    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
     monkeypatch.setattr(session, "_plan_class_archive", lambda *_args: None)
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", launch)
     with pytest.raises(Launched) as launched:
-        get_spark("heap-test")
-    heap = session._heap_bytes(launched.value.args[0]["spark.driver.memory"])
-    assert heap is not None
-    assert heap <= os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        get_spark("options-test", extra_conf=extra_conf)
+    return launched.value.args[0]
 
 
 @pytest.fixture
@@ -244,3 +279,89 @@ def test_plan_keys_the_archive_by_compressed_oops_mode(spark_home):
     assert paths["1g"] == paths["8g"] == paths["31g"]
     assert paths["32g"] == paths["48g"] == paths["65536m"]
     assert session._plan_class_archive("", "8 GB") is None
+
+
+MB = 1 << 20
+
+
+def _unified(heap: int) -> float:
+    """Spark's unified memory region of a heap: 0.6 × (heap − 300 MB)."""
+    return 0.6 * (heap - 300 * MB)
+
+
+def test_page_size_is_the_smallest_page_whose_table_covers_the_heap():
+    """Pages of 1 MB up to about 14 GB of heap, doubling after: 8,192
+    pages (the page table a task holds) always cover the unified region,
+    and half the page would not, except at the 1 MB floor."""
+    sizes = {m: session._page_size_bytes(m) for m in ("1g", "3g", "10043m", "16g", "31g", "48g")}
+    assert sizes["3g"] == sizes["10043m"] == MB
+    assert sizes["16g"] == 2 * MB and sizes["48g"] == 4 * MB
+    for m, page in sizes.items():
+        heap = session._heap_bytes(m)
+        assert page & (page - 1) == 0 and page >= MB, m
+        assert 8192 * page >= _unified(heap), m
+        assert page == MB or 8192 * page // 2 < _unified(heap), m
+    # an executor heap larger than the driver's decides; a size that does
+    # not parse keeps Spark's default
+    assert session._page_size_bytes("3g", "16g") == 2 * MB
+    assert session._page_size_bytes("16g", "3g") == 2 * MB
+    assert session._page_size_bytes("8 GB") is None
+    assert session._page_size_bytes("3g", "16 GB") is None
+
+
+def test_builder_carries_the_page_size_and_extra_conf_overrides_it(monkeypatch):
+    """The builder gets the rule's page for the heap it resolves, from
+    ``SPARK_DRIVER_MEMORY`` or ``extra_conf``; a page in ``extra_conf``
+    wins, and a heap that does not parse sets none."""
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert _builder_options(monkeypatch)["spark.buffer.pageSize"] == "1m"
+    opts = _builder_options(monkeypatch, {"spark.driver.memory": "48g"})
+    assert opts["spark.buffer.pageSize"] == "4m"
+    opts = _builder_options(monkeypatch, {"spark.executor.memory": "16g"})
+    assert opts["spark.buffer.pageSize"] == "2m"
+    opts = _builder_options(monkeypatch, {"spark.buffer.pageSize": "16m"})
+    assert opts["spark.buffer.pageSize"] == "16m"
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3 GB")
+    assert "spark.buffer.pageSize" not in _builder_options(monkeypatch)
+
+
+def test_live_session_uses_the_planned_page_size(spark):
+    """The running test session's memory manager hands out the page the
+    rule planned for its ``spark.driver.memory``."""
+    planned = session._page_size_bytes(spark.conf.get("spark.driver.memory"))
+    live = spark._jvm.org.apache.spark.SparkEnv.get().memoryManager().pageSizeBytes()
+    assert planned == MB and live == planned
+
+
+def test_a_record_larger_than_a_page_sorts_aggregates_and_joins(spark):
+    """One row of about 3 MB, three times the test session's page, goes
+    through a sort, a hash aggregate keyed by it, a broadcast hash join
+    and a sort-merge join, each operator taking a page larger than the
+    configured one for it; every result equals a pure-Python one."""
+    from pyspark.sql import functions as F
+
+    page = spark._jvm.org.apache.spark.SparkEnv.get().memoryManager().pageSizeBytes()
+    big = ("steam-spark page " * (3 * MB // 17 + 1))[: 3 * MB]
+    assert len(big) > 2 * page
+    rows = [(1, big), (2, "b"), (3, "a"), (1, "a")]
+    df = spark.createDataFrame(rows, "k long, s string")
+    names = spark.createDataFrame([(1, "one"), (3, "three")], "k long, name string")
+
+    def run(frame, operator: str) -> list[tuple]:
+        out = [tuple(r) for r in frame.collect()]
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert operator in plan, plan
+        return out
+
+    assert run(df.orderBy("s", "k"), "Sort") == sorted(rows, key=lambda r: (r[1], r[0]))
+    agg = run(df.union(df).groupBy("s").agg(F.sum("k").alias("n")), "HashAggregate")
+    expected_agg = {}
+    for k, s in rows + rows:
+        expected_agg[s] = expected_agg.get(s, 0) + k
+    assert sorted(agg) == sorted(expected_agg.items())
+    expected_join = sorted((k, n, s) for k, n in [(1, "one"), (3, "three")]
+                           for k2, s in rows if k2 == k)
+    for hinted, operator in ((F.broadcast(df), "BroadcastHashJoin"),
+                             (df.hint("shuffle_merge"), "SortMergeJoin")):
+        joined = run(names.join(hinted, "k").select("k", "name", "s"), operator)
+        assert sorted(joined) == expected_join

@@ -31,9 +31,13 @@ balance (max task / median task per stage, from Spark's event log):
   in single tasks; the unsalted merge join) must measure WORSE balance —
   otherwise the bound above is vacuous.
 
-Stages with <8 tasks or median <50 ms are ignored (pure scheduling
-noise); the per-query figure is the worst qualifying stage. Writes
-SKEW_sf1.json (committed; pinned by tests/test_plans.py).
+A stage counts when it has at least 8 tasks and carries at least 10% of
+its query's summed task time; the per-query figure is the worst such
+stage. Both halves are relative to the run itself, so a faster host keeps
+the same stages: an absolute floor (a median task of 50 ms, before) left
+`skew_salted_agg` with no stage at all on a quiet 4-core host. Smaller
+stages are scheduling noise. Writes SKEW_sf1.json (committed; pinned by
+tests/test_plans.py).
 
 Usage: python tools/skew_stress.py [sf_dir] [out.json]
   (defaults: /root/repo/.sf1data  SKEW_sf1.json)
@@ -66,6 +70,8 @@ HOT_FRAC_PCT = 30  # % of docs carrying the hot sentence (doc_id % 100 < this)
 HOT_LSH_DOCS = 1_000  # docs whose text is ~all the shared boilerplate block
 UNCAPPED_HOT_DOCS = 8_000  # hot set for the no-cap counterfactual
 HOT_FK_FRAC_PCT = 30  # % of big-side join rows remapped to one key
+MIN_TASKS = 8  # a stage counts with at least this many tasks ...
+MIN_TIME_SHARE = 0.10  # ... carrying at least this share of its query's task time
 N_JOIN_ROWS = 40_000_000  # synthetic big side for the join legs
 N_JOIN_KEYS = 200_000
 DRIVER_HEAP_MB_MAX = 24 << 10
@@ -108,7 +114,8 @@ def build_fixture(spark, dst: str) -> None:
 
 
 def parse_event_log(log_dir: str) -> dict:
-    """job-group -> stage task-duration lists, from the JSON event log."""
+    """job-group -> every stage's task-duration summary, from the JSON
+    event log."""
     # Spark 4 rolls event logs into a DIRECTORY per app
     # (eventlog_v2_<app>/events_*); flat single-file logs also accepted
     files = [
@@ -145,23 +152,33 @@ def parse_event_log(log_dir: str) -> dict:
                     tasks.setdefault(ev["Stage ID"], []).append(dur)
     out: dict[str, list[dict]] = {}
     for sid, durs in tasks.items():
-        grp = group_of_stage.get(sid, "")
-        if len(durs) < 8:
-            continue
         med = statistics.median(durs)
-        if med < 50:
-            continue
-        out.setdefault(grp, []).append(
+        out.setdefault(group_of_stage.get(sid, ""), []).append(
             {
                 "stage_id": sid,
                 "stage": names.get(sid, "")[:80],
                 "n_tasks": len(durs),
                 "median_ms": round(med, 1),
                 "max_ms": max(durs),
-                "ratio": round(max(durs) / med, 2),
+                # a stage of sub-millisecond tasks reads against 1 ms
+                "ratio": round(max(durs) / max(med, 1), 2),
+                "task_ms": sum(durs),
             }
         )
     return out
+
+
+def qualifying(stages: list[dict]) -> list[dict]:
+    """The stages that count (module docstring), worst ratio first."""
+    total = sum(s["task_ms"] for s in stages)
+    return sorted(
+        (
+            s
+            for s in stages
+            if s["n_tasks"] >= MIN_TASKS and s["task_ms"] >= MIN_TIME_SHARE * total
+        ),
+        key=lambda s: -s["ratio"],
+    )
 
 
 def main() -> None:
@@ -326,13 +343,11 @@ def main() -> None:
             "uncapped_hot_docs": UNCAPPED_HOT_DOCS,
             "hot_fk_frac_pct": HOT_FK_FRAC_PCT,
         },
-        "stage_filter": {"min_tasks": 8, "min_median_ms": 50},
+        "stage_filter": {"min_tasks": MIN_TASKS, "min_time_share": MIN_TIME_SHARE},
         "queries": {},
     }
     for grp, wall in walls.items():
-        stages = sorted(
-            groups.get(grp, []), key=lambda s: -s["ratio"]
-        )
+        stages = qualifying(groups.get(grp, []))
         result["queries"][grp] = {
             "wall_s": round(wall, 2),
             "worst_ratio": stages[0]["ratio"] if stages else None,
