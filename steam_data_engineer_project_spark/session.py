@@ -129,10 +129,7 @@ def get_spark(
     )
     page = _page_size_bytes(driver_memory, extra_conf.get("spark.executor.memory"))
     if page is not None:
-        # Spark sizes its pages from the heap and the cores (16 MB under a
-        # 3 GB heap, 64 MB under 10 GB), and each task's sort, aggregation
-        # map or broadcast relation takes a whole page, however few rows
-        # it holds (_page_size_bytes)
+        # pages sized to the page table, not to the heap (module docstring)
         builder = builder.config("spark.buffer.pageSize", f"{page >> 20}m")
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
