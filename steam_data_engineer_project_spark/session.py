@@ -19,6 +19,18 @@ from that list. It holds class metadata derived from the JDK and the jars,
 keyed by both and by the heap's compressed-oops mode, never data or
 results; deleting the directory resets it.
 
+A new session also runs every ``SparkSessionExtensionsProvider`` it finds
+on the class path. Spark's jars hold one, MLlib's: it registers three
+internal functions (``vector_to_array``, ``array_to_vector`` and
+``aggregate_metrics``), and the ``TypeTag``s of their UDFs initialize
+Scala's runtime reflection, about 0.3 s of a 1 s start-up, for functions
+nothing here calls. The session skips such providers
+(``spark.sql.extensions.test.loadFromCp=false``; ``"true"`` in
+``extra_conf`` restores them, and ``spark.sql.extensions`` is unaffected).
+The launch that records the class archive still loads them before its
+dump, so a later query that needs Scala reflection maps it from the
+archive.
+
 Spark's execution memory comes in pages (``spark.buffer.pageSize``), and a
 task's sort, aggregation map or broadcast relation takes a whole one even
 for a few rows. Spark sizes them from the heap (16 MB under a 3 GB heap, 64
@@ -41,6 +53,7 @@ import shutil
 import subprocess
 from typing import NamedTuple
 
+from py4j.protocol import Py4JError
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
@@ -126,6 +139,8 @@ def get_spark(
         # conditions and falls back to sort-merge otherwise, so at 100 TB
         # the big fact⋈fact joins keep the spill-graceful SMJ path.
         .config("spark.sql.join.preferSortMergeJoin", "false")
+        # No session extensions from the class path (module docstring).
+        .config("spark.sql.extensions.test.loadFromCp", "false")
     )
     page = _page_size_bytes(driver_memory, extra_conf.get("spark.executor.memory"))
     if page is not None:
@@ -324,6 +339,24 @@ def _remove(path: str) -> None:
         os.remove(path)
 
 
+def _load_extension_providers(spark: SparkSession) -> None:
+    """Apply every ``SparkSessionExtensionsProvider`` on the class path to
+    a throwaway ``SparkSessionExtensions``: it loads the classes the
+    session skipped, so that the recording launch lists them and a later
+    launch maps them from the archive when a query first needs them. A
+    failure ends the loading; the dump archives what was loaded."""
+    jvm = spark._jvm
+    with contextlib.suppress(Py4JError):
+        loader = jvm.org.apache.spark.util.Utils.getContextOrSparkClassLoader()
+        provider = jvm.java.lang.Class.forName(
+            "org.apache.spark.sql.SparkSessionExtensionsProvider", False, loader
+        )
+        providers = jvm.java.util.ServiceLoader.load(provider, loader).iterator()
+        extensions = jvm.org.apache.spark.sql.SparkSessionExtensions()
+        while providers.hasNext():
+            providers.next().apply(extensions)
+
+
 def _dump_class_archive(spark: SparkSession, archive: _ClassArchive) -> None:
     """Dump the classes the launch listed to ``archive.path``.
 
@@ -341,6 +374,7 @@ def _dump_class_archive(spark: SparkSession, archive: _ClassArchive) -> None:
         with exclusive_flock(archive.path + ".lock"):
             if os.path.exists(archive.path):
                 return  # a concurrent launch created it first
+            _load_extension_providers(spark)
             done = subprocess.run(
                 [archive.java, "-Xshare:dump", f"-Xmx{archive.driver_memory}",
                  f"-XX:SharedClassListFile={archive.class_list}",

@@ -1,5 +1,5 @@
-"""The driver JVM's class archive, default heap and memory page size
-(``session.get_spark``).
+"""The driver JVM's class archive, skipped session extensions, default
+heap and memory page size (``session.get_spark``).
 
 The first launch on a host lists the classes it loads, and a static dump in
 a JVM of its own builds an AppCDS archive from that list under
@@ -15,8 +15,10 @@ import re
 import shutil
 import subprocess
 import sys
+import zipfile
 
 import pytest
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 from steam_data_engineer_project_spark import session
@@ -29,13 +31,13 @@ PERFBENCH_OPTS = "-XX:TieredStopAtLevel=1 -XX:+UseSerialGC -Xmn256m -XX:-UsePerf
 
 CHILD = r"""
 import json, os, sys
+from steam_data_engineer_project_spark import session
 from steam_data_engineer_project_spark.session import get_spark
 
 report, java_opts = sys.argv[1], sys.argv[2]
 if sys.argv[3:] == ["fail-dump"]:
     # the static dump leaves a partial archive and exits 1
     import subprocess
-    from steam_data_engineer_project_spark import session
     run = subprocess.run
 
     def failing_dump(args, **kwargs):
@@ -56,6 +58,9 @@ jvm = spark._jvm
 mf = jvm.java.lang.management.ManagementFactory
 ready_s = mf.getRuntimeMXBean().getUptime() / 1000
 assert [r.id for r in spark.range(3).collect()] == [0, 1, 2]
+if sys.argv[3:] == ["load-extensions"]:
+    # the class-path session extensions, loaded after the session is ready
+    session._load_extension_providers(spark)
 diag = mf.getPlatformMXBean(
     jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
 )
@@ -96,6 +101,12 @@ def _child(tmp_path, name: str, java_opts: str = "", *flags: str, **env) -> dict
         return json.load(f)
 
 
+#: the package of the one classpath session extension, MLlib's, and the
+#: Scala runtime-reflection universe its UDFs build
+_ML_EXTENSION_PACKAGE = "org.apache.spark.sql.ml."
+_REFLECTION_UNIVERSE = "scala.reflect.runtime.JavaUniverse"
+
+
 def _cache_files(tmp_path) -> list[str]:
     return sorted(os.listdir(tmp_path / "cache" / "steam-spark"))
 
@@ -105,6 +116,9 @@ def test_first_launch_creates_the_archive_and_later_launches_map_it(tmp_path):
     child 2, on the default G1 collector and with C2, maps the same
     archive, and at least 80% of the classes it loads until the session
     is ready come from it (a dynamic dump of the running JVM covered 64%).
+    Child 2 loads no class of MLlib's session extension and no Scala
+    reflection universe until then; loading the extension afterwards maps
+    the universe from the archive, which child 1's dump primed with it.
     Neither writes anything to stdout but the sentinel: the dump's report
     or an archive's warnings would land on a pipe that returns a result on
     its last line."""
@@ -121,18 +135,27 @@ def test_first_launch_creates_the_archive_and_later_launches_map_it(tmp_path):
     assert os.path.getsize(archive) > 0
 
     class_log = tmp_path / "classes.log"
-    second = _child(tmp_path, "second", f"-Xlog:class+load=info:file={class_log}")
+    second = _child(tmp_path, "second", f"-Xlog:class+load=info:file={class_log}",
+                    "load-extensions")
     assert second["UseG1GC"] == "true"
     assert second["SharedArchiveFile"] == archive
     assert not any("DumpLoadedClassList" in a for a in second["args"])
-    sources = []
+    before, after = [], {}
     with open(class_log) as f:
         for line in f:
-            m = re.match(r"\[([\d.]+)s\].* source: (.*)", line)
+            m = re.match(r"\[([\d.]+)s\]\S* (\S+) source: (.*)", line)
             if m and float(m[1]) <= second["ready_s"]:
-                sources.append(m[2])
-    shared = sum(s.startswith("shared objects file") for s in sources)
-    assert shared >= 0.8 * len(sources), f"{shared} of {len(sources)} classes from the archive"
+                before.append((m[2], m[3]))
+            elif m:
+                after[m[2]] = m[3]
+    shared = sum(src.startswith("shared objects file") for _, src in before)
+    assert shared >= 0.8 * len(before), f"{shared} of {len(before)} classes from the archive"
+    # the session skipped MLlib's extension and the Scala reflection it
+    # builds; the recording launch loaded them, so the archive holds them
+    skipped = [c for c, _ in before
+               if c.startswith(_ML_EXTENSION_PACKAGE) or c == _REFLECTION_UNIVERSE]
+    assert not skipped, skipped
+    assert after[_REFLECTION_UNIVERSE] == "shared objects file"
     assert _cache_files(tmp_path) == files
     # the launch's SPARK_CONF_DIR stays out of this process's environment
     assert first["conf_dir_after"] is None and second["conf_dir_after"] is None
@@ -323,6 +346,46 @@ def test_builder_carries_the_page_size_and_extra_conf_overrides_it(monkeypatch):
     assert opts["spark.buffer.pageSize"] == "16m"
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3 GB")
     assert "spark.buffer.pageSize" not in _builder_options(monkeypatch)
+
+
+LOAD_FROM_CP = "spark.sql.extensions.test.loadFromCp"
+PROVIDERS = "META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider"
+
+
+def test_builder_skips_class_path_extensions_and_extra_conf_overrides_it(monkeypatch):
+    """The builder turns off the session extensions Spark finds on the
+    class path; ``true`` in ``extra_conf`` turns them back on."""
+    assert _builder_options(monkeypatch)[LOAD_FROM_CP] == "false"
+    assert _builder_options(monkeypatch, {LOAD_FROM_CP: "true"})[LOAD_FROM_CP] == "true"
+
+
+def test_the_only_class_path_extension_is_mllibs():
+    """Spark's jars declare one session-extension provider, MLlib's
+    internal function registration, which the session skips. A jar that
+    brings another fails here instead of being skipped unseen."""
+    jars = os.path.join(_find_spark_home(), "jars")
+    providers = set()
+    for name in sorted(os.listdir(jars)):
+        if not name.endswith(".jar"):
+            continue
+        with zipfile.ZipFile(os.path.join(jars, name)) as jar:
+            if PROVIDERS in jar.namelist():
+                for line in jar.read(PROVIDERS).decode().splitlines():
+                    providers.add(line.split("#")[0].strip())
+    providers.discard("")
+    assert providers == {"org.apache.spark.sql.ml.InternalFunctionRegistration"}
+
+
+def test_the_session_does_not_resolve_mllibs_functions(spark):
+    """What the skip gives up: the three functions MLlib's extension
+    registers do not resolve in a session from ``get_spark``."""
+    from pyspark.errors import AnalysisException
+    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.sql import functions as F
+
+    with pytest.raises(AnalysisException) as raised:
+        spark.range(1).select(vector_to_array(array_to_vector(F.array(F.lit(1.0)))))
+    assert raised.value.getCondition() == "UNRESOLVED_ROUTINE"
 
 
 def test_live_session_uses_the_planned_page_size(spark):
